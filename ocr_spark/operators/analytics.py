@@ -215,7 +215,8 @@ def two_tier_rank(
 
     ``value_col`` must be integral (rank order on it is exact);
     ``tiebreaks`` are ascending and must make the order total, or
-    row_number within a bucket is nondeterministic.
+    row_number within a bucket is nondeterministic. NULL values rank
+    as ``Window.orderBy`` ranks them: first ascending, last descending.
 
     The input is STAGED at entry (lazy localCheckpoint; a table write
     at warehouse scale): the helper consumes it three times (min/max
@@ -236,8 +237,11 @@ def two_tier_rank(
     raw_bucket = F.expr("int((_lo IS NOT NULL))") * (
         (v.cast("long") - F.col("_lo")) / width
     ).cast("long")
-    # DESC rank: flip the bucket so bucket order matches rank order
-    bucket = (-raw_bucket if desc else raw_bucket).alias("_bucket")
+    # DESC rank: flip the bucket so bucket order matches rank order;
+    # NULLs get their own bucket before (ASC) / after (DESC) the values.
+    bucket = F.coalesce(
+        -raw_bucket if desc else raw_bucket, F.lit(1 if desc else -1)
+    ).alias("_bucket")
     bk = b.select(*df.columns, bucket)
     counts = bk.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
     w_b = Window.orderBy("_bucket").rowsBetween(Window.unboundedPreceding, -1)

@@ -1,22 +1,61 @@
-"""Query registry part: flagship: main-content extraction (the engine's reason to exist); relational coverage (SURVEY.md §2.12): scan/filter/agg/join/window/setops; text analysis (training-data ops over `documents`); reference pointwise/histogram ops as SQL-checkable analogues; vector ops over `embeddings` (cumsum/diff/argmax = vector.c analogues); pixel-path queries (rows-only checks: numpy kernels are not SQL-; deduplication family (operators/dedup.py): exact dedup is above; these; text analysis (functions/text_analysis.py): language-ID + fingerprints; si
+"""Query registry, first module: the registry core and the engine's
+reference queries.
 
-Part 01 of 09 of the split query registry (VERDICT r4 next
-#7: the 72.8k-line ocr_spark/queries.py split behind the same
-QUERIES/ORACLE registry, registration order preserved — parts import
-sequentially from the ocr_spark.queries facade, which also
-back-patches call-time name resolution so intra-registry helper
-references behave exactly as in the original single module).
+Each QUERIES[name] is a callable (spark, sf_dir) -> DataFrame; each
+ORACLE[name] is ANSI SQL DuckDB runs over the same parquet tables.
+Column names/aliases are identical on both sides (the correctness
+gate hashes values after sorting columns by name). Float aggregates
+are rounded on BOTH sides to absorb association-order drift between
+engines.
+
+Design rules (scale-first):
+- built-in Column expressions wherever semantics allow (JVM codegen);
+- Python only via Arrow-batched pandas UDFs (html parsing, pixels);
+- small dimensions are broadcast explicitly; wide joins get keys that
+  Catalyst/AQE can reorder and skew-split.
+
+The rest of the registry is in ``ocr_spark.qparts.part02``; the public
+entry point is ``ocr_spark.queries``.
 """
 
 from __future__ import annotations
 
-import ocr_spark.queries_base as _base
+from collections.abc import Callable
 
-globals().update(
-    {k: v for k, v in vars(_base).items() if not k.startswith("__")}
-)
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ocr_spark.operators.extract import documents_as_pages, with_main_text
+from ocr_spark.sources.tables import load_table as _load_table_impl
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLE: dict[str, str] = {}
 
 
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table loader that resolves through the ``ocr_spark.queries``
+    facade at CALL time, so tests that ``mock.patch.object`` the
+    facade's ``load_table`` reach every query in every registry
+    module."""
+    import ocr_spark.queries as _facade
+
+    patched = getattr(_facade, "load_table", load_table)
+    if patched is not load_table:
+        return patched(spark, sf_dir, name)
+    return _load_table_impl(spark, sf_dir, name)
+
+
+def query(name: str, oracle: str | None = None):
+    def deco(fn):
+        QUERIES[name] = fn
+        if oracle is not None:
+            ORACLE[name] = oracle
+        return fn
+    return deco
+
+
+def _utc(spark: SparkSession) -> None:
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 # ---------------------------------------------------------------------------
@@ -300,6 +339,8 @@ def topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _STOPWORDS = ("the", "a", "value", "table", "row")
+
+
 _SW_SQL = "('the', 'a', 'value', 'table', 'row')"
 
 
@@ -744,6 +785,7 @@ _DUCK_SHINGLES = f"""
     )
 """
 
+
 _DUCK_JACCARD = (
     "(FLOOR(CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE)"
     " / (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs)))"
@@ -858,6 +900,8 @@ _DUCK_DOT = (
     " list_transform(generate_series(1, len({a})),"
     " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), (q, r) -> q + r)"
 )
+
+
 _DUCK_NORM = (
     "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
     " list_transform({a}, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))),"
@@ -2007,76 +2051,6 @@ def host_frequency_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "decontaminate_ngrams",
-    f"""
-    WITH {_DUCK_SHINGLES},
-    bench AS (SELECT DISTINCT unnest(hs) AS h FROM sh WHERE doc_id < 5),
-    corp AS (SELECT doc_id, unnest(hs) AS h FROM sh WHERE doc_id >= 5)
-    SELECT corp.doc_id, COUNT(*) AS n_overlap
-    FROM corp JOIN bench ON corp.h = bench.h
-    GROUP BY corp.doc_id
-    """,
-)
-def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: flag corpus docs sharing any word
-    3-gram with a held-out benchmark set (here: docs 0-4 stand in for
-    the eval set).
-
-    The benchmark shingle-hash set is tiny by construction (eval sets
-    are thousands of docs, the corpus is 10^12), so it BROADCASTS and
-    the overlap count is a map-side hash join + partial-aggregated
-    groupBy on doc_id — one shuffle, no giant-side distinct.
-    """
-    from ocr_spark.operators.dedup import shingle_rows
-
-    inv = shingle_rows(load_table(spark, sf_dir, "documents"))
-    bench = inv.where(F.col("id") < 5).select("h").distinct()
-    corp = inv.where(F.col("id") >= 5)
-    return (
-        corp.join(F.broadcast(bench), "h")
-        .groupBy(F.col("id").alias("doc_id"))
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-
-
-_STRATA_RATES = {"en": 50, "de": 100, "es": 25, "fr": 10}
-
-
-@query(
-    "stratified_sample",
-    f"""
-    SELECT doc_id, lang FROM (
-      SELECT doc_id, lang,
-             {_duck_md5hash("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
-      FROM documents)
-    WHERE bucket < CASE lang
-        WHEN 'en' THEN 50 WHEN 'de' THEN 100
-        WHEN 'es' THEN 25 WHEN 'fr' THEN 10 ELSE 0 END
-    """,
-)
-def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling: per-language keep-rates via a
-    content-hash bucket (en 50%, de 100%, es 25%, fr 10%) — the
-    rebalancing step of corpus mixing.
-
-    Hash-bucket sampling (not rand()) is reproducible across runs,
-    engines, and retries — the property exactly-once pipelines need —
-    and is a pure map-side filter: no shuffle, no state, prunes at
-    full scan speed at any corpus size.
-    """
-    from ocr_spark.operators.dedup import fast_hash
-
-    d = load_table(spark, sf_dir, "documents")
-    bucket = fast_hash(F.col("doc_id").cast("string")) % 100
-    expr = None
-    for lang, r in _STRATA_RATES.items():
-        c = F.when(F.col("lang") == lang, F.lit(r))
-        expr = c if expr is None else expr.when(F.col("lang") == lang, F.lit(r))
-    expr = expr.otherwise(F.lit(0))
-    return d.where(bucket < expr).select("doc_id", "lang")
-
-
-@query(
     "warc_roundtrip_extract",
     """
     SELECT doc_id,
@@ -2166,111 +2140,6 @@ def px_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((k + 10, img_to_bytes(shifted), 64, 96))
     df = spark.createDataFrame(rows, "key int, img binary, h int, w int")
     return phash_pairs(df)
-
-
-@query(
-    "url_canonical_dedup",
-    """
-    WITH pages AS (
-      SELECT doc_id,
-             'https://Host' || CAST((doc_id // 3) % 97 AS VARCHAR)
-               || '.example/d' || CAST(doc_id // 3 AS VARCHAR)
-               || CASE WHEN doc_id % 3 = 1 THEN '?utm_source=feed'
-                       WHEN doc_id % 3 = 2 THEN '#section-2'
-                       ELSE '' END AS url
-      FROM documents),
-    canon AS (
-      SELECT doc_id,
-             lower(regexp_replace(url, '[?#].*$', '')) AS curl
-      FROM pages)
-    SELECT curl, MIN(doc_id) AS keeper, COUNT(*) AS n_variants
-    FROM canon GROUP BY curl
-    """,
-)
-def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization + dedup: strip query/fragment, lowercase,
-    keep the smallest doc_id per canonical url — the first dedup tier
-    of every web-crawl pipeline (the same page arrives as ?utm
-    variants and #fragment links).
-
-    Pure map-side canonicalization (regexp + lower in codegen), one
-    hash-aggregate by the canonical key. min() as the keeper rule is
-    deterministic and mergeable, so the same op distributes at
-    10^12 urls with plain partial aggregation.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://Host"),
-        (F.floor(F.col("doc_id") / 3).cast("long") % 97).cast("string"),
-        F.lit(".example/d"),
-        F.floor(F.col("doc_id") / 3).cast("long").cast("string"),
-        F.when(F.col("doc_id") % 3 == 1, F.lit("?utm_source=feed"))
-        .when(F.col("doc_id") % 3 == 2, F.lit("#section-2"))
-        .otherwise(F.lit("")),
-    )
-    curl = F.lower(F.regexp_replace(url, r"[?#].*$", ""))
-    return (
-        d.select("doc_id", curl.alias("curl"))
-        .groupBy("curl")
-        .agg(
-            F.min("doc_id").alias("keeper"),
-            F.count(F.lit(1)).alias("n_variants"),
-        )
-    )
-
-
-@query(
-    "paragraph_dedup_spans",
-    f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    chunks AS (
-      SELECT doc_id,
-             array_to_string(t[(j*8+1):(j*8+8)], ' ') AS chunk
-      FROM toks CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS j) jj
-      WHERE j*8 < len(t)),
-    hashed AS (
-      SELECT doc_id, {_duck_md5hash("chunk")} AS h FROM chunks)
-    SELECT h, COUNT(DISTINCT doc_id) AS n_docs
-    FROM hashed GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
-    """,
-)
-def paragraph_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span-level exact dedup (the C4 recipe at paragraph granularity):
-    8-token spans hashed across the corpus; spans appearing in 2+ docs
-    are the removal list boilerplate-dedup applies.
-
-    Exploded-row shape (no HOF slice-recompute: see the dedup module's
-    projection-collapse note): posexplode tokens -> chunk id = i//8 ->
-    order-preserving span rebuild via sort_array(collect_list(
-    struct(i, tok))) per (doc, chunk) -> codegen md5 -> count distinct
-    docs per span hash. Two shuffles, both on uniform hash keys.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    from ocr_spark.operators.dedup import fast_hash, tokens
-
-    ex = d.select(
-        "doc_id", F.posexplode(tokens(F.col("text"))).alias("i", "tok")
-    )
-    spans = (
-        ex.groupBy("doc_id", F.floor(F.col("i") / 8).alias("j"))
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("i"), F.col("tok")))
-                    ),
-                    lambda s: s.tok,
-                ),
-                " ",
-            ).alias("chunk")
-        )
-    )
-    return (
-        spans.select("doc_id", fast_hash(F.col("chunk")).alias("h"))
-        .groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .where(F.col("n_docs") >= 2)
-    )
 
 
 _DUCK_EXSUB_SPANS = f"""
@@ -2652,61 +2521,6 @@ def domain_quality_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select("host", "n_docs", "n_pass", wilson.alias("wilson_low"))
 
 
-@query(
-    "pii_scrub",
-    """
-    WITH seeded AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0
-                  THEN text || ' contact bob' || CAST(doc_id AS VARCHAR)
-                       || '@example.com or 555-' ||
-                       CAST(1000 + doc_id % 9000 AS VARCHAR)
-                  ELSE text END AS text
-      FROM documents)
-    SELECT doc_id,
-           CAST(len(regexp_extract_all(text, '[a-z0-9]+@[a-z]+\\.[a-z]+'))
-                AS BIGINT) AS n_emails,
-           CAST(len(regexp_extract_all(text, '[0-9]{3}-[0-9]{4}'))
-                AS BIGINT) AS n_phones,
-           regexp_replace(
-             regexp_replace(text, '[a-z0-9]+@[a-z]+\\.[a-z]+', '[EMAIL]', 'g'),
-             '[0-9]{3}-[0-9]{4}', '[PHONE]', 'g') AS scrubbed
-    FROM seeded
-    """,
-)
-def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing: count + redact emails and phone-shaped tokens
-    (patterns kept to the regex subset with identical Java/RE2
-    semantics — char classes, quantifiers, no lookaround).
-
-    Pure map-side codegen (regexp_count / regexp_replace); at corpus
-    scale this is a free rider on any existing scan. The seeded PII is
-    injected deterministically so the testdata exercises the rules.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    email = r"[a-z0-9]+@[a-z]+\.[a-z]+"
-    phone = r"[0-9]{3}-[0-9]{4}"
-    text = F.when(
-        F.col("doc_id") % 7 == 0,
-        F.concat(
-            F.col("text"),
-            F.lit(" contact bob"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com or 555-"),
-            (F.lit(1000) + F.col("doc_id") % 9000).cast("string"),
-        ),
-    ).otherwise(F.col("text"))
-    seeded = d.select("doc_id", text.alias("text"))
-    return seeded.select(
-        "doc_id",
-        F.regexp_count(F.col("text"), F.lit(email)).cast("bigint").alias("n_emails"),
-        F.regexp_count(F.col("text"), F.lit(phone)).cast("bigint").alias("n_phones"),
-        F.regexp_replace(
-            F.regexp_replace("text", email, "[EMAIL]"), phone, "[PHONE]"
-        ).alias("scrubbed"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # pixel-query oracles: the px_* outputs are deterministic (fixed-seed
 # fixtures + bit-exact kernels, pinned by tests/test_goldens.py), so
@@ -2716,6 +2530,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from ocr_spark.px_goldens import PX_GOLDENS, px_oracle_sql  # noqa: E402
+
 
 for _px_name in PX_GOLDENS:
     ORACLE[_px_name] = px_oracle_sql(_px_name)
@@ -2769,6 +2584,8 @@ _KM_QV = (
     "list_transform(embedding, x -> "
     "CAST(FLOOR(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT))"
 )
+
+
 _KM_DIST = (
     "list_reduce(list_prepend(CAST(0 AS BIGINT), "
     "list_transform(generate_series(1, 64), "
@@ -2974,6 +2791,8 @@ def quality_classifier_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MQ = [(0, "dup hash"), (1, "scan window table"), (2, "merge sort"),
        (3, "the fast row")]
+
+
 _MQ_VALUES = ", ".join(f"({i}, '{q}')" for i, q in _MQ)
 
 
@@ -3219,79 +3038,6 @@ def kmeans_maximin_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "full_outer_nation_sides",
-    """
-    WITH c AS (SELECT c_nationkey AS nk, CAST(COUNT(*) AS BIGINT) AS n_cust
-               FROM customer GROUP BY 1),
-    s AS (SELECT s_nationkey AS nk, CAST(COUNT(*) AS BIGINT) AS n_supp
-          FROM supplier GROUP BY 1)
-    SELECT COALESCE(c.nk, s.nk) AS nk,
-           COALESCE(c.n_cust, 0) AS n_cust,
-           COALESCE(s.n_supp, 0) AS n_supp
-    FROM c FULL OUTER JOIN s ON c.nk = s.nk
-    """,
-)
-def full_outer_nation_sides(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join: customer vs supplier counts per nation,
-    surviving nations present on only one side (COALESCE 0)."""
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("nk"))
-        .agg(F.count("*").alias("n_cust"))
-    )
-    s = (
-        load_table(spark, sf_dir, "supplier")
-        .groupBy(F.col("s_nationkey").alias("nk"))
-        .agg(F.count("*").alias("n_supp"))
-    )
-    return (
-        c.join(s, "nk", "full_outer")
-        .select(
-            "nk",
-            F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-            F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-        )
-    )
-
-
-@query(
-    "window_range_frame_order_value",
-    """
-    SELECT o_custkey, o_orderkey,
-           strftime(o_orderdate, '%Y-%m-%d') AS od,
-           CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate
-             RANGE BETWEEN INTERVAL 30 DAY PRECEDING AND CURRENT ROW
-           ) AS BIGINT) AS cents_30d
-    FROM orders
-    WHERE o_custkey % 100 = 0
-    """,
-)
-def window_range_frame_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE-frame window (value-based, not row-based): per customer,
-    the trailing-30-day order value in integer cents — RANGE frames
-    include ALL peers within the value bound regardless of row count,
-    the semantics rows-frames cannot express. Cents as BIGINT keeps the
-    windowed sum order-free (exact)."""
-    _utc(spark)
-    o = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") % 100 == 0)
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.col("o_orderdate").cast("timestamp").cast("long"))
-        .rangeBetween(-30 * 86400, 0)
-    )
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("od"),
-        F.sum(cents).over(w).alias("cents_30d"),
-    )
-
-
-@query(
     "doc_chunk_windows",
     """
     WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
@@ -3345,55 +3091,6 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("chunk"),
         (end - start).cast("bigint").alias("n_tokens"),
     )
-
-
-@query(
-    "corpus_report_card",
-    """
-    WITH base AS (
-      SELECT lang, doc_id, text,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-      FROM documents)
-    SELECT lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-           CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS n_distinct_texts,
-           CAST(MIN(n_tok) AS BIGINT) AS min_tok,
-           CAST(MAX(n_tok) AS BIGINT) AS max_tok,
-           FLOOR(CAST(SUM(n_tok) AS DOUBLE) / COUNT(*) * 100 + 0.5) / 100
-             AS mean_tok,
-           FLOOR((1.0 - CAST(COUNT(DISTINCT md5(text)) AS DOUBLE) / COUNT(*))
-                 * 10000 + 0.5) / 10000 AS dup_frac
-    FROM base GROUP BY lang
-    """,
-)
-def corpus_report_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language corpus report card — the summary row a curation run
-    publishes next to its manifests: doc/token counts, distinct-text
-    cardinality (exact here; the HLL sketch query is the at-scale
-    variant), token-length extrema/mean, exact-dup fraction.
-
-    One partial+final aggregate, every stat map-side combinable
-    (COUNT DISTINCT of the content hash rewrites to a two-level
-    expand+agg); floor-form rounding on both engines.
-    """
-    from ocr_spark.operators.dedup import round_det
-
-    d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split("text", " ")).cast("long")
-    base = d.select("lang", "doc_id", F.md5(F.col("text").cast("binary")).alias("h"), n_tok.alias("n_tok"))
-    return base.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tok").alias("n_tokens"),
-        F.count_distinct("h").alias("n_distinct_texts"),
-        F.min("n_tok").alias("min_tok"),
-        F.max("n_tok").alias("max_tok"),
-        round_det(F.sum("n_tok").cast("double") / F.count("*") * 100, 0)
-        .cast("double").alias("mean_tok_x100"),
-        round_det(
-            F.lit(1.0) - F.count_distinct("h").cast("double") / F.count("*"), 4
-        ).alias("dup_frac"),
-    ).withColumn("mean_tok", F.col("mean_tok_x100") / 100).drop("mean_tok_x100")
 
 
 def _pagerank_oracle(iters: int = 3) -> str:
@@ -4357,56 +4054,6 @@ def span_corruption_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return span_corruption_masks(load_table(spark, sf_dir, "documents"))
 
 
-@query(
-    "bpe_compression",
-    _bpe_oracle_ctes(4)
-    + """
-    SELECT CAST(SUM(cnt) AS BIGINT) AS n_word_occurrences,
-           CAST(SUM(cnt * length(w)) AS BIGINT) AS n_chars,
-           CAST(SUM(cnt * len(string_split(
-             substr(enc, 2, length(enc) - 2), chr(30) || chr(31))))
-             AS BIGINT) AS n_bpe_tokens,
-           CAST(1000 * (SUM(cnt * length(w))
-                        - SUM(cnt * len(string_split(
-                            substr(enc, 2, length(enc) - 2),
-                            chr(30) || chr(31)))))
-                // SUM(cnt * length(w)) AS BIGINT) AS saved_permille
-    FROM enc4
-    """,
-)
-def bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level compression of the learned 4-merge BPE tokenizer:
-    total word occurrences, character count (= token count before any
-    merge), token count under the learned segmentation, and the
-    per-mille savings — the metric a tokenizer-sizing sweep plots
-    against merge count.
-
-    One aggregate over the final vocabulary (vocab-sized, partial
-    sums map-side); the merge chain itself is the bpe_learn_merges
-    dataflow.
-    """
-    from ocr_spark.operators.dedup import tokens  # noqa: F401
-    from ocr_spark.operators.tokenizer import _symbols, learn_bpe_merges
-    from ocr_spark.operators.training import floor_div
-
-    _, vocab = learn_bpe_merges(load_table(spark, sf_dir, "documents"))
-    agg = vocab.groupBy().agg(
-        F.sum("cnt").alias("n_word_occurrences"),
-        F.sum(F.col("cnt") * F.length("w")).alias("n_chars"),
-        F.sum(F.col("cnt") * F.size(_symbols(F.col("enc"))))
-        .alias("n_bpe_tokens"),
-    )
-    return agg.select(
-        "n_word_occurrences",
-        "n_chars",
-        "n_bpe_tokens",
-        floor_div(
-            F.lit(1000) * (F.col("n_chars") - F.col("n_bpe_tokens")),
-            F.col("n_chars"),
-        ).alias("saved_permille"),
-    )
-
-
 def _duck_repair_chain(expr: str) -> str:
     """DuckDB mirror of functions/text_analysis.repair_mojibake: the
     same MOJIBAKE_TABLE applied as a replace() chain in table order."""
@@ -5358,26 +5005,6 @@ _PQ_BASE = f"""
                                          ORDER BY dist, code) AS rn
             FROM d) WHERE rn = 1)
 """
-
-
-@query(
-    "pq_encode_codes",
-    f"""
-    WITH {_PQ_BASE}
-    SELECT vec_id, CAST(s AS BIGINT) AS sub_idx,
-           CAST(code AS BIGINT) AS code, CAST(dist AS BIGINT) AS dist
-    FROM a
-    """,
-)
-def pq_encode_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization encoding (Jégou et al. 2011): 64-dim
-    grid-quantized embeddings -> 8 subspaces x 16-entry codebooks ->
-    (vec_id, sub_idx, code, dist), integer-exact. One broadcast
-    codebook join + min(struct) hash aggregate — no window sort
-    (operators/ann.pq_encode)."""
-    from ocr_spark.operators.ann import pq_encode
-
-    return pq_encode(load_table(spark, sf_dir, "embeddings"))
 
 
 @query(

@@ -1,26 +1,23 @@
-"""Query registry part: PNG decode (kernels/png.py — stdlib zlib + numpy, no external codec); JPEG decode (kernels/jpeg.py — baseline T.81 in pure numpy); WAV decode (stdlib wave + numpy — public PCM format, no codec); GIF + BMP decode (kernels/gif.py, kernels/bmp.py — pure stdlib + numpy); charset-aware extraction (legacy-encoding payloads)
+"""Query registry, second module: format parsers, media codecs, crawl
+and link-graph operators, and event analytics over the engine.
 
-Part 02 of 09 of the split query registry (VERDICT r4 next
-#7: the 72.8k-line ocr_spark/queries.py split behind the same
-QUERIES/ORACLE registry, registration order preserved — parts import
-sequentially from the ocr_spark.queries facade, which also
-back-patches call-time name resolution so intra-registry helper
-references behave exactly as in the original single module).
+Registers into the QUERIES/ORACLE dicts of ``ocr_spark.qparts.part01``
+after that module's queries; the public entry point is
+``ocr_spark.queries``.
 """
 
 from __future__ import annotations
 
-import ocr_spark.queries_base as _base
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-globals().update(
-    {k: v for k, v in vars(_base).items() if not k.startswith("__")}
+from ocr_spark.qparts.part01 import (
+    _duck_cosine,
+    _index_cache_path,
+    _utc,
+    load_table,
+    query,
 )
-import ocr_spark.qparts.part01 as _prev
-
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
-)
-
 
 
 @query(
@@ -686,6 +683,8 @@ _REDIRECT_EDGES = {
     "c": "c",
     "d0": "d1", "d1": "d0",
 }
+
+
 _REDIRECT_URLS = sorted(set(_REDIRECT_EDGES) | set(_REDIRECT_EDGES.values()) | {"e"})
 
 
@@ -1061,6 +1060,7 @@ _SITEMAP_FETCHED = [
     ("https://site.example/b2", "2024-01-01"),
     ("https://site.example/c1", "2024-01-01"),
 ]
+
 
 # expected (url, lastmod, needs_fetch) — hand-derived from the fixture:
 # fetch when never fetched, or when the sitemap lastmod postdates the
@@ -2039,95 +2039,6 @@ def idn_host_ascii(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RESOLVE_BASE_SQL = """
-        'https://h' || CAST(doc_id % 19 AS VARCHAR) || '.example.com'
-        || (CASE WHEN doc_id % 2 = 0
-             THEN '/dir' || CAST(doc_id AS VARCHAR) || '/page.html'
-             ELSE '' END)
-        || (CASE WHEN doc_id % 3 = 0
-             THEN '?x=' || CAST(doc_id AS VARCHAR) ELSE '' END)
-"""
-
-_RESOLVE_REF_SQL = """
-        (CASE doc_id % 8
-          WHEN 0 THEN 'c' || CAST(doc_id AS VARCHAR) || '.html'
-          WHEN 1 THEN './r' || CAST(doc_id AS VARCHAR)
-          WHEN 2 THEN '../up' || CAST(doc_id AS VARCHAR)
-          WHEN 3 THEN '/abs' || CAST(doc_id AS VARCHAR)
-          WHEN 4 THEN '//cdn' || CAST(doc_id % 7 AS VARCHAR) || '.example.net/x'
-          WHEN 5 THEN 'https://other' || CAST(doc_id AS VARCHAR) || '.org/y'
-          WHEN 6 THEN '?q=' || CAST(doc_id AS VARCHAR)
-          ELSE '#sec' END)
-"""
-
-
-def _resolve_oracle() -> str:
-    from ocr_spark.functions.urlnorm import duck_resolve_reference
-
-    return f"""
-    WITH pages AS (
-      SELECT doc_id, {_RESOLVE_BASE_SQL} AS base, {_RESOLVE_REF_SQL} AS ref
-      FROM documents)
-    SELECT doc_id, base, ref,
-           {duck_resolve_reference('base', 'ref')} AS resolved
-    FROM pages
-    """
-
-
-@query("outlink_resolve_rfc", _resolve_oracle())
-def outlink_resolve_rfc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 3986 reference resolution (round 4): the absolute url each
-    href names — the correctness core of outlink extraction that
-    decides what a 10^12-page frontier actually crawls. The battery
-    rotates every href shape (path-relative, ./, ../ with root clamp,
-    root-relative, protocol-relative, absolute, query-only,
-    fragment-only — which keeps the BASE's query per §5.2.2) against
-    bases with and without directories and queries; both engines
-    construct identical (base, ref) pairs and resolve with INDEPENDENT
-    implementations sharing only the bounded dot-segment pass counts
-    (functions/urlnorm.resolve_reference vs duck_resolve_reference).
-
-    Scale shape: one codegen projection — no UDF, no shuffle; fuses
-    into the outlink-explode stage of the crawl graph build.
-    """
-    from ocr_spark.functions.urlnorm import resolve_reference
-
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = i.cast("string")
-    base = F.concat(
-        F.lit("https://h"),
-        (i % 19).cast("string"),
-        F.lit(".example.com"),
-        F.when(
-            i % 2 == 0, F.concat(F.lit("/dir"), s, F.lit("/page.html"))
-        ).otherwise(F.lit("")),
-        F.when(i % 3 == 0, F.concat(F.lit("?x="), s)).otherwise(F.lit("")),
-    )
-    ref = (
-        F.when(i % 8 == 0, F.concat(F.lit("c"), s, F.lit(".html")))
-        .when(i % 8 == 1, F.concat(F.lit("./r"), s))
-        .when(i % 8 == 2, F.concat(F.lit("../up"), s))
-        .when(i % 8 == 3, F.concat(F.lit("/abs"), s))
-        .when(
-            i % 8 == 4,
-            F.concat(
-                F.lit("//cdn"), (i % 7).cast("string"),
-                F.lit(".example.net/x"),
-            ),
-        )
-        .when(i % 8 == 5, F.concat(F.lit("https://other"), s, F.lit(".org/y")))
-        .when(i % 8 == 6, F.concat(F.lit("?q="), s))
-        .otherwise(F.lit("#sec"))
-    )
-    return d.select("doc_id", base.alias("base"), ref.alias("ref")).select(
-        "doc_id",
-        "base",
-        "ref",
-        resolve_reference(F.col("base"), F.col("ref")).alias("resolved"),
-    )
-
-
 def _bitext_oracle() -> str:
     cos = _duck_cosine("a.e", "b.e")
     r = f"FLOOR({cos} * 1000000 + 0.5) / 1000000"
@@ -2197,461 +2108,6 @@ def bitext_mine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             (F.floor(F.col("m") / enc_base) - 1000000) / 1000000.0
         ).alias("cos"),
-    )
-
-
-def _hreflang_oracle() -> str:
-    from ocr_spark.functions.urlnorm import duck_resolve_reference
-
-    href = "regexp_extract(tag, 'href=\"([^\"]*)\"', 1)"
-    resolved = duck_resolve_reference("url", href)
-    return f"""
-    WITH pages AS (
-      SELECT doc_id,
-        'https://h' || CAST(doc_id % 23 AS VARCHAR)
-          || '.example.com/p/' || CAST(doc_id AS VARCHAR) AS url,
-        '<html><head>'
-        || '<link rel="alternate" hreflang="en" href="/en/'
-          || CAST(doc_id AS VARCHAR) || '">'
-        || (CASE WHEN doc_id % 2 = 0 THEN
-              '<link rel="alternate" hreflang="de" href="../de/'
-              || CAST(doc_id AS VARCHAR) || '">' ELSE '' END)
-        || (CASE WHEN doc_id % 3 = 0 THEN
-              '<link hreflang="fr" rel="alternate" href="https://fr.example.com/'
-              || CAST(doc_id AS VARCHAR) || '">' ELSE '' END)
-        || (CASE WHEN doc_id % 5 = 0 THEN
-              '<link rel="alternate" hreflang="x-default" href="//h'
-              || CAST(doc_id % 23 AS VARCHAR) || '.example.com/">'
-            ELSE '' END)
-        || '</head><body>x</body></html>' AS html
-      FROM documents),
-    links AS (
-      SELECT doc_id, url,
-             unnest(regexp_extract_all(html,
-               '<link[^>]*hreflang="([^"]*)"[^>]*>', 0)) AS tag
-      FROM pages)
-    SELECT doc_id,
-           regexp_extract(tag, 'hreflang="([^"]*)"', 1) AS hreflang,
-           {resolved} AS alt_url
-    FROM links
-    """
-
-
-@query("hreflang_alternates", _hreflang_oracle())
-def hreflang_alternates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """hreflang alternate extraction (round 4): the
-    ``<link rel="alternate" hreflang=...>`` graph — how a multilingual
-    site declares its translation variants. Feeding bitext mining with
-    DECLARED pairs (this query) before embedding-mined pairs
-    (bitext_mine_pairs) is the standard parallel-corpus recipe. Tags
-    are extracted with one codegen ``regexp_extract_all`` (attribute
-    order varies — the battery rotates it), hrefs resolve against the
-    page url through the RFC 3986 resolver (relative, ../, absolute,
-    and protocol-relative forms all appear), and the result is the
-    exploded (doc, lang, alternate-url) edge list a clustering pass
-    (connected_components) would consume.
-
-    Scale shape: scan -> regexp project -> explode -> resolve — all
-    whole-stage codegen, no UDF, no shuffle.
-    """
-    from ocr_spark.functions.urlnorm import resolve_reference
-
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = i.cast("string")
-    url = F.concat(
-        F.lit("https://h"), (i % 23).cast("string"),
-        F.lit(".example.com/p/"), s,
-    )
-    html = F.concat(
-        F.lit('<html><head><link rel="alternate" hreflang="en" href="/en/'),
-        s,
-        F.lit('">'),
-        F.when(
-            i % 2 == 0,
-            F.concat(
-                F.lit('<link rel="alternate" hreflang="de" href="../de/'),
-                s, F.lit('">'),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            i % 3 == 0,
-            F.concat(
-                F.lit('<link hreflang="fr" rel="alternate" '
-                      'href="https://fr.example.com/'),
-                s, F.lit('">'),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            i % 5 == 0,
-            F.concat(
-                F.lit('<link rel="alternate" hreflang="x-default" href="//h'),
-                (i % 23).cast("string"), F.lit('.example.com/">'),
-            ),
-        ).otherwise(F.lit("")),
-        F.lit("</head><body>x</body></html>"),
-    )
-    pages = d.select("doc_id", url.alias("url"), html.alias("html"))
-    tags = pages.select(
-        "doc_id",
-        "url",
-        F.explode(
-            F.regexp_extract_all(
-                F.col("html"),
-                F.lit('<link[^>]*hreflang="([^"]*)"[^>]*>'),
-                0,
-            )
-        ).alias("tag"),
-    )
-    return tags.select(
-        "doc_id",
-        F.regexp_extract(F.col("tag"), 'hreflang="([^"]*)"', 1).alias(
-            "hreflang"
-        ),
-        resolve_reference(
-            F.col("url"),
-            F.regexp_extract(F.col("tag"), 'href="([^"]*)"', 1),
-        ).alias("alt_url"),
-    )
-
-
-_SOFT404_TITLE_RE = "^(page not found|not found|error|404( |$))"
-_SOFT404_PHRASE_RE = (
-    "(page (you requested )?(does not|doesnt) exist|page not found)"
-)
-
-
-def _soft404_oracle() -> str:
-    d = "CAST(doc_id AS VARCHAR)"
-    return f"""
-    WITH pages AS (
-      SELECT doc_id,
-        CASE WHEN doc_id % 6 = 1 THEN 404 ELSE 200 END AS http_status,
-        CASE doc_id % 6
-          WHEN 1 THEN 'Not Found'
-          WHEN 2 THEN 'Page Not Found'
-          WHEN 4 THEN 'Error'
-          WHEN 5 THEN 'History of 404 Ceramics ' || {d}
-          ELSE 'Doc ' || {d} END AS title,
-        CASE doc_id % 6
-          WHEN 1 THEN 'not found'
-          WHEN 2 THEN 'gone'
-          WHEN 3 THEN 'the page you requested does not exist'
-          WHEN 4 THEN 'error'
-          WHEN 5 THEN text || ' 404 history'
-          ELSE text END AS body
-      FROM documents),
-    sig AS (
-      SELECT doc_id, http_status,
-        regexp_matches(lower(title), '{_SOFT404_TITLE_RE}') AS title_hit,
-        regexp_matches(lower(body), '{_SOFT404_PHRASE_RE}') AS phrase_hit,
-        (len(string_split(body, ' ')) < 10
-         AND regexp_matches(lower(body), '(error|not found)')) AS tiny_err
-      FROM pages)
-    SELECT doc_id, CAST(http_status AS BIGINT) AS http_status,
-      CASE WHEN http_status <> 200 THEN 'hard404'
-           WHEN title_hit OR phrase_hit OR tiny_err THEN 'soft404'
-           ELSE 'ok' END AS verdict,
-      CASE WHEN http_status <> 200 THEN 'status'
-           WHEN title_hit THEN 'title'
-           WHEN phrase_hit THEN 'phrase'
-           WHEN tiny_err THEN 'tiny-error'
-           ELSE '' END AS reason
-    FROM sig
-    """
-
-
-@query("soft404_detect", _soft404_oracle())
-def soft404_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Soft-404 detection (round 4): pages that answer HTTP 200 with
-    error content — the crawl-quality trap that poisons a corpus with
-    millions of identical "page not found" bodies (and then dominates
-    dedup clusters and quality stats). The classifier is the standard
-    layered rule: non-200 is a hard 404; otherwise an ANCHORED title
-    pattern (so 'History of 404 Ceramics' does NOT flag), an error
-    phrase in the body, or a tiny body carrying an error word flags
-    soft404, with a first-match reason code for the audit trail (same
-    precedence discipline as curation_decisions). The battery plants
-    one rotation per rule plus the two negative controls.
-
-    Scale shape: pure codegen (regexp + split-size), no UDF, no
-    shuffle — rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = i.cast("string")
-    status = F.when(i % 6 == 1, F.lit(404)).otherwise(F.lit(200))
-    title = (
-        F.when(i % 6 == 1, F.lit("Not Found"))
-        .when(i % 6 == 2, F.lit("Page Not Found"))
-        .when(i % 6 == 4, F.lit("Error"))
-        .when(i % 6 == 5, F.concat(F.lit("History of 404 Ceramics "), s))
-        .otherwise(F.concat(F.lit("Doc "), s))
-    )
-    body = (
-        F.when(i % 6 == 1, F.lit("not found"))
-        .when(i % 6 == 2, F.lit("gone"))
-        .when(i % 6 == 3, F.lit("the page you requested does not exist"))
-        .when(i % 6 == 4, F.lit("error"))
-        .when(i % 6 == 5, F.concat(F.col("text"), F.lit(" 404 history")))
-        .otherwise(F.col("text"))
-    )
-    sig = d.select(
-        "doc_id",
-        status.alias("http_status"),
-        F.lower(title).rlike(_SOFT404_TITLE_RE).alias("title_hit"),
-        F.lower(body).rlike(_SOFT404_PHRASE_RE).alias("phrase_hit"),
-        (
-            (F.size(F.split(body, " ")) < 10)
-            & F.lower(body).rlike("(error|not found)")
-        ).alias("tiny_err"),
-    )
-    return sig.select(
-        "doc_id",
-        F.col("http_status").cast("long").alias("http_status"),
-        F.when(F.col("http_status") != 200, F.lit("hard404"))
-        .when(
-            F.col("title_hit") | F.col("phrase_hit") | F.col("tiny_err"),
-            F.lit("soft404"),
-        )
-        .otherwise(F.lit("ok"))
-        .alias("verdict"),
-        F.when(F.col("http_status") != 200, F.lit("status"))
-        .when(F.col("title_hit"), F.lit("title"))
-        .when(F.col("phrase_hit"), F.lit("phrase"))
-        .when(F.col("tiny_err"), F.lit("tiny-error"))
-        .otherwise(F.lit(""))
-        .alias("reason"),
-    )
-
-
-# RFC 9309 wildcard rule set: (rule_id, pattern, allow). '*' matches
-# any char run; a trailing '$' anchors at path end; otherwise a rule
-# matches any path it prefixes. Specificity = length of the rule
-# STRING as written (wildcards count), allow beats disallow on ties.
-_ROBOTS_WC_RULES = [
-    (0, "/", 1),
-    (1, "/s*/priv", 0),
-    (2, "/s1/pub*", 1),
-    (3, "/*.html$", 0),
-    (4, "/s2/", 0),
-    (5, "/tie*", 1),
-    (6, "/tie$", 0),
-]
-
-
-def _robots_wc_oracle() -> str:
-    d = "CAST(doc_id AS VARCHAR)"
-    rules = ", ".join(
-        f"({rid}, '{pat}', {al})" for rid, pat, al in _ROBOTS_WC_RULES
-    )
-    return f"""
-    WITH docs AS (
-      SELECT doc_id, doc_id % 13 AS host,
-        CASE doc_id % 7
-          WHEN 0 THEN '/s' || CAST(doc_id % 5 AS VARCHAR) || '/priv' || {d}
-          WHEN 1 THEN '/s1/pub' || {d}
-          WHEN 2 THEN '/page' || {d} || '.html'
-          WHEN 3 THEN '/s2/x' || {d}
-          WHEN 4 THEN '/s1/pub' || {d} || '.html'
-          WHEN 5 THEN '/other' || {d}
-          ELSE '/tie' END AS path
-      FROM documents),
-    rules AS (
-      SELECT h.host, r.rule_id, r.pattern, r.allow,
-             CAST(length(r.pattern) AS BIGINT) AS rule_len,
-             '^' || replace(replace(r.pattern, '.', '\\.'), '*', '.*') AS rx
-      FROM (SELECT DISTINCT doc_id % 13 AS host FROM documents) h
-      CROSS JOIN (SELECT * FROM (VALUES {rules}) v(rule_id, pattern, allow)) r),
-    hits AS (
-      SELECT d.doc_id, d.path, r.rule_id, r.rule_len, r.allow,
-             ROW_NUMBER() OVER (
-               PARTITION BY d.doc_id
-               ORDER BY r.rule_len * 2 + r.allow DESC, r.rule_id ASC) AS rn
-      FROM docs d JOIN rules r
-        ON d.host = r.host AND regexp_matches(d.path, r.rx))
-    SELECT doc_id, path, CAST(rule_id AS BIGINT) AS rule_id,
-           rule_len, (allow = 1) AS allowed
-    FROM hits WHERE rn = 1
-    """
-
-
-@query("robots_wildcard_filter", _robots_wc_oracle())
-def robots_wildcard_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 9309 wildcard robots matching (round 4): the full REP rule
-    grammar — ``*`` wildcards anywhere and ``$`` end anchors — that
-    robots_prefix_filter's segment-boundary equi-join cannot express.
-    Rules compile to anchored regexes ENGINE-SIDE in both systems
-    (escape ``.``, ``*`` -> ``.*``, the trailing ``$`` is already the
-    anchor), matching is a broadcast hash join on host with a
-    column-pattern ``regexp_like`` filter (rules-per-host is bounded
-    and tiny — the classic small-dim broadcast), and the most-specific
-    match is an argmax over ONE BIGINT ((rule_len*2 + allow)*256 +
-    (255 - rule_id)): longest rule first, allow beats disallow on
-    ties, smallest rule_id for determinism — HashAggregate with
-    map-side combine, never a string-carrying max_by struct. The
-    battery plants a longer-disallow-beats-shorter-allow case
-    (``/s1/pub*`` allow vs ``/*.html$`` disallow) and an exact
-    same-length tie (``/tie*`` vs ``/tie$``).
-
-    Scale shape at 10^12 urls: docs shuffle nowhere (broadcast join +
-    one hash-agg shuffle on doc_id); the regex compile cost is per
-    RULE pattern, cached by the regex engine per task.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = i.cast("string")
-    path = (
-        F.when(
-            i % 7 == 0,
-            F.concat(F.lit("/s"), (i % 5).cast("string"), F.lit("/priv"), s),
-        )
-        .when(i % 7 == 1, F.concat(F.lit("/s1/pub"), s))
-        .when(i % 7 == 2, F.concat(F.lit("/page"), s, F.lit(".html")))
-        .when(i % 7 == 3, F.concat(F.lit("/s2/x"), s))
-        .when(i % 7 == 4, F.concat(F.lit("/s1/pub"), s, F.lit(".html")))
-        .when(i % 7 == 5, F.concat(F.lit("/other"), s))
-        .otherwise(F.lit("/tie"))
-    )
-    docs = d.select("doc_id", (i % 13).alias("host"), path.alias("path"))
-    rule_rows = F.array(
-        *[
-            F.struct(
-                F.lit(rid).alias("rule_id"),
-                F.lit(pat).alias("pattern"),
-                F.lit(al).alias("allow"),
-            )
-            for rid, pat, al in _ROBOTS_WC_RULES
-        ]
-    )
-    # rule fan-out by EXPLODE of a literal array (a projection), not a
-    # cross join — no BroadcastNestedLoop node even for the tiny dim
-    rules = (
-        docs.select("host")
-        .distinct()
-        .select("host", F.explode(rule_rows).alias("r"))
-        .select(
-            "host",
-            F.col("r.rule_id").alias("rule_id"),
-            F.col("r.allow").alias("allow"),
-            F.length("r.pattern").cast("long").alias("rule_len"),
-            F.concat(
-                F.lit("^"),
-                F.replace(
-                    F.replace(F.col("r.pattern"), F.lit("."), F.lit(r"\.")),
-                    F.lit("*"),
-                    F.lit(".*"),
-                ),
-            ).alias("rx"),
-        )
-    )
-    hits = docs.join(F.broadcast(rules), "host").where(
-        F.regexp_like(F.col("path"), F.col("rx"))
-    )
-    enc = (F.col("rule_len") * 2 + F.col("allow")) * 256 + (
-        F.lit(255) - F.col("rule_id")
-    )
-    best = (
-        hits.select("doc_id", "path", enc.alias("enc"))
-        .groupBy("doc_id", "path")
-        .agg(F.max("enc").alias("m"))
-    )
-    spec = F.floor(F.col("m") / 256)
-    return best.select(
-        "doc_id",
-        "path",
-        (F.lit(255) - F.col("m") % 256).alias("rule_id"),
-        F.floor(spec / 2).alias("rule_len"),
-        ((spec % 2) == 1).alias("allowed"),
-    )
-
-
-def _revalidation_oracle() -> str:
-    d = "CAST(doc_id AS VARCHAR)"
-    return f"""
-    WITH hdrs AS (
-      SELECT doc_id,
-        CASE doc_id % 7
-          WHEN 0 THEN 'public, max-age=60'
-          WHEN 1 THEN 'max-age=60, must-revalidate'
-          WHEN 2 THEN 'no-store, max-age=60'
-          ELSE '' END AS cache_control,
-        CASE WHEN doc_id % 7 IN (2, 3, 6)
-             THEN '"etag-' || {d} || '"' ELSE '' END AS etag,
-        CASE WHEN doc_id % 7 IN (4, 6)
-             THEN 'Mon, 01 Jan 2024 00:00:00 GMT' ELSE '' END
-          AS last_modified,
-        doc_id % 120 AS age_s
-      FROM documents),
-    parsed AS (
-      SELECT *, COALESCE(TRY_CAST(regexp_extract(cache_control,
-               'max-age=([0-9]+)', 1) AS BIGINT), -1) AS max_age
-      FROM hdrs)
-    SELECT doc_id,
-      CASE
-        WHEN cache_control LIKE '%no-store%' THEN 'refetch'
-        WHEN max_age >= 0 AND age_s < max_age THEN 'fresh'
-        WHEN etag <> '' THEN 'conditional-etag'
-        WHEN last_modified <> '' THEN 'conditional-lm'
-        ELSE 'refetch' END AS strategy,
-      (NOT (max_age >= 0 AND age_s < max_age
-            AND cache_control NOT LIKE '%no-store%')) AS needs_fetch,
-      max_age, CAST(age_s AS BIGINT) AS age_s
-    FROM parsed
-    """
-
-
-@query("http_revalidation_plan", _revalidation_oracle())
-def http_revalidation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTTP revalidation planning (round 4): what a recrawl actually
-    sends per url — nothing (still fresh under max-age), a conditional
-    GET (If-None-Match when an ETag exists, else If-Modified-Since),
-    or a full refetch (no-store, or no validators). At 10^12 urls the
-    difference between unconditional refetch and 304-validated reuse
-    is most of the crawl's bandwidth, and the strategy is decidable
-    entirely from stored headers — one codegen pass. The precedence is
-    planted in the battery: no-store beats a live max-age AND a
-    present ETag; a fresh max-age beats validators; ETag beats
-    Last-Modified when both exist. Cache-Control parses from the raw
-    header string (regexp max-age extraction) on BOTH engines.
-
-    Scale shape: pure projection, no UDF, no shuffle — a frontier
-    planner fuses it into the scheduling scan (crawl_frontier_schedule
-    consumes the needs_fetch bit).
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = i.cast("string")
-    cache_control = (
-        F.when(i % 7 == 0, F.lit("public, max-age=60"))
-        .when(i % 7 == 1, F.lit("max-age=60, must-revalidate"))
-        .when(i % 7 == 2, F.lit("no-store, max-age=60"))
-        .otherwise(F.lit(""))
-    )
-    etag = F.when(
-        (i % 7).isin(2, 3, 6), F.concat(F.lit('"etag-'), s, F.lit('"'))
-    ).otherwise(F.lit(""))
-    last_modified = F.when(
-        (i % 7).isin(4, 6), F.lit("Mon, 01 Jan 2024 00:00:00 GMT")
-    ).otherwise(F.lit(""))
-    age_s = i % 120
-    max_age_str = F.regexp_extract(cache_control, "max-age=([0-9]+)", 1)
-    max_age = F.when(max_age_str == "", F.lit(-1)).otherwise(
-        max_age_str.cast("long")
-    )
-    no_store = cache_control.contains("no-store")
-    fresh = (max_age >= 0) & (age_s < max_age) & ~no_store
-    return d.select(
-        "doc_id",
-        F.when(no_store, F.lit("refetch"))
-        .when((max_age >= 0) & (age_s < max_age), F.lit("fresh"))
-        .when(etag != "", F.lit("conditional-etag"))
-        .when(last_modified != "", F.lit("conditional-lm"))
-        .otherwise(F.lit("refetch"))
-        .alias("strategy"),
-        (~fresh).alias("needs_fetch"),
-        max_age.alias("max_age"),
-        age_s.cast("long").alias("age_s"),
     )
 
 
@@ -2795,245 +2251,6 @@ def pipeline_crawl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _meta_refresh_oracle() -> str:
-    from ocr_spark.functions.urlnorm import duck_resolve_reference
-
-    d = "CAST(doc_id AS VARCHAR)"
-    content = (
-        "regexp_extract(html, "
-        "'(?i)<meta http-equiv=\"refresh\" content=\"([^\"]*)\"', 1)"
-    )
-    # inner url may be single-quoted: '' is the escaped quote in SQL
-    target_raw = (
-        "regexp_extract(content, "
-        "'(?i)url\\s*=\\s*''?([^'']*)''?$', 1)"
-    )
-    resolved = duck_resolve_reference("url", "target_raw")
-    return f"""
-    WITH pages AS (
-      SELECT doc_id,
-        'https://m' || CAST(doc_id % 17 AS VARCHAR)
-          || '.example.com/a/p' || {d} AS url,
-        CASE doc_id % 5
-          WHEN 0 THEN '<html><head><meta http-equiv="refresh" content="0;url=/next'
-                      || {d} || '"></head></html>'
-          WHEN 1 THEN '<html><head><meta http-equiv="refresh" content="5; URL=''https://other'
-                      || {d} || '.org/x''"></head></html>'
-          WHEN 2 THEN '<html><head><meta http-equiv="Refresh" content="30"></head></html>'
-          WHEN 3 THEN '<html><head><title>t</title></head></html>'
-          ELSE '<html><head><meta http-equiv="refresh" content="0; url=../up'
-               || {d} || '"></head></html>' END AS html
-      FROM documents),
-    parsed AS (
-      SELECT doc_id, url, {content} AS content FROM pages),
-    t AS (
-      SELECT doc_id, url, content,
-             COALESCE(TRY_CAST(regexp_extract(content, '^([0-9]+)', 1)
-                               AS BIGINT), -1) AS delay_s,
-             {target_raw} AS target_raw
-      FROM parsed)
-    SELECT doc_id, delay_s,
-      CASE WHEN content = '' THEN NULL
-           WHEN target_raw = '' THEN url
-           ELSE {resolved} END AS target,
-      CASE WHEN content = '' THEN 'none'
-           WHEN delay_s = 0 THEN 'instant'
-           ELSE 'delayed' END AS kind
-    FROM t
-    """
-
-
-@query("meta_refresh_redirects", _meta_refresh_oracle())
-def meta_refresh_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Meta-refresh redirect extraction (round 4): the in-page
-    redirects (``<meta http-equiv="refresh">``) that never show up as
-    HTTP 3xx — an instant refresh is a redirect a crawl must follow
-    (and a classic cloaking/doorway signal), a delayed one is page
-    behavior worth recording, and a url-less refresh is a self-reload.
-    The content attribute parses case-insensitively with optional
-    single-quoted urls (both battery-rotated); targets resolve through
-    the RFC 3986 resolver (root-relative, absolute, and ``../`` forms
-    planted). Feeds the same pointer-jumping chain resolution as the
-    HTTP Location column (resolve_redirects).
-
-    Scale shape: pure codegen regexp projection + the resolver — no
-    UDF, no shuffle; rides the extraction scan.
-    """
-    from ocr_spark.functions.urlnorm import resolve_reference
-
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = i.cast("string")
-    url = F.concat(
-        F.lit("https://m"), (i % 17).cast("string"),
-        F.lit(".example.com/a/p"), s,
-    )
-    html = (
-        F.when(
-            i % 5 == 0,
-            F.concat(
-                F.lit('<html><head><meta http-equiv="refresh" '
-                      'content="0;url=/next'),
-                s, F.lit('"></head></html>'),
-            ),
-        )
-        .when(
-            i % 5 == 1,
-            F.concat(
-                F.lit('<html><head><meta http-equiv="refresh" '
-                      "content=\"5; URL='https://other"),
-                s, F.lit(".org/x'\"></head></html>"),
-            ),
-        )
-        .when(
-            i % 5 == 2,
-            F.lit('<html><head><meta http-equiv="Refresh" '
-                  'content="30"></head></html>'),
-        )
-        .when(i % 5 == 3, F.lit("<html><head><title>t</title></head></html>"))
-        .otherwise(
-            F.concat(
-                F.lit('<html><head><meta http-equiv="refresh" '
-                      'content="0; url=../up'),
-                s, F.lit('"></head></html>'),
-            )
-        )
-    )
-    pages = d.select("doc_id", url.alias("url"), html.alias("html"))
-    content = F.regexp_extract(
-        F.col("html"),
-        '(?i)<meta http-equiv="refresh" content="([^"]*)"',
-        1,
-    )
-    t = pages.select(
-        "doc_id",
-        "url",
-        content.alias("content"),
-    ).select(
-        "doc_id",
-        "url",
-        "content",
-        F.when(
-            F.regexp_extract(F.col("content"), "^([0-9]+)", 1) == "",
-            F.lit(-1),
-        )
-        .otherwise(
-            F.regexp_extract(F.col("content"), "^([0-9]+)", 1).cast("long")
-        )
-        .alias("delay_s"),
-        F.regexp_extract(
-            F.col("content"), r"(?i)url\s*=\s*'?([^']*)'?$", 1
-        ).alias("target_raw"),
-    )
-    return t.select(
-        "doc_id",
-        "delay_s",
-        F.when(F.col("content") == "", F.lit(None).cast("string"))
-        .when(F.col("target_raw") == "", F.col("url"))
-        .otherwise(
-            resolve_reference(F.col("url"), F.col("target_raw"))
-        )
-        .alias("target"),
-        F.when(F.col("content") == "", F.lit("none"))
-        .when(F.col("delay_s") == 0, F.lit("instant"))
-        .otherwise(F.lit("delayed"))
-        .alias("kind"),
-    )
-
-
-def _base_href_oracle() -> str:
-    from ocr_spark.functions.urlnorm import duck_resolve_reference
-
-    d = "CAST(doc_id AS VARCHAR)"
-    base_raw = "regexp_extract(html, '<base href=\"([^\"]*)\"', 1)"
-    eff = duck_resolve_reference("url", "base_raw")
-    resolved = duck_resolve_reference("eff_base", "anchor")
-    return f"""
-    WITH pages AS (
-      SELECT doc_id,
-        'https://b' || CAST(doc_id % 11 AS VARCHAR)
-          || '.example.com/dir/page' || {d} AS url,
-        (CASE doc_id % 4
-          WHEN 0 THEN '<head><base href="https://cdn' || {d}
-                      || '.example.net/assets/"></head>'
-          WHEN 1 THEN '<head><base href="/root' || {d} || '/"></head>'
-          WHEN 2 THEN '<head><base href="sub/"></head>'
-          ELSE '<head></head>' END)
-        || '<body><a href="x' || {d} || '.html">x</a></body>' AS html
-      FROM documents),
-    b AS (
-      SELECT doc_id, url, html, {base_raw} AS base_raw FROM pages),
-    e AS (
-      SELECT doc_id, url, html,
-             CASE WHEN base_raw = '' THEN url ELSE {eff} END AS eff_base
-      FROM b),
-    a AS (
-      SELECT doc_id, url, eff_base,
-             regexp_extract(html, '<a href="([^"]*)"', 1) AS anchor
-      FROM e)
-    SELECT doc_id, eff_base, {resolved} AS resolved
-    FROM a
-    """
-
-
-@query("base_href_resolution", _base_href_oracle())
-def base_href_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``<base href>`` resolution (round 4): the document base element
-    redirects EVERY relative link on the page away from the page's own
-    url — outlink extraction that ignores it mis-resolves entire
-    template families (CDN-based sites, PHP apps with rewritten
-    paths). Per HTML spec the base attribute is itself resolved
-    against the page url (it can be relative — battery cases: absolute
-    cross-host, root-relative, path-relative, absent), and anchors
-    then resolve against the effective base — both hops through the
-    same RFC 3986 resolver the graded outlink_resolve_rfc pins.
-
-    Scale shape: two chained codegen resolver projections, no UDF, no
-    shuffle.
-    """
-    from ocr_spark.functions.urlnorm import resolve_reference
-
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = i.cast("string")
-    url = F.concat(
-        F.lit("https://b"), (i % 11).cast("string"),
-        F.lit(".example.com/dir/page"), s,
-    )
-    html = F.concat(
-        F.when(
-            i % 4 == 0,
-            F.concat(
-                F.lit('<head><base href="https://cdn'), s,
-                F.lit('.example.net/assets/"></head>'),
-            ),
-        )
-        .when(
-            i % 4 == 1,
-            F.concat(F.lit('<head><base href="/root'), s, F.lit('/"></head>')),
-        )
-        .when(i % 4 == 2, F.lit('<head><base href="sub/"></head>'))
-        .otherwise(F.lit("<head></head>")),
-        F.lit('<body><a href="x'), s, F.lit('.html">x</a></body>'),
-    )
-    pages = d.select("doc_id", url.alias("url"), html.alias("html"))
-    base_raw = F.regexp_extract(F.col("html"), '<base href="([^"]*)"', 1)
-    e = pages.select(
-        "doc_id",
-        "url",
-        "html",
-        F.when(base_raw == "", F.col("url"))
-        .otherwise(resolve_reference(F.col("url"), base_raw))
-        .alias("eff_base"),
-    )
-    anchor = F.regexp_extract(F.col("html"), '<a href="([^"]*)"', 1)
-    return e.select(
-        "doc_id",
-        "eff_base",
-        resolve_reference(F.col("eff_base"), anchor).alias("resolved"),
-    )
-
-
 def _recall_modes_oracle() -> str:
     d = "CAST(doc_id AS VARCHAR)"
     main = f"'Main content paragraph for document ' || {d} || ' with plenty of characters.'"
@@ -3049,7 +2266,7 @@ def _recall_modes_oracle() -> str:
 
 @query("extract_recall_precision", _recall_modes_oracle())
 def extract_recall_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Extraction recall/precision modes (round 4): the
+    """Extraction recall/precision modes: the
     favor-precision vs favor-recall split every production extractor
     exposes — the SAME block parser with different density gates
     (normative: min 25 chars, link density <= 0.33; recall: min 10,
@@ -4143,1221 +3360,6 @@ def truncation_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mime_sniff_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 6
-          WHEN 0 THEN '<!DOCTYPE html><html><body>doc '
-                      || CAST(doc_id AS VARCHAR) || '</body></html>'
-          WHEN 1 THEN '%PDF-1.4' || chr(10) || '1 0 obj '
-                      || CAST(doc_id AS VARCHAR)
-          WHEN 2 THEN 'GIF89a-payload-' || CAST(doc_id AS VARCHAR)
-          WHEN 3 THEN '{"title": "doc ' || CAST(doc_id AS VARCHAR) || '"}'
-          WHEN 4 THEN '<?xml version="1.0"?><urlset>u'
-                      || CAST(doc_id AS VARCHAR) || '</urlset>'
-          ELSE 'RIFF1234WAVEfmt-' || CAST(doc_id AS VARCHAR) END AS payload,
-        CASE doc_id % 6
-          WHEN 0 THEN 'text/html'
-          WHEN 1 THEN 'text/html'
-          WHEN 2 THEN 'image/gif'
-          WHEN 3 THEN 'application/json'
-          WHEN 4 THEN 'text/html'
-          ELSE 'audio/wav' END AS content_type
-      FROM documents),
-    k AS (
-      SELECT doc_id, content_type,
-        CASE WHEN starts_with(payload, '%PDF') THEN 'pdf'
-             WHEN starts_with(payload, 'GIF8') THEN 'gif'
-             WHEN starts_with(payload, 'RIFF') THEN 'wav'
-             WHEN starts_with(payload, '<?xml') THEN 'xml'
-             WHEN starts_with(payload, '<!DOCTYPE html')
-               OR starts_with(payload, '<html') THEN 'html'
-             WHEN starts_with(payload, '{') THEN 'json'
-             ELSE 'unknown' END AS sniffed,
-        CASE content_type
-          WHEN 'text/html' THEN 'html'
-          WHEN 'application/pdf' THEN 'pdf'
-          WHEN 'image/gif' THEN 'gif'
-          WHEN 'application/json' THEN 'json'
-          WHEN 'text/xml' THEN 'xml'
-          WHEN 'audio/wav' THEN 'wav'
-          ELSE 'unknown' END AS declared
-      FROM p)
-    SELECT doc_id, declared, sniffed,
-      CAST(CASE WHEN declared <> sniffed THEN 1 ELSE 0 END AS BIGINT)
-        AS mismatch,
-      CASE sniffed
-        WHEN 'html' THEN 'extract_html'
-        WHEN 'pdf' THEN 'extract_pdf'
-        WHEN 'xml' THEN 'parse_sitemap'
-        WHEN 'json' THEN 'parse_json'
-        WHEN 'gif' THEN 'decode_image'
-        WHEN 'wav' THEN 'decode_audio'
-        ELSE 'dead_letter' END AS route
-    FROM k
-    """
-
-
-@query("mime_sniff_routing", _mime_sniff_oracle())
-def mime_sniff_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-magic MIME routing (round 4): servers lie about
-    Content-Type constantly (PDFs served as text/html are the classic
-    extraction poison), so the processing route must come from the
-    payload's magic bytes with the declared header kept only for the
-    mismatch signal. Sniffs %PDF / GIF8 / RIFF / <?xml / <!DOCTYPE
-    html / JSON-brace prefixes (the ASCII magics the corpus
-    synthesizes; kernels/imageio handles the binary PNG/JPEG sniff on
-    real bytes), maps the declared type to the same kind space, and
-    routes to the pipeline stage the CONTENT requires — the dispatch
-    layer in front of extract_html / pdf_extract / decode_image /
-    parse_sitemap. Two planted mismatches (PDF-as-html, sitemap-as-
-    html) and four agreeing pairs.
-
-    Scale shape: pure codegen prefix tests — no regexp, no shuffle;
-    rides the ingestion scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 6
-    payload = (
-        F.when(v == 0, F.concat(
-            F.lit("<!DOCTYPE html><html><body>doc "), ds,
-            F.lit("</body></html>")))
-        .when(v == 1, F.concat(F.lit("%PDF-1.4\n1 0 obj "), ds))
-        .when(v == 2, F.concat(F.lit("GIF89a-payload-"), ds))
-        .when(v == 3, F.concat(F.lit('{"title": "doc '), ds, F.lit('"}')))
-        .when(v == 4, F.concat(
-            F.lit('<?xml version="1.0"?><urlset>u'), ds,
-            F.lit("</urlset>")))
-        .otherwise(F.concat(F.lit("RIFF1234WAVEfmt-"), ds))
-    )
-    content_type = (
-        F.when(v == 0, F.lit("text/html"))
-        .when(v == 1, F.lit("text/html"))
-        .when(v == 2, F.lit("image/gif"))
-        .when(v == 3, F.lit("application/json"))
-        .when(v == 4, F.lit("text/html"))
-        .otherwise(F.lit("audio/wav"))
-    )
-    p = d.select(
-        "doc_id", payload.alias("payload"), content_type.alias("ct")
-    )
-    pl = F.col("payload")
-    sniffed = (
-        F.when(pl.startswith("%PDF"), F.lit("pdf"))
-        .when(pl.startswith("GIF8"), F.lit("gif"))
-        .when(pl.startswith("RIFF"), F.lit("wav"))
-        .when(pl.startswith("<?xml"), F.lit("xml"))
-        .when(
-            pl.startswith("<!DOCTYPE html") | pl.startswith("<html"),
-            F.lit("html"),
-        )
-        .when(pl.startswith("{"), F.lit("json"))
-        .otherwise(F.lit("unknown"))
-    )
-    declared = (
-        F.when(F.col("ct") == "text/html", F.lit("html"))
-        .when(F.col("ct") == "application/pdf", F.lit("pdf"))
-        .when(F.col("ct") == "image/gif", F.lit("gif"))
-        .when(F.col("ct") == "application/json", F.lit("json"))
-        .when(F.col("ct") == "text/xml", F.lit("xml"))
-        .when(F.col("ct") == "audio/wav", F.lit("wav"))
-        .otherwise(F.lit("unknown"))
-    )
-    k = p.select(
-        "doc_id", declared.alias("declared"), sniffed.alias("sniffed")
-    )
-    return k.select(
-        "doc_id", "declared", "sniffed",
-        F.when(F.col("declared") != F.col("sniffed"), F.lit(1))
-        .otherwise(F.lit(0)).cast("long").alias("mismatch"),
-        F.when(F.col("sniffed") == "html", F.lit("extract_html"))
-        .when(F.col("sniffed") == "pdf", F.lit("extract_pdf"))
-        .when(F.col("sniffed") == "xml", F.lit("parse_sitemap"))
-        .when(F.col("sniffed") == "json", F.lit("parse_json"))
-        .when(F.col("sniffed") == "gif", F.lit("decode_image"))
-        .when(F.col("sniffed") == "wav", F.lit("decode_audio"))
-        .otherwise(F.lit("dead_letter"))
-        .alias("route"),
-    )
-
-
-def _hidden_text_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<body><p>Article text for document ' || CAST(doc_id AS VARCHAR)
-        || ' with normal visible content.</p>'
-        || CASE doc_id % 4
-             WHEN 1 THEN repeat(
-               '<span style="display:none">buy cheap casino now</span>',
-               doc_id % 5 + 2)
-             WHEN 2 THEN '<span style="font-size:0">discount pills '
-                         || CAST(doc_id AS VARCHAR) || ' here</span>'
-             WHEN 3 THEN '<span style="display:none">Skip to content</span>'
-             ELSE '' END
-        || '</body>' AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        COALESCE(list_sum(list_transform(
-          regexp_extract_all(html,
-            '<span style="(?:display:none|font-size:0)">([^<]*)</span>', 1),
-          x -> length(x))), 0) AS hidden_chars,
-        length(regexp_replace(html, '<[^>]+>', '', 'g')) AS total_chars
-      FROM p)
-    SELECT doc_id,
-      CAST(total_chars - hidden_chars AS BIGINT) AS visible_chars,
-      CAST(hidden_chars AS BIGINT) AS hidden_chars,
-      ROUND(CAST(hidden_chars AS DOUBLE) / total_chars, 4) AS hidden_ratio,
-      CAST(CASE WHEN hidden_chars >= 40 THEN 1 ELSE 0 END AS BIGINT)
-        AS stuffing
-    FROM m
-    """
-
-
-@query("hidden_text_stuffing", _hidden_text_oracle())
-def hidden_text_stuffing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hidden-text spam detection (round 4): keyword stuffing inside
-    ``display:none`` / ``font-size:0`` spans is the classic SEO
-    cloak — the text reaches a naive extractor but no reader, so a
-    training corpus wants it measured and gated. Counts hidden
-    characters (both hiding styles), visible characters (tag-stripped
-    total minus hidden), their ratio, and a stuffing flag at >= 40
-    hidden chars; the battery plants repeated stuffed spans, a single
-    hidden keyword run, a SHORT legitimate hidden span (a skip-link —
-    stays under the flag), and clean pages.
-
-    Scale shape: codegen regexp + a higher-order fold
-    (aggregate(transform(extract_all))) — no UDF, no shuffle; rides
-    the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = F.concat(
-        F.lit("<body><p>Article text for document "), ds,
-        F.lit(" with normal visible content.</p>"),
-        F.when(
-            v == 1,
-            F.repeat(
-                F.lit('<span style="display:none">buy cheap casino now'
-                      "</span>"),
-                (i % 5 + 2).cast("int"),
-            ),
-        )
-        .when(
-            v == 2,
-            F.concat(
-                F.lit('<span style="font-size:0">discount pills '), ds,
-                F.lit(" here</span>"),
-            ),
-        )
-        .when(
-            v == 3,
-            F.lit('<span style="display:none">Skip to content</span>'),
-        )
-        .otherwise(F.lit("")),
-        F.lit("</body>"),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    hidden = F.aggregate(
-        F.regexp_extract_all(
-            F.col("html"),
-            F.lit('<span style="(?:display:none|font-size:0)">'
-                  "([^<]*)</span>"),
-            1,
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.length(x),
-    )
-    total = F.length(F.regexp_replace(F.col("html"), "<[^>]+>", ""))
-    m = p.select(
-        "doc_id",
-        hidden.alias("hidden_chars"),
-        total.cast("long").alias("total_chars"),
-    )
-    return m.select(
-        "doc_id",
-        (F.col("total_chars") - F.col("hidden_chars")).cast("long")
-        .alias("visible_chars"),
-        F.col("hidden_chars").cast("long").alias("hidden_chars"),
-        F.round(
-            F.col("hidden_chars").cast("double") / F.col("total_chars"), 4
-        ).alias("hidden_ratio"),
-        F.when(F.col("hidden_chars") >= 40, F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("stuffing"),
-    )
-
-
-def _nofollow_oracle() -> str:
-    from ocr_spark.functions.urlnorm import duck_resolve_reference
-
-    resolved = duck_resolve_reference("purl", "href")
-    return f"""
-    WITH d0 AS (
-      SELECT doc_id, CAST(doc_id AS VARCHAR) AS ds,
-        'https://n' || CAST(doc_id % 13 AS VARCHAR)
-          || '.example.com/p/' || CAST(doc_id AS VARCHAR) AS purl,
-        doc_id % 4 AS v
-      FROM documents),
-    p AS (
-      SELECT doc_id, purl,
-        CASE v
-          WHEN 0 THEN '<p><a href="/org' || ds || '">x</a>'
-                      || '<a href="/nf' || ds || '" rel="nofollow">y</a></p>'
-          WHEN 1 THEN '<p><a href="https://ads.example.net/c' || ds
-                      || '" rel="sponsored">ad</a>'
-                      || '<a href="deep/' || ds || '">z</a></p>'
-          WHEN 2 THEN '<p><a href="/cmt' || ds
-                      || '" rel="ugc nofollow">c</a></p>'
-          ELSE '<p><a href="/only' || ds || '">w</a></p>' END AS html
-      FROM d0),
-    anchors AS (
-      SELECT doc_id, purl, a
-      FROM p, unnest(regexp_extract_all(html, '<a ([^>]*)>', 1)) AS t(a)),
-    parsed AS (
-      SELECT doc_id, purl,
-        regexp_extract(a, 'href="([^"]+)"', 1) AS href,
-        regexp_extract(a, 'rel="([^"]*)"', 1) AS rel
-      FROM anchors),
-    c AS (
-      SELECT doc_id, {resolved} AS outlink,
-        CAST(CASE WHEN rel LIKE '%nofollow%' THEN 1 ELSE 0 END AS BIGINT)
-          AS nofollow,
-        CAST(CASE WHEN rel LIKE '%sponsored%' THEN 1 ELSE 0 END AS BIGINT)
-          AS sponsored,
-        CAST(CASE WHEN rel LIKE '%ugc%' THEN 1 ELSE 0 END AS BIGINT) AS ugc
-      FROM parsed)
-    SELECT doc_id, outlink, nofollow, sponsored, ugc,
-      CAST(CASE WHEN nofollow = 0 AND sponsored = 0 AND ugc = 0
-                THEN 1 ELSE 0 END AS BIGINT) AS followed
-    FROM c
-    """
-
-
-@query("nofollow_edge_classes", _nofollow_oracle())
-def nofollow_edge_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link rel-qualifier classification (round 4): nofollow /
-    sponsored / ugc anchors must not feed PageRank or TrustRank (the
-    qualifiers exist precisely to stop comment-spam and paid links
-    from transferring authority), so the edge extractor surfaces the
-    flags and a ``followed`` bit the graph queries filter on. Anchors
-    extract as whole attribute strings FIRST (one regexp), then href
-    and rel parse per anchor — positional alignment between parallel
-    extract_all lists would break on rel-less anchors. Multi-valued
-    rel ("ugc nofollow") sets both flags; hrefs resolve through the
-    RFC 3986 resolver.
-
-    Scale shape: one explode + codegen regexps, no shuffle; rides the
-    outlink-extraction scan.
-    """
-    from ocr_spark.functions.urlnorm import resolve_reference
-
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    purl = F.concat(
-        F.lit("https://n"), (i % 13).cast("string"),
-        F.lit(".example.com/p/"), ds,
-    )
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<p><a href="/org'), ds, F.lit('">x</a><a href="/nf'),
-            ds, F.lit('" rel="nofollow">y</a></p>')))
-        .when(v == 1, F.concat(
-            F.lit('<p><a href="https://ads.example.net/c'), ds,
-            F.lit('" rel="sponsored">ad</a><a href="deep/'), ds,
-            F.lit('">z</a></p>')))
-        .when(v == 2, F.concat(
-            F.lit('<p><a href="/cmt'), ds,
-            F.lit('" rel="ugc nofollow">c</a></p>')))
-        .otherwise(F.concat(
-            F.lit('<p><a href="/only'), ds, F.lit('">w</a></p>')))
-    )
-    anchors = d.select(
-        "doc_id", purl.alias("purl"),
-        F.explode(
-            F.regexp_extract_all(html, F.lit("<a ([^>]*)>"), 1)
-        ).alias("a"),
-    )
-    href = F.regexp_extract(F.col("a"), 'href="([^"]+)"', 1)
-    rel = F.regexp_extract(F.col("a"), 'rel="([^"]*)"', 1)
-    c = anchors.select(
-        "doc_id",
-        resolve_reference(F.col("purl"), href).alias("outlink"),
-        F.when(rel.contains("nofollow"), F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("nofollow"),
-        F.when(rel.contains("sponsored"), F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("sponsored"),
-        F.when(rel.contains("ugc"), F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("ugc"),
-    )
-    return c.select(
-        "doc_id", "outlink", "nofollow", "sponsored", "ugc",
-        F.when(
-            (F.col("nofollow") == 0)
-            & (F.col("sponsored") == 0)
-            & (F.col("ugc") == 0),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("followed"),
-    )
-
-
-def _crawl_delay_oracle() -> str:
-    return """
-    WITH r AS (
-      SELECT doc_id,
-        'User-agent: *' || chr(10) ||
-        CASE doc_id % 4
-          WHEN 0 THEN 'Crawl-delay: ' || CAST(doc_id % 10 + 1 AS VARCHAR)
-                      || chr(10) || 'Disallow: /tmp'
-          WHEN 1 THEN 'Disallow: /tmp'
-          WHEN 2 THEN 'Request-rate: 1/' || CAST(doc_id % 5 + 1 AS VARCHAR)
-                      || chr(10) || 'Disallow: /x'
-          ELSE 'Crawl-delay: ' || CAST(doc_id % 3 + 1 AS VARCHAR)
-               || chr(10) || 'Request-rate: 1/'
-               || CAST(doc_id % 7 + 2 AS VARCHAR) END AS robots
-      FROM documents),
-    p AS (
-      SELECT doc_id, robots,
-        COALESCE(TRY_CAST(regexp_extract(robots,
-          'Crawl-delay: ([0-9]+)', 1) AS BIGINT), -1) AS crawl_delay_s,
-        COALESCE(TRY_CAST(regexp_extract(robots,
-          'Request-rate: ([0-9]+)/[0-9]+', 1) AS BIGINT), 0) AS rate_docs,
-        COALESCE(TRY_CAST(regexp_extract(robots,
-          'Request-rate: [0-9]+/([0-9]+)', 1) AS BIGINT), 0) AS rate_secs
-      FROM r)
-    SELECT doc_id, crawl_delay_s,
-      CAST(CASE WHEN rate_docs > 0 THEN rate_secs * 1000 // rate_docs
-                ELSE -1 END AS BIGINT) AS rate_interval_ms,
-      CAST(GREATEST(500,
-                    CASE WHEN crawl_delay_s >= 0
-                         THEN crawl_delay_s * 1000 ELSE 0 END,
-                    CASE WHEN rate_docs > 0
-                         THEN rate_secs * 1000 // rate_docs ELSE 0 END)
-           AS BIGINT) AS effective_interval_ms
-    FROM p
-    """
-
-
-@query("crawl_delay_directive", _crawl_delay_oracle())
-def crawl_delay_directive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Politeness directives from robots.txt (round 4): the
-    ``Crawl-delay`` and ``Request-rate: docs/secs`` extensions most
-    large sites still serve — parsed per fetched robots body and
-    folded into ONE effective per-host fetch interval:
-    max(500ms floor, crawl-delay, request-rate spacing), the number
-    frontier_schedule spaces slots by. Battery plants delay-only,
-    neither (floor wins), rate-only, and both (the larger wins);
-    missing directives surface as -1 so the downstream join can tell
-    "absent" from "zero".
-
-    Scale shape: pure codegen regexp projection (integer-exact
-    division via floor-div on both engines); one row per robots
-    fetch, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 4
-    robots = F.concat(
-        F.lit("User-agent: *\n"),
-        F.when(v == 0, F.concat(
-            F.lit("Crawl-delay: "), (i % 10 + 1).cast("string"),
-            F.lit("\nDisallow: /tmp")))
-        .when(v == 1, F.lit("Disallow: /tmp"))
-        .when(v == 2, F.concat(
-            F.lit("Request-rate: 1/"), (i % 5 + 1).cast("string"),
-            F.lit("\nDisallow: /x")))
-        .otherwise(F.concat(
-            F.lit("Crawl-delay: "), (i % 3 + 1).cast("string"),
-            F.lit("\nRequest-rate: 1/"), (i % 7 + 2).cast("string"))),
-    )
-    r = d.select("doc_id", robots.alias("robots"))
-    cd_raw = F.regexp_extract(F.col("robots"), "Crawl-delay: ([0-9]+)", 1)
-    rd_raw = F.regexp_extract(
-        F.col("robots"), "Request-rate: ([0-9]+)/[0-9]+", 1
-    )
-    rs_raw = F.regexp_extract(
-        F.col("robots"), "Request-rate: [0-9]+/([0-9]+)", 1
-    )
-    p = r.select(
-        "doc_id",
-        F.when(cd_raw == "", F.lit(-1)).otherwise(cd_raw.cast("long"))
-        .alias("crawl_delay_s"),
-        F.when(rd_raw == "", F.lit(0)).otherwise(rd_raw.cast("long"))
-        .alias("rate_docs"),
-        F.when(rs_raw == "", F.lit(0)).otherwise(rs_raw.cast("long"))
-        .alias("rate_secs"),
-    )
-    from ocr_spark.operators.training import floor_div
-
-    rate_ms = floor_div(F.col("rate_secs") * 1000, F.col("rate_docs"))
-    return p.select(
-        "doc_id",
-        "crawl_delay_s",
-        F.when(F.col("rate_docs") > 0, rate_ms).otherwise(F.lit(-1))
-        .cast("long").alias("rate_interval_ms"),
-        F.greatest(
-            F.lit(500).cast("long"),
-            F.when(
-                F.col("crawl_delay_s") >= 0, F.col("crawl_delay_s") * 1000
-            ).otherwise(F.lit(0)).cast("long"),
-            F.when(F.col("rate_docs") > 0, rate_ms).otherwise(F.lit(0))
-            .cast("long"),
-        ).alias("effective_interval_ms"),
-    )
-
-
-def _parked_domain_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 5
-          WHEN 0 THEN '<title>example' || CAST(doc_id AS VARCHAR)
-            || '.com is for sale</title><body>This domain is for sale. '
-            || 'Buy this domain today!</body>'
-          WHEN 1 THEN '<title>Parked</title><body>Domain parking by '
-            || 'RegistrarCo. Renew or transfer.</body>'
-          WHEN 2 THEN '<title>Coming soon</title><body>Website coming '
-            || 'soon. Stay tuned ' || CAST(doc_id AS VARCHAR) || '</body>'
-          WHEN 3 THEN '<title>For Sale Signs Ltd</title><body>We sell '
-            || 'for sale signs and sign domains for your shopfront. '
-            || 'Our catalogue covers ' || CAST(doc_id % 40 + 30 AS VARCHAR)
-            || ' products across many categories with detailed specs '
-            || 'and reviews from real customers in many regions.</body>'
-          ELSE '<title>Article ' || CAST(doc_id AS VARCHAR)
-            || '</title><body>Regular editorial content about topic '
-            || CAST(doc_id AS VARCHAR) || ' with substantial discussion '
-            || 'and analysis written for readers not registrars.</body>'
-          END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id, html,
-        length(regexp_replace(html, '<[^>]+>', '', 'g')) AS text_len,
-        CASE WHEN regexp_matches(lower(regexp_extract(html,
-               '<title>(.*?)</title>', 1)),
-               '(is for sale|parked|domain parking)') THEN 1 ELSE 0 END
-          AS title_hit,
-        CASE WHEN regexp_matches(lower(html),
-               '(this domain is for sale|buy this domain|domain parking'
-               || '|renew or transfer|website coming soon)')
-             THEN 1 ELSE 0 END AS body_hit
-      FROM p)
-    SELECT doc_id, CAST(text_len AS BIGINT) AS text_len,
-      CAST(title_hit AS BIGINT) AS title_hit,
-      CAST(body_hit AS BIGINT) AS body_hit,
-      CAST(CASE WHEN title_hit = 1 OR (body_hit = 1 AND text_len < 120)
-                THEN 1 ELSE 0 END AS BIGINT) AS parked,
-      CASE WHEN title_hit = 1 THEN 'title_pattern'
-           WHEN body_hit = 1 AND text_len < 120 THEN 'body_pattern_short'
-           ELSE 'ok' END AS reason
-    FROM m
-    """
-
-
-@query("parked_domain_detect", _parked_domain_oracle())
-def parked_domain_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parked-domain detection (round 4): registrar placeholder pages
-    ("this domain is for sale", "domain parking", "coming soon") are
-    boilerplate-only hosts a crawl should drop whole — the
-    host-level sibling of soft404_detect's page-level check. Anchored
-    TITLE patterns convict outright; body phrases convict only on
-    thin pages (text < 120 chars), so the planted negative control —
-    a genuine shop selling "for sale" SIGNS with substantial copy —
-    stays clean, as does regular editorial content.
-
-    Scale shape: pure codegen regexp/length projection, no shuffle;
-    at host granularity the page verdicts roll up with a hash
-    aggregate (majority-parked host → drop the host).
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 5
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit("<title>example"), ds,
-            F.lit(".com is for sale</title><body>This domain is for "
-                  "sale. Buy this domain today!</body>")))
-        .when(v == 1, F.lit(
-            "<title>Parked</title><body>Domain parking by RegistrarCo. "
-            "Renew or transfer.</body>"))
-        .when(v == 2, F.concat(
-            F.lit("<title>Coming soon</title><body>Website coming soon. "
-                  "Stay tuned "), ds, F.lit("</body>")))
-        .when(v == 3, F.concat(
-            F.lit("<title>For Sale Signs Ltd</title><body>We sell for "
-                  "sale signs and sign domains for your shopfront. Our "
-                  "catalogue covers "),
-            (i % 40 + 30).cast("string"),
-            F.lit(" products across many categories with detailed specs "
-                  "and reviews from real customers in many regions."
-                  "</body>")))
-        .otherwise(F.concat(
-            F.lit("<title>Article "), ds,
-            F.lit("</title><body>Regular editorial content about topic "),
-            ds,
-            F.lit(" with substantial discussion and analysis written "
-                  "for readers not registrars.</body>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    text_len = F.length(F.regexp_replace(h, "<[^>]+>", ""))
-    title = F.lower(F.regexp_extract(h, "<title>(.*?)</title>", 1))
-    title_hit = F.when(
-        title.rlike("(is for sale|parked|domain parking)"), F.lit(1)
-    ).otherwise(F.lit(0))
-    body_hit = F.when(
-        F.lower(h).rlike(
-            "(this domain is for sale|buy this domain|domain parking"
-            "|renew or transfer|website coming soon)"
-        ),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    m = p.select(
-        "doc_id",
-        text_len.cast("long").alias("text_len"),
-        title_hit.cast("long").alias("title_hit"),
-        body_hit.cast("long").alias("body_hit"),
-    )
-    return m.select(
-        "doc_id", "text_len", "title_hit", "body_hit",
-        F.when(
-            (F.col("title_hit") == 1)
-            | ((F.col("body_hit") == 1) & (F.col("text_len") < 120)),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("parked"),
-        F.when(F.col("title_hit") == 1, F.lit("title_pattern"))
-        .when(
-            (F.col("body_hit") == 1) & (F.col("text_len") < 120),
-            F.lit("body_pattern_short"),
-        )
-        .otherwise(F.lit("ok"))
-        .alias("reason"),
-    )
-
-
-def _feed_items_oracle() -> str:
-    item = (
-        "'<item><title>Story ' || CAST(doc_id * 3 + {j} AS VARCHAR)"
-        " || '</title><link>https://f' || CAST(doc_id % 19 AS VARCHAR)"
-        " || '.example.org/s' || CAST(doc_id * 3 + {j} AS VARCHAR)"
-        " || '</link><pubDate>2024-' || lpad(CAST((doc_id + {j}) % 12 + 1"
-        " AS VARCHAR), 2, '0') || '-02</pubDate></item>'"
-    )
-    entry = (
-        "'<entry><title>Post ' || CAST(doc_id * 3 + {j} AS VARCHAR)"
-        " || '</title><link href=\"https://f' || CAST(doc_id % 19 AS"
-        " VARCHAR) || '.example.org/a' || CAST(doc_id * 3 + {j} AS"
-        " VARCHAR) || '\"/><updated>2024-' || lpad(CAST((doc_id + {j})"
-        " % 12 + 1 AS VARCHAR), 2, '0') || '-03</updated></entry>'"
-    )
-    return f"""
-    WITH p AS (
-      SELECT doc_id,
-        CASE WHEN doc_id % 2 = 0 THEN 'rss' ELSE 'atom' END AS kind,
-        CASE WHEN doc_id % 2 = 0 THEN
-          '<rss><channel><title>Ch</title>' || {item.format(j=0)}
-          || CASE WHEN doc_id % 3 > 0 THEN {item.format(j=1)} ELSE '' END
-          || CASE WHEN doc_id % 3 > 1 THEN {item.format(j=2)} ELSE '' END
-          || '</channel></rss>'
-        ELSE
-          '<feed><title>F</title>' || {entry.format(j=0)}
-          || CASE WHEN doc_id % 3 > 0 THEN {entry.format(j=1)} ELSE '' END
-          || '</feed>' END AS xml
-      FROM documents),
-    it AS (
-      SELECT doc_id, kind, i - 1 AS item_idx,
-        list_extract(regexp_extract_all(xml,
-          CASE WHEN kind = 'rss' THEN '<item>(.*?)</item>'
-               ELSE '<entry>(.*?)</entry>' END, 1), i) AS body
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(xml,
-        CASE WHEN kind = 'rss' THEN '<item>(.*?)</item>'
-             ELSE '<entry>(.*?)</entry>' END, 1)))) AS g(i))
-    SELECT doc_id, kind, CAST(item_idx AS BIGINT) AS item_idx,
-      regexp_extract(body, '<title>(.*?)</title>', 1) AS title,
-      CASE WHEN kind = 'rss'
-           THEN regexp_extract(body, '<link>(.*?)</link>', 1)
-           ELSE regexp_extract(body, '<link href="([^"]*)"', 1) END AS link,
-      CASE WHEN kind = 'rss'
-           THEN regexp_extract(body, '<pubDate>(.*?)</pubDate>', 1)
-           ELSE regexp_extract(body, '<updated>(.*?)</updated>', 1)
-           END AS published
-    FROM it
-    """
-
-
-@query("feed_item_parse", _feed_items_oracle())
-def feed_item_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feed-content parsing (round 4): feed_discovery finds the feed
-    urls; this parses the FEEDS — RSS 2.0 ``<item>`` and Atom
-    ``<entry>`` blocks (both planted, 1-3 items each) exploded to
-    (item_idx, title, link, published) rows, with the per-format link
-    convention honored (RSS element text vs Atom href attribute).
-    Feeds are how a recrawl discovers new articles without
-    re-spidering the site, so the parsed rows feed the frontier
-    directly.
-
-    Scale shape: item blocks extract as whole substrings first
-    (one regexp_extract_all), fields parse per exploded block —
-    posexplode keeps the index; no shuffle, rides the fetch scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-
-    def rss_item(j: int) -> Column:
-        return F.concat(
-            F.lit("<item><title>Story "), (i * 3 + j).cast("string"),
-            F.lit("</title><link>https://f"), (i % 19).cast("string"),
-            F.lit(".example.org/s"), (i * 3 + j).cast("string"),
-            F.lit("</link><pubDate>2024-"),
-            F.lpad(((i + j) % 12 + 1).cast("string"), 2, "0"),
-            F.lit("-02</pubDate></item>"),
-        )
-
-    def atom_entry(j: int) -> Column:
-        return F.concat(
-            F.lit("<entry><title>Post "), (i * 3 + j).cast("string"),
-            F.lit('</title><link href="https://f'), (i % 19).cast("string"),
-            F.lit(".example.org/a"), (i * 3 + j).cast("string"),
-            F.lit('"/><updated>2024-'),
-            F.lpad(((i + j) % 12 + 1).cast("string"), 2, "0"),
-            F.lit("-03</updated></entry>"),
-        )
-
-    kind = F.when(i % 2 == 0, F.lit("rss")).otherwise(F.lit("atom"))
-    xml = F.when(
-        i % 2 == 0,
-        F.concat(
-            F.lit("<rss><channel><title>Ch</title>"),
-            rss_item(0),
-            F.when(i % 3 > 0, rss_item(1)).otherwise(F.lit("")),
-            F.when(i % 3 > 1, rss_item(2)).otherwise(F.lit("")),
-            F.lit("</channel></rss>"),
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit("<feed><title>F</title>"),
-            atom_entry(0),
-            F.when(i % 3 > 0, atom_entry(1)).otherwise(F.lit("")),
-            F.lit("</feed>"),
-        )
-    )
-    p = d.select("doc_id", kind.alias("kind"), xml.alias("xml"))
-    blocks = F.when(
-        F.col("kind") == "rss",
-        F.regexp_extract_all(F.col("xml"), F.lit("<item>(.*?)</item>"), 1),
-    ).otherwise(
-        F.regexp_extract_all(F.col("xml"), F.lit("<entry>(.*?)</entry>"), 1)
-    )
-    it = p.select(
-        "doc_id", "kind",
-        F.posexplode(blocks).alias("item_idx", "body"),
-    )
-    b = F.col("body")
-    return it.select(
-        "doc_id", "kind",
-        F.col("item_idx").cast("long").alias("item_idx"),
-        F.regexp_extract(b, "<title>(.*?)</title>", 1).alias("title"),
-        F.when(
-            F.col("kind") == "rss",
-            F.regexp_extract(b, "<link>(.*?)</link>", 1),
-        ).otherwise(
-            F.regexp_extract(b, '<link href="([^"]*)"', 1)
-        ).alias("link"),
-        F.when(
-            F.col("kind") == "rss",
-            F.regexp_extract(b, "<pubDate>(.*?)</pubDate>", 1),
-        ).otherwise(
-            F.regexp_extract(b, "<updated>(.*?)</updated>", 1)
-        ).alias("published"),
-    )
-
-
-def _paywall_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<script type="application/ld+json">'
-            || '{"@type":"NewsArticle","isAccessibleForFree":false,'
-            || '"headline":"H' || CAST(doc_id AS VARCHAR) || '"}</script>'
-            || '<p>Teaser paragraph only.</p>'
-          WHEN 1 THEN '<p>First paragraph of article '
-            || CAST(doc_id AS VARCHAR) || '.</p>'
-            || '<div class="gate">Subscribe to continue reading.</div>'
-          WHEN 2 THEN '<script type="application/ld+json">'
-            || '{"@type":"Article","isAccessibleForFree":true}</script>'
-            || '<p>Full text ' || CAST(doc_id AS VARCHAR)
-            || '.</p><footer>Subscribe to our newsletter</footer>'
-          ELSE '<p>Open article ' || CAST(doc_id AS VARCHAR)
-            || ' with no gating at all.</p>' END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        CASE WHEN contains(html, '"isAccessibleForFree":false') THEN 1
-             WHEN contains(html, '"isAccessibleForFree":true') THEN 0
-             ELSE -1 END AS meta_flag,
-        CASE WHEN regexp_matches(lower(html),
-               '(subscribe to continue|to read this article'
-               || '|already a subscriber)') THEN 1 ELSE 0 END AS phrase_hit
-      FROM p)
-    SELECT doc_id, CAST(meta_flag AS BIGINT) AS meta_flag,
-      CAST(phrase_hit AS BIGINT) AS phrase_hit,
-      CAST(CASE WHEN meta_flag = 1 OR (meta_flag = -1 AND phrase_hit = 1)
-                THEN 1 ELSE 0 END AS BIGINT) AS paywalled,
-      CASE WHEN meta_flag = 1 THEN 'metadata'
-           WHEN meta_flag = -1 AND phrase_hit = 1 THEN 'phrase'
-           WHEN meta_flag = 0 THEN 'declared_free'
-           ELSE 'ok' END AS reason
-    FROM m
-    """
-
-
-@query("paywall_detect", _paywall_oracle())
-def paywall_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paywall detection (round 4): gated articles contribute only
-    their teaser to a training corpus, so the curation gate needs the
-    flag. Two signals with schema.org metadata taking precedence:
-    JSON-LD ``isAccessibleForFree`` (false convicts, true ACQUITS —
-    an explicit free declaration beats a stray phrase) and gate
-    phrases ("Subscribe to continue...") only when metadata is
-    absent. The negative controls: a declared-free article whose
-    footer says "Subscribe to our newsletter" (must stay clean — the
-    phrase list is gate-anchored) and an unmarked open article.
-
-    Scale shape: codegen contains/regexp projection, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type":"NewsArticle","isAccessibleForFree":false,'
-                  '"headline":"H'), ds,
-            F.lit('"}</script><p>Teaser paragraph only.</p>')))
-        .when(v == 1, F.concat(
-            F.lit("<p>First paragraph of article "), ds,
-            F.lit('.</p><div class="gate">Subscribe to continue '
-                  "reading.</div>")))
-        .when(v == 2, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type":"Article","isAccessibleForFree":true}'
-                  "</script><p>Full text "), ds,
-            F.lit(".</p><footer>Subscribe to our newsletter</footer>")))
-        .otherwise(F.concat(
-            F.lit("<p>Open article "), ds,
-            F.lit(" with no gating at all.</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    meta_flag = (
-        F.when(h.contains('"isAccessibleForFree":false'), F.lit(1))
-        .when(h.contains('"isAccessibleForFree":true'), F.lit(0))
-        .otherwise(F.lit(-1))
-    )
-    phrase_hit = F.when(
-        F.lower(h).rlike(
-            "(subscribe to continue|to read this article"
-            "|already a subscriber)"
-        ),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    m = p.select(
-        "doc_id",
-        meta_flag.cast("long").alias("meta_flag"),
-        phrase_hit.cast("long").alias("phrase_hit"),
-    )
-    return m.select(
-        "doc_id", "meta_flag", "phrase_hit",
-        F.when(
-            (F.col("meta_flag") == 1)
-            | ((F.col("meta_flag") == -1) & (F.col("phrase_hit") == 1)),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("paywalled"),
-        F.when(F.col("meta_flag") == 1, F.lit("metadata"))
-        .when(
-            (F.col("meta_flag") == -1) & (F.col("phrase_hit") == 1),
-            F.lit("phrase"),
-        )
-        .when(F.col("meta_flag") == 0, F.lit("declared_free"))
-        .otherwise(F.lit("ok"))
-        .alias("reason"),
-    )
-
-
-def _url_page_type_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        'https://t' || CAST(doc_id % 23 AS VARCHAR) || '.example.com' ||
-        CASE doc_id % 6
-          WHEN 0 THEN '/2024/' || lpad(CAST(doc_id % 12 + 1 AS VARCHAR),
-                      2, '0') || '/story-' || CAST(doc_id AS VARCHAR)
-          WHEN 1 THEN '/category/shoes-' || CAST(doc_id % 9 AS VARCHAR)
-                      || '/'
-          WHEN 2 THEN '/product/p' || CAST(doc_id AS VARCHAR)
-          WHEN 3 THEN '/search?q=term' || CAST(doc_id % 7 AS VARCHAR)
-          WHEN 4 THEN '/tag/topic' || CAST(doc_id % 11 AS VARCHAR) || '/'
-          ELSE '/about-' || CAST(doc_id % 5 AS VARCHAR) END AS url
-      FROM documents),
-    s AS (
-      SELECT doc_id, url,
-        regexp_extract(url, 'https://[^/]+(/[^?]*)', 1) AS path,
-        CASE WHEN regexp_matches(url, '/[0-9]{4}/[0-9]{2}/') THEN 1
-             ELSE 0 END AS has_date_path,
-        CASE WHEN url LIKE '%?%' THEN 1 ELSE 0 END AS has_query
-      FROM p)
-    SELECT doc_id, url,
-      CAST(has_date_path AS BIGINT) AS has_date_path,
-      CAST(has_query AS BIGINT) AS has_query,
-      CAST(length(path) - length(replace(path, '/', '')) AS BIGINT)
-        AS depth,
-      CASE WHEN has_date_path = 1 THEN 'article'
-           WHEN regexp_matches(path, '/product/p[0-9]+') THEN 'product'
-           WHEN has_query = 1 AND regexp_matches(url, '[?&]q=')
-             THEN 'search'
-           WHEN regexp_matches(path, '^/(category|tag)/') THEN 'taxonomy'
-           ELSE 'page' END AS page_type
-    FROM s
-    """
-
-
-@query("url_page_type", _url_page_type_oracle())
-def url_page_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL page-type classification (round 4): crawl budgeting and
-    corpus mixing both want to know — BEFORE fetching — whether a url
-    is an article, a product page, a taxonomy listing, or an on-site
-    search result (search results and taxonomy pages are near-pure
-    boilerplate; articles carry the training text). Path-shape
-    heuristics with explicit precedence: /YYYY/MM/ date paths →
-    article, /product/pNNN → product, ?q= → search,
-    /category|/tag prefixes → taxonomy, else page; plus the raw
-    signals (date flag, query flag, path depth) so a downstream
-    model can re-weight them.
-
-    Scale shape: pure codegen regexp/length projection, no shuffle;
-    runs on the frontier BEFORE fetch, which is the point.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 6
-    url = F.concat(
-        F.lit("https://t"), (i % 23).cast("string"), F.lit(".example.com"),
-        F.when(v == 0, F.concat(
-            F.lit("/2024/"), F.lpad((i % 12 + 1).cast("string"), 2, "0"),
-            F.lit("/story-"), ds))
-        .when(v == 1, F.concat(
-            F.lit("/category/shoes-"), (i % 9).cast("string"), F.lit("/")))
-        .when(v == 2, F.concat(F.lit("/product/p"), ds))
-        .when(v == 3, F.concat(F.lit("/search?q=term"),
-                               (i % 7).cast("string")))
-        .when(v == 4, F.concat(
-            F.lit("/tag/topic"), (i % 11).cast("string"), F.lit("/")))
-        .otherwise(F.concat(F.lit("/about-"), (i % 5).cast("string"))),
-    )
-    p = d.select("doc_id", url.alias("url"))
-    u = F.col("url")
-    path = F.regexp_extract(u, "https://[^/]+(/[^?]*)", 1)
-    has_date = F.when(u.rlike("/[0-9]{4}/[0-9]{2}/"), F.lit(1)).otherwise(
-        F.lit(0)
-    )
-    has_query = F.when(u.contains("?"), F.lit(1)).otherwise(F.lit(0))
-    s = p.select(
-        "doc_id", "url",
-        path.alias("path"),
-        has_date.cast("long").alias("has_date_path"),
-        has_query.cast("long").alias("has_query"),
-    )
-    return s.select(
-        "doc_id", "url", "has_date_path", "has_query",
-        (
-            F.length("path")
-            - F.length(F.replace(F.col("path"), F.lit("/"), F.lit("")))
-        ).cast("long").alias("depth"),
-        F.when(F.col("has_date_path") == 1, F.lit("article"))
-        .when(F.col("path").rlike("/product/p[0-9]+"), F.lit("product"))
-        .when(
-            (F.col("has_query") == 1) & F.col("url").rlike("[?&]q="),
-            F.lit("search"),
-        )
-        .when(F.col("path").rlike("^/(category|tag)/"), F.lit("taxonomy"))
-        .otherwise(F.lit("page"))
-        .alias("page_type"),
-    )
-
-
-def _dir_index_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<html><head><title>Index of /pub/data'
-            || CAST(doc_id AS VARCHAR) || '</title></head><body>'
-            || '<h1>Index of /pub/data' || CAST(doc_id AS VARCHAR)
-            || '</h1><pre><a href="../">../</a>' || chr(10)
-            || '<a href="f1.txt">f1.txt</a> 2024-01-01 123' || chr(10)
-            || '<a href="f2.csv">f2.csv</a> 2024-01-02 456' || chr(10)
-            || '</pre></body></html>'
-          WHEN 1 THEN '<html><head><title>Index of /mirror'
-            || CAST(doc_id AS VARCHAR) || '/</title></head><body>'
-            || '<h1>Index of /mirror' || CAST(doc_id AS VARCHAR)
-            || '/</h1><hr><pre><a href="../">../</a>' || chr(10)
-            || '<a href="iso/">iso/</a>' || chr(10) || '</pre><hr>'
-            || '</body></html>'
-          WHEN 2 THEN '<html><head><title>Index of economic indicators'
-            || '</title></head><body><p>The index of economic '
-            || 'indicators rose ' || CAST(doc_id % 9 AS VARCHAR)
-            || ' points this quarter.</p></body></html>'
-          ELSE '<html><head><title>Article ' || CAST(doc_id AS VARCHAR)
-            || '</title></head><body><p>Normal page.</p></body></html>'
-          END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        CASE WHEN regexp_matches(regexp_extract(html,
-               '<title>(.*?)</title>', 1), '^Index of /') THEN 1
-             ELSE 0 END AS title_hit,
-        CASE WHEN contains(html, '<a href="../">../</a>') THEN 1
-             ELSE 0 END AS parent_link,
-        len(regexp_extract_all(html, '<a href="[^"]+">', 0)) AS n_links
-      FROM p)
-    SELECT doc_id, CAST(title_hit AS BIGINT) AS title_hit,
-      CAST(parent_link AS BIGINT) AS parent_link,
-      CAST(CASE WHEN title_hit = 1 THEN n_links - 1 ELSE 0 END AS BIGINT)
-        AS n_entries,
-      CAST(CASE WHEN title_hit = 1 AND parent_link = 1 THEN 1 ELSE 0 END
-           AS BIGINT) AS is_autoindex
-    FROM m
-    """
-
-
-@query("directory_index_detect", _dir_index_oracle())
-def directory_index_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directory-listing detection (round 4): server autoindex pages
-    ("Index of /...") are link scaffolding with zero training text
-    but rich FILE discovery — a crawl wants them routed to the
-    frontier expander, not the text extractor. Convicts on the
-    ANCHORED title pattern ("^Index of /") plus the parent-directory
-    link every autoindex carries; the planted negative control — an
-    article titled "Index of economic indicators" — fails both the
-    anchor (no slash) and the parent link. n_entries counts the
-    listed links minus the parent.
-
-    Scale shape: codegen regexp/contains projection, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit("<html><head><title>Index of /pub/data"), ds,
-            F.lit("</title></head><body><h1>Index of /pub/data"), ds,
-            F.lit('</h1><pre><a href="../">../</a>\n'
-                  '<a href="f1.txt">f1.txt</a> 2024-01-01 123\n'
-                  '<a href="f2.csv">f2.csv</a> 2024-01-02 456\n'
-                  "</pre></body></html>")))
-        .when(v == 1, F.concat(
-            F.lit("<html><head><title>Index of /mirror"), ds,
-            F.lit("/</title></head><body><h1>Index of /mirror"), ds,
-            F.lit('/</h1><hr><pre><a href="../">../</a>\n'
-                  '<a href="iso/">iso/</a>\n</pre><hr></body></html>')))
-        .when(v == 2, F.concat(
-            F.lit("<html><head><title>Index of economic indicators"
-                  "</title></head><body><p>The index of economic "
-                  "indicators rose "), (i % 9).cast("string"),
-            F.lit(" points this quarter.</p></body></html>")))
-        .otherwise(F.concat(
-            F.lit("<html><head><title>Article "), ds,
-            F.lit("</title></head><body><p>Normal page.</p>"
-                  "</body></html>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    title_hit = F.when(
-        F.regexp_extract(h, "<title>(.*?)</title>", 1).rlike("^Index of /"),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    parent = F.when(
-        h.contains('<a href="../">../</a>'), F.lit(1)
-    ).otherwise(F.lit(0))
-    n_links = F.size(
-        F.regexp_extract_all(h, F.lit('<a href="[^"]+">'), 0)
-    )
-    m = p.select(
-        "doc_id",
-        title_hit.cast("long").alias("title_hit"),
-        parent.cast("long").alias("parent_link"),
-        n_links.alias("n_links"),
-    )
-    return m.select(
-        "doc_id", "title_hit", "parent_link",
-        F.when(F.col("title_hit") == 1, F.col("n_links") - 1)
-        .otherwise(F.lit(0)).cast("long").alias("n_entries"),
-        F.when(
-            (F.col("title_hit") == 1) & (F.col("parent_link") == 1),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("is_autoindex"),
-    )
-
-
-def _amp_cache_oracle() -> str:
-    return r"""
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 3
-          WHEN 0 THEN 'https://example-com.cdn.ampproject.org/c/s/'
-            || 'example.com/art' || CAST(doc_id AS VARCHAR)
-          WHEN 1 THEN 'https://ex' || CAST(doc_id % 7 AS VARCHAR)
-            || '-org.cdn.ampproject.org/c/ex' || CAST(doc_id % 7 AS VARCHAR)
-            || '.org/p' || CAST(doc_id AS VARCHAR)
-          ELSE 'https://img-example-com.cdn.ampproject.org/i/s/'
-            || 'img.example.com/pic' || CAST(doc_id AS VARCHAR) || '.jpg'
-          END AS cache_url
-      FROM documents),
-    m AS (
-      SELECT doc_id, cache_url,
-        regexp_extract(cache_url, 'ampproject\.org/([cir])/', 1) AS kind,
-        CASE WHEN regexp_matches(cache_url, 'ampproject\.org/[cir]/s/')
-             THEN 1 ELSE 0 END AS secure,
-        regexp_extract(cache_url,
-          'ampproject\.org/[cir]/(?:s/)?(.*)$', 1) AS rest
-      FROM p)
-    SELECT doc_id, cache_url, kind,
-      CAST(secure AS BIGINT) AS secure,
-      (CASE WHEN secure = 1 THEN 'https://' ELSE 'http://' END) || rest
-        AS origin_url
-    FROM m
-    """
-
-
-@query("amp_cache_url_decode", _amp_cache_oracle())
-def amp_cache_url_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AMP-cache URL decoding (round 4): Common Crawl is full of
-    ``*.cdn.ampproject.org`` cache urls — the SAME document as its
-    origin url, so url-level dedup undercounts unless the cache form
-    decodes back to the origin it proxies. The public cache url
-    grammar: ``/c/`` content, ``/i/`` image, ``/r/`` resource, with
-    ``s/`` marking an https origin (absent = http); everything after
-    is the origin host + path. All three kinds and both schemes
-    planted; pairs with amp_canonical_pairs (in-page pointers) —
-    this is the url-only path when the page body isn't fetched.
-
-    Scale shape: pure codegen regexp projection, no shuffle; runs on
-    the frontier url stream.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 3
-    cache_url = (
-        F.when(v == 0, F.concat(
-            F.lit("https://example-com.cdn.ampproject.org/c/s/"
-                  "example.com/art"), ds))
-        .when(v == 1, F.concat(
-            F.lit("https://ex"), (i % 7).cast("string"),
-            F.lit("-org.cdn.ampproject.org/c/ex"), (i % 7).cast("string"),
-            F.lit(".org/p"), ds))
-        .otherwise(F.concat(
-            F.lit("https://img-example-com.cdn.ampproject.org/i/s/"
-                  "img.example.com/pic"), ds, F.lit(".jpg")))
-    )
-    p = d.select("doc_id", cache_url.alias("cache_url"))
-    u = F.col("cache_url")
-    kind = F.regexp_extract(u, r"ampproject\.org/([cir])/", 1)
-    secure = F.when(
-        u.rlike(r"ampproject\.org/[cir]/s/"), F.lit(1)
-    ).otherwise(F.lit(0))
-    rest = F.regexp_extract(u, r"ampproject\.org/[cir]/(?:s/)?(.*)$", 1)
-    return p.select(
-        "doc_id", "cache_url",
-        kind.alias("kind"),
-        secure.cast("long").alias("secure"),
-        F.concat(
-            F.when(secure == 1, F.lit("https://")).otherwise(
-                F.lit("http://")
-            ),
-            rest,
-        ).alias("origin_url"),
-    )
-
-
-_INVISIBLE_CLASS = "[​‌‍﻿­]"
-
-
-def _zero_width_oracle() -> str:
-    return f"""
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 5
-          WHEN 0 THEN 'zero' || chr(8203) || 'width '
-                      || CAST(doc_id AS VARCHAR)
-          WHEN 1 THEN 'hy' || chr(173) || 'phen' || chr(173) || 'ated '
-                      || CAST(doc_id AS VARCHAR)
-          WHEN 2 THEN chr(65279) || 'bom-prefixed doc '
-                      || CAST(doc_id AS VARCHAR)
-          WHEN 3 THEN 'joined' || chr(8205) || 'pair' || chr(8204)
-                      || ' ' || CAST(doc_id AS VARCHAR)
-          ELSE 'clean text ' || CAST(doc_id AS VARCHAR) END AS s
-      FROM documents),
-    m AS (
-      SELECT doc_id, s,
-        regexp_replace(s, '{_INVISIBLE_CLASS}', '', 'g') AS cleaned
-      FROM p)
-    SELECT doc_id,
-      CAST(length(s) - length(cleaned) AS BIGINT) AS n_invisible,
-      cleaned
-    FROM m
-    """
-
-
-@query("zero_width_scrub", _zero_width_oracle())
-def zero_width_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Invisible-character scrubbing (round 4): zero-width spaces/
-    joiners, BOMs, and soft hyphens survive extraction invisibly,
-    then poison tokenization (one word becomes three tokens), exact
-    dedup (visually identical docs hash apart), and string matching
-    — and are a known watermark/evasion channel. Strips the
-    five-codepoint class (ZWSP/ZWNJ/ZWJ/BOM/SHY) and counts what was
-    removed; each codepoint planted separately plus a clean control.
-
-    Scale shape: one codegen regexp_replace + length fold, no
-    shuffle; rides the extraction scan before token counting.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 5
-    s = (
-        F.when(v == 0, F.concat(
-            F.lit("zero​width "), ds))
-        .when(v == 1, F.concat(
-            F.lit("hy­phen­ated "), ds))
-        .when(v == 2, F.concat(
-            F.lit("﻿bom-prefixed doc "), ds))
-        .when(v == 3, F.concat(
-            F.lit("joined‍pair‌ "), ds))
-        .otherwise(F.concat(F.lit("clean text "), ds))
-    )
-    p = d.select("doc_id", s.alias("s"))
-    cleaned = F.regexp_replace(F.col("s"), _INVISIBLE_CLASS, "")
-    return p.select(
-        "doc_id",
-        (F.length("s") - F.length(cleaned)).cast("long")
-        .alias("n_invisible"),
-        cleaned.alias("cleaned"),
-    )
-
-
 def _pct_normalize_oracle() -> str:
     # construction-derived: the EXPECTED normalized url assembles
     # directly from the same doc_id formula (unreserved escapes decode,
@@ -5392,7 +3394,7 @@ def _pct_normalize_oracle() -> str:
 
 @query("percent_encoding_normalize", _pct_normalize_oracle())
 def percent_encoding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percent-encoding normalization (round 4, RFC 3986 §6.2.2): the
+    """Percent-encoding normalization (RFC 3986 §6.2.2): the
     url-equivalence step url_canonicalize doesn't cover — '%41rticle'
     and 'Article' are the SAME url, and a dedup keyed on raw bytes
     counts them twice. Unreserved escapes (ALPHA/DIGIT/-._~) decode,
@@ -5433,2487 +3435,6 @@ def percent_encoding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _vtt_oracle() -> str:
-    cue = (
-        "'00:0' || CAST((doc_id + {j}) % 9 AS VARCHAR) || ':0'"
-        " || CAST({j} AS VARCHAR) || '.500 --> 00:0'"
-        " || CAST((doc_id + {j}) % 9 AS VARCHAR) || ':0'"
-        " || CAST({j} + 2 AS VARCHAR) || '.000'"
-        " || CASE WHEN {j} = 1 THEN ' align:start' ELSE '' END"
-        " || chr(10) || 'Caption line ' || CAST(doc_id * 3 + {j}"
-        " AS VARCHAR)"
-    )
-    return f"""
-    WITH p AS (
-      SELECT doc_id,
-        'WEBVTT' || chr(10) || chr(10) || {cue.format(j=0)}
-        || CASE WHEN doc_id % 3 > 0
-                THEN chr(10) || chr(10) || {cue.format(j=1)} ELSE '' END
-        || CASE WHEN doc_id % 3 > 1
-                THEN chr(10) || chr(10) || {cue.format(j=2)} ELSE '' END
-          AS vtt
-      FROM documents),
-    blocks AS (
-      SELECT doc_id, i - 1 AS block_idx,
-        list_extract(string_split(vtt, chr(10) || chr(10)), i) AS b
-      FROM p, unnest(generate_series(1,
-        len(string_split(vtt, chr(10) || chr(10))))) AS g(i)),
-    cues AS (
-      -- block 0 is the WEBVTT header; cue index = block index - 1
-      SELECT doc_id, block_idx - 1 AS cue_idx, b,
-        regexp_extract(b,
-          '([0-9]{{2}}):([0-9]{{2}}):([0-9]{{2}})\\.([0-9]{{3}}) -->', 0)
-          AS start_raw,
-        regexp_extract(b,
-          '--> ([0-9]{{2}}):([0-9]{{2}}):([0-9]{{2}})\\.([0-9]{{3}})', 0)
-          AS end_raw
-      FROM blocks WHERE contains(b, '-->')),
-    t AS (
-      SELECT doc_id, cue_idx, b,
-        CAST(regexp_extract(start_raw,
-          '([0-9]+):[0-9]+:[0-9]+\\.[0-9]+', 1) AS BIGINT) * 3600000
-        + CAST(regexp_extract(start_raw,
-          '[0-9]+:([0-9]+):[0-9]+\\.[0-9]+', 1) AS BIGINT) * 60000
-        + CAST(regexp_extract(start_raw,
-          '[0-9]+:[0-9]+:([0-9]+)\\.[0-9]+', 1) AS BIGINT) * 1000
-        + CAST(regexp_extract(start_raw,
-          '[0-9]+:[0-9]+:[0-9]+\\.([0-9]+)', 1) AS BIGINT) AS start_ms,
-        CAST(regexp_extract(end_raw,
-          '([0-9]+):[0-9]+:[0-9]+\\.[0-9]+', 1) AS BIGINT) * 3600000
-        + CAST(regexp_extract(end_raw,
-          '[0-9]+:([0-9]+):[0-9]+\\.[0-9]+', 1) AS BIGINT) * 60000
-        + CAST(regexp_extract(end_raw,
-          '[0-9]+:[0-9]+:([0-9]+)\\.[0-9]+', 1) AS BIGINT) * 1000
-        + CAST(regexp_extract(end_raw,
-          '[0-9]+:[0-9]+:[0-9]+\\.([0-9]+)', 1) AS BIGINT) AS end_ms
-      FROM cues)
-    SELECT doc_id, CAST(cue_idx AS BIGINT) AS cue_idx, start_ms, end_ms,
-      end_ms - start_ms AS duration_ms,
-      regexp_extract(b, chr(10) || '(.*)$', 1) AS text,
-      CASE WHEN contains(b, ' align:start') THEN 'align:start' ELSE ''
-        END AS settings
-    FROM t
-    """
-
-
-@query("vtt_caption_parse", _vtt_oracle())
-def vtt_caption_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebVTT caption parsing (round 4): subtitle tracks are aligned
-    speech-text pairs — prime multimodal training data — and they
-    arrive as WebVTT cue blocks. Blocks split on blank lines, cues
-    keep their index, HH:MM:SS.mmm timestamps fold to integer
-    milliseconds (exact on both engines), cue settings (align:...)
-    separate from the caption text, and the header block (no '-->')
-    drops. 1-3 cues per document with a planted settings rotation.
-
-    Scale shape: split + posexplode + codegen regexp/arithmetic, no
-    shuffle, no UDF; rides the media-sidecar scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-
-    def cue(j: int) -> Column:
-        return F.concat(
-            F.lit("00:0"), ((i + j) % 9).cast("string"),
-            F.lit(":0"), F.lit(str(j)),
-            F.lit(".500 --> 00:0"), ((i + j) % 9).cast("string"),
-            F.lit(":0"), F.lit(str(j + 2)), F.lit(".000"),
-            F.lit(" align:start") if j == 1 else F.lit(""),
-            F.lit("\nCaption line "), (i * 3 + j).cast("string"),
-        )
-
-    vtt = F.concat(
-        F.lit("WEBVTT\n\n"), cue(0),
-        F.when(i % 3 > 0, F.concat(F.lit("\n\n"), cue(1)))
-        .otherwise(F.lit("")),
-        F.when(i % 3 > 1, F.concat(F.lit("\n\n"), cue(2)))
-        .otherwise(F.lit("")),
-    )
-    p = d.select("doc_id", vtt.alias("vtt"))
-    blocks = p.select(
-        "doc_id",
-        F.posexplode(F.split(F.col("vtt"), "\n\n")).alias("bi", "b"),
-    )
-    cues = blocks.where(F.col("b").contains("-->")).select(
-        "doc_id",
-        (F.col("bi") - 1).cast("long").alias("cue_idx"),
-        "b",
-    )
-
-    def ts_ms(raw: Column) -> Column:
-        # one regex pass per timestamp: HH:MM:SS.mmm splits on [:.]
-        f = F.split(raw, r"[:.]")
-        return (
-            F.element_at(f, 1).cast("long") * 3600000
-            + F.element_at(f, 2).cast("long") * 60000
-            + F.element_at(f, 3).cast("long") * 1000
-            + F.element_at(f, 4).cast("long")
-        )
-
-    start_raw = F.regexp_extract(
-        F.col("b"), r"([0-9]{2}:[0-9]{2}:[0-9]{2}\.[0-9]{3}) -->", 1
-    )
-    end_raw = F.regexp_extract(
-        F.col("b"), r"--> ([0-9]{2}:[0-9]{2}:[0-9]{2}\.[0-9]{3})", 1
-    )
-    t = cues.select(
-        "doc_id", "cue_idx", "b",
-        ts_ms(start_raw).alias("start_ms"),
-        ts_ms(end_raw).alias("end_ms"),
-    )
-    return t.select(
-        "doc_id", "cue_idx", "start_ms", "end_ms",
-        (F.col("end_ms") - F.col("start_ms")).alias("duration_ms"),
-        F.regexp_extract(F.col("b"), "\n(.*)$", 1).alias("text"),
-        F.when(F.col("b").contains(" align:start"), F.lit("align:start"))
-        .otherwise(F.lit(""))
-        .alias("settings"),
-    )
-
-
-def _data_url_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 3
-          WHEN 0 THEN 'data:image/png;base64,'
-            || to_base64(CAST('fakepng-' || CAST(doc_id AS VARCHAR)
-                              AS BLOB))
-          WHEN 1 THEN 'data:text/plain,Hello%20doc%20'
-            || CAST(doc_id AS VARCHAR)
-          ELSE 'data:application/json;base64,'
-            || to_base64(CAST('{"id":' || CAST(doc_id AS VARCHAR) || '}'
-                              AS BLOB)) END AS src
-      FROM documents),
-    m AS (
-      SELECT doc_id, src,
-        regexp_extract(src, '^data:([^;,]+)', 1) AS mime,
-        CASE WHEN contains(src, ';base64,') THEN 1 ELSE 0 END AS is_base64,
-        regexp_extract(src, ',(.*)$', 1) AS payload
-      FROM p),
-    dec AS (
-      SELECT doc_id, mime, is_base64,
-        CASE WHEN is_base64 = 1 THEN from_base64(payload)
-             ELSE CAST(replace(payload, '%20', ' ') AS BLOB) END AS bytes_
-      FROM m)
-    SELECT doc_id, mime, CAST(is_base64 AS BIGINT) AS is_base64,
-      CAST(octet_length(bytes_) AS BIGINT) AS decoded_len,
-      md5(lower(hex(bytes_))) AS decoded_md5
-    FROM dec
-    """
-
-
-@query("data_url_media", _data_url_oracle())
-def data_url_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inline data-url decoding (round 4): pages embed small media as
-    ``data:`` urls — base64 payloads (images, fonts) and
-    percent-encoded text forms — which a media pipeline must route
-    like fetched bytes (the decoded payload feeds the same magic
-    sniff + codec dispatch as a network response). Parses the RFC
-    2397 grammar (mime, optional ;base64 marker, payload after the
-    first comma), decodes both forms, and emits byte length + md5 so
-    the decode is value-checked end-to-end against DuckDB's
-    independent base64/blob machinery.
-
-    Scale shape: codegen regexp + unbase64/md5 projection, no UDF, no
-    shuffle; rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 3
-    src = (
-        F.when(v == 0, F.concat(
-            F.lit("data:image/png;base64,"),
-            F.base64(F.encode(F.concat(F.lit("fakepng-"), ds), "utf-8"))))
-        .when(v == 1, F.concat(
-            F.lit("data:text/plain,Hello%20doc%20"), ds))
-        .otherwise(F.concat(
-            F.lit("data:application/json;base64,"),
-            F.base64(F.encode(
-                F.concat(F.lit('{"id":'), ds, F.lit("}")), "utf-8"))))
-    )
-    p = d.select("doc_id", src.alias("src"))
-    s = F.col("src")
-    mime = F.regexp_extract(s, "^data:([^;,]+)", 1)
-    is_b64 = F.when(s.contains(";base64,"), F.lit(1)).otherwise(F.lit(0))
-    payload = F.regexp_extract(s, ",(.*)$", 1)
-    bytes_ = F.when(is_b64 == 1, F.unbase64(payload)).otherwise(
-        F.encode(F.replace(payload, F.lit("%20"), F.lit(" ")), "utf-8")
-    )
-    m = p.select(
-        "doc_id",
-        mime.alias("mime"),
-        is_b64.cast("long").alias("is_base64"),
-        bytes_.alias("bytes_"),
-    )
-    # md5 over the lowercase hex of the bytes: DuckDB's md5 is
-    # VARCHAR-only, and the hex transport makes the comparison
-    # byte-encoding-agnostic on both engines
-    return m.select(
-        "doc_id", "mime", "is_base64",
-        F.length("bytes_").cast("long").alias("decoded_len"),
-        F.md5(F.lower(F.hex(F.col("bytes_")))).alias("decoded_md5"),
-    )
-
-
-def _code_blocks_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<p>Intro with inline <code>x=1</code> snippet.</p>'
-        || CASE doc_id % 3
-             WHEN 0 THEN '<pre><code class="language-python">def f'
-               || CAST(doc_id AS VARCHAR) || '():' || chr(10)
-               || '    return ' || CAST(doc_id % 7 AS VARCHAR)
-               || '</code></pre>'
-             WHEN 1 THEN '<pre><code>SELECT ' || CAST(doc_id AS VARCHAR)
-               || ';</code></pre><pre><code class="language-js">let n='
-               || CAST(doc_id AS VARCHAR) || ';</code></pre>'
-             ELSE '<pre>plain block ' || CAST(doc_id AS VARCHAR)
-               || '</pre>' END AS html
-      FROM documents),
-    fenced AS (
-      SELECT doc_id,
-        regexp_extract_all(html,
-          '<pre><code([^>]*)>(?s)(.*?)</code></pre>', 1) AS attrs,
-        regexp_extract_all(html,
-          '<pre><code([^>]*)>(?s)(.*?)</code></pre>', 2) AS bodies
-      FROM p),
-    frows AS (
-      SELECT doc_id, i - 1 AS block_idx,
-        regexp_extract(attrs[i], 'language-([a-z]+)', 1) AS lang,
-        bodies[i] AS code
-      FROM fenced, unnest(generate_series(1, len(bodies))) AS g(i)),
-    brows AS (
-      -- content-driven: '<pre>([^<]+)' can never match a fenced block
-      -- (those have '<code' right after '<pre>'), so no residue filter
-      SELECT doc_id, 0 AS block_idx, '' AS lang,
-        regexp_extract(html, '<pre>([^<]+)</pre>', 1) AS code
-      FROM p WHERE regexp_extract(html, '<pre>([^<]+)</pre>', 1) <> ''),
-    allrows AS (
-      SELECT * FROM frows UNION ALL SELECT * FROM brows)
-    SELECT doc_id, CAST(block_idx AS BIGINT) AS block_idx, lang, code,
-      CAST(length(code) - length(replace(code, chr(10), '')) + 1
-           AS BIGINT) AS n_lines,
-      CAST(length(code) AS BIGINT) AS n_chars
-    FROM allrows
-    """
-
-
-@query("code_block_extract", _code_blocks_oracle())
-def code_block_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Code-block extraction (round 4): fenced ``<pre><code>`` blocks
-    are the code-corpus half of a web training set and need different
-    handling from prose (no whitespace collapse, language routing, a
-    code-vs-text mixture knob). Extracts fenced blocks with their
-    ``language-*`` class hint (attrs and bodies come from the SAME
-    regex so positions can't skew), bare ``<pre>`` blocks without a
-    hint, and ignores INLINE ``<code>`` spans (planted on every page
-    — prose, not a block). Multi-line bodies keep their newlines;
-    n_lines/n_chars feed the mixture accounting.
-
-    Scale shape: regexp_extract_all + posexplode, no shuffle; rides
-    the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 3
-    html = F.concat(
-        F.lit("<p>Intro with inline <code>x=1</code> snippet.</p>"),
-        F.when(v == 0, F.concat(
-            F.lit('<pre><code class="language-python">def f'), ds,
-            F.lit("():\n    return "), (i % 7).cast("string"),
-            F.lit("</code></pre>")))
-        .when(v == 1, F.concat(
-            F.lit("<pre><code>SELECT "), ds,
-            F.lit(';</code></pre><pre><code class="language-js">let n='),
-            ds, F.lit(";</code></pre>")))
-        .otherwise(F.concat(
-            F.lit("<pre>plain block "), ds, F.lit("</pre>"))),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    pat = "<pre><code([^>]*)>(?s)(.*?)</code></pre>"
-    attrs = F.regexp_extract_all(F.col("html"), F.lit(pat), 1)
-    bodies = F.regexp_extract_all(F.col("html"), F.lit(pat), 2)
-    frows = (
-        p.select(
-            "doc_id", attrs.alias("attrs"),
-            F.posexplode(bodies).alias("block_idx", "code"),
-        )
-        .select(
-            "doc_id",
-            F.col("block_idx").cast("long").alias("block_idx"),
-            F.regexp_extract(
-                F.element_at(F.col("attrs"), F.col("block_idx") + 1),
-                "language-([a-z]+)", 1,
-            ).alias("lang"),
-            "code",
-        )
-    )
-    bare = F.regexp_extract(F.col("html"), "<pre>([^<]+)</pre>", 1)
-    brows = p.where(bare != "").select(
-        "doc_id",
-        F.lit(0).cast("long").alias("block_idx"),
-        F.lit("").alias("lang"),
-        bare.alias("code"),
-    )
-    allrows = frows.unionByName(brows)
-    return allrows.select(
-        "doc_id", "block_idx", "lang", "code",
-        (
-            F.length("code")
-            - F.length(F.replace(F.col("code"), F.lit("\n"), F.lit("")))
-            + 1
-        ).cast("long").alias("n_lines"),
-        F.length("code").cast("long").alias("n_chars"),
-    )
-
-
-def _kind_rows(
-    p: DataFrame, text_col: str, kind_col: str, kind: str,
-    pattern: str, val_col: str,
-) -> DataFrame:
-    """posexplode the group-1 matches of ``pattern`` over ``text_col``
-    with a literal kind tag — the shared shape under math_extract and
-    doi_citation_extract."""
-    return p.select(
-        "doc_id",
-        F.lit(kind).alias(kind_col),
-        F.posexplode(
-            F.regexp_extract_all(F.col(text_col), F.lit(pattern), 1)
-        ).alias("idx", val_col),
-    ).select(
-        "doc_id", kind_col,
-        F.col("idx").cast("long").alias("idx"),
-        val_col,
-    )
-
-
-def _math_extract_oracle() -> str:
-    return r"""
-    WITH p AS (
-      SELECT doc_id,
-        '<p>Result: \(x^2 + ' || CAST(doc_id % 9 AS VARCHAR)
-        || '\) holds.</p>'
-        || CASE WHEN doc_id % 2 = 0
-                THEN '<p>$$\int_0^' || CAST(doc_id % 5 + 1 AS VARCHAR)
-                     || ' f(t) dt$$</p>' ELSE '' END
-        || CASE WHEN doc_id % 4 = 1
-                THEN '<math><mi>n</mi><mn>' || CAST(doc_id % 8 AS VARCHAR)
-                     || '</mn></math>' ELSE '' END AS html
-      FROM documents),
-    inl AS (
-      SELECT doc_id, 'inline' AS kind, i - 1 AS idx,
-        list_extract(regexp_extract_all(html,
-          '\\\(((?:[^\\]|\\[^)])*)\\\)', 1), i) AS expr
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '\\\(((?:[^\\]|\\[^)])*)\\\)', 1)))) AS g(i)),
-    disp AS (
-      SELECT doc_id, 'display' AS kind, i - 1 AS idx,
-        list_extract(regexp_extract_all(html,
-          '\$\$(.*?)\$\$', 1), i) AS expr
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '\$\$(.*?)\$\$', 1)))) AS g(i)),
-    mml AS (
-      SELECT doc_id, 'mathml' AS kind, i - 1 AS idx,
-        list_extract(regexp_extract_all(html,
-          '<math>(.*?)</math>', 1), i) AS expr
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<math>(.*?)</math>', 1)))) AS g(i))
-    SELECT doc_id, kind, CAST(idx AS BIGINT) AS idx, expr
-    FROM (SELECT * FROM inl UNION ALL SELECT * FROM disp
-          UNION ALL SELECT * FROM mml)
-    """
-
-
-@query("math_extract", _math_extract_oracle())
-def math_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Math-notation extraction (round 4): LaTeX and MathML survive
-    naive extraction as mangled token soup, so a math-aware corpus
-    wants the expressions lifted out intact and marked by notation
-    kind — inline ``\\(...\\)``, display ``$$...$$``, and ``<math>``
-    MathML all planted (inline on every page, the others on
-    residues). Each kind extracts with its own delimiter-aware
-    pattern and keeps a per-kind index.
-
-    Scale shape: three regexp_extract_all + posexplode unions, no
-    shuffle; rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v2 = i % 2
-    v4 = i % 4
-    html = F.concat(
-        F.lit(r"<p>Result: \(x^2 + "), (i % 9).cast("string"),
-        F.lit(r"\) holds.</p>"),
-        F.when(v2 == 0, F.concat(
-            F.lit(r"<p>$$\int_0^"), (i % 5 + 1).cast("string"),
-            F.lit(" f(t) dt$$</p>"))).otherwise(F.lit("")),
-        F.when(v4 == 1, F.concat(
-            F.lit("<math><mi>n</mi><mn>"), (i % 8).cast("string"),
-            F.lit("</mn></math>"))).otherwise(F.lit("")),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    inl = _kind_rows(
-        p, "html", "kind", "inline", r"\\\(((?:[^\\]|\\[^)])*)\\\)", "expr"
-    )
-    disp = _kind_rows(p, "html", "kind", "display", r"\$\$(.*?)\$\$", "expr")
-    mml = _kind_rows(p, "html", "kind", "mathml", "<math>(.*?)</math>", "expr")
-    return inl.unionByName(disp).unionByName(mml)
-
-
-def _citation_oracle() -> str:
-    return r"""
-    WITH p AS (
-      SELECT doc_id,
-        'As shown in doi:10.1234/jx.' || CAST(doc_id AS VARCHAR)
-        || ' and <a href="https://doi.org/10.5555/conf.'
-        || CAST(doc_id AS VARCHAR) || '">[2]</a>'
-        || CASE WHEN doc_id % 2 = 0
-                THEN ' (see arXiv:24' || lpad(CAST(doc_id % 12 + 1 AS
-                     VARCHAR), 2, '0') || '.' || lpad(CAST(doc_id % 100000
-                     AS VARCHAR), 5, '0') || ')' ELSE '' END
-        || ' the result holds.' AS text
-      FROM documents),
-    dois AS (
-      SELECT doc_id, 'doi' AS ref_kind, i - 1 AS idx,
-        list_extract(regexp_extract_all(text,
-          '(10\.[0-9]{4,}/[^\s<">)]+)', 1), i) AS ident
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(text,
-        '(10\.[0-9]{4,}/[^\s<">)]+)', 1)))) AS g(i)),
-    arx AS (
-      SELECT doc_id, 'arxiv' AS ref_kind, i - 1 AS idx,
-        list_extract(regexp_extract_all(text,
-          'arXiv:([0-9]{4}\.[0-9]{4,5})', 1), i) AS ident
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(text,
-        'arXiv:([0-9]{4}\.[0-9]{4,5})', 1)))) AS g(i))
-    SELECT doc_id, ref_kind, CAST(idx AS BIGINT) AS idx, ident
-    FROM (SELECT * FROM dois UNION ALL SELECT * FROM arx)
-    """
-
-
-@query("doi_citation_extract", _citation_oracle())
-def doi_citation_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scholarly-identifier extraction (round 4): DOIs and arXiv ids
-    are the join keys between web text and the academic graph —
-    deduplicating a paper against its landing page, linking citing
-    passages, and filtering for academic-domain mixtures all start
-    here. DOIs match the ``10.NNNN/suffix`` registrant grammar in
-    both bare (``doi:...``) and resolver-url forms (the url's host
-    isn't captured — the identifier is host-independent); arXiv ids
-    match the modern ``YYMM.NNNNN`` scheme. Per-kind index kept.
-
-    Scale shape: two regexp_extract_all + posexplode unions, no
-    shuffle; rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    text = F.concat(
-        F.lit("As shown in doi:10.1234/jx."), ds,
-        F.lit(' and <a href="https://doi.org/10.5555/conf.'), ds,
-        F.lit('">[2]</a>'),
-        F.when(i % 2 == 0, F.concat(
-            F.lit(" (see arXiv:24"),
-            F.lpad((i % 12 + 1).cast("string"), 2, "0"),
-            F.lit("."),
-            F.lpad((i % 100000).cast("string"), 5, "0"),
-            F.lit(")"))).otherwise(F.lit("")),
-        F.lit(" the result holds."),
-    )
-    p = d.select("doc_id", text.alias("text"))
-    dois = _kind_rows(
-        p, "text", "ref_kind", "doi", r'(10\.[0-9]{4,}/[^\s<">)]+)', "ident"
-    )
-    arx = _kind_rows(
-        p, "text", "ref_kind", "arxiv", r"arXiv:([0-9]{4}\.[0-9]{4,5})",
-        "ident",
-    )
-    return dois.unionByName(arx)
-
-
-def _license_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 5
-          WHEN 0 THEN '<link rel="license" '
-            || 'href="https://creativecommons.org/licenses/by/4.0/">'
-            || '<p>Article ' || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 1 THEN '<p>Post ' || CAST(doc_id AS VARCHAR) || '</p>'
-            || '<a rel="license" '
-            || 'href="https://creativecommons.org/licenses/by-sa/3.0/">'
-            || 'CC BY-SA</a>'
-          WHEN 2 THEN '<meta name="license" content="MIT"><p>Readme '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 3 THEN '<p>Story ' || CAST(doc_id AS VARCHAR)
-            || '</p><footer>© 2024 Example. All rights reserved.'
-            || '</footer>'
-          ELSE '<p>Unmarked page ' || CAST(doc_id AS VARCHAR) || '</p>'
-          END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        regexp_extract(html,
-          'rel="license" href="([^"]+)"', 1) AS lic_url,
-        regexp_extract(html,
-          '<meta name="license" content="([^"]+)"', 1) AS lic_meta,
-        CASE WHEN contains(html, 'All rights reserved') THEN 1 ELSE 0 END
-          AS arr
-      FROM p),
-    c AS (
-      SELECT doc_id,
-        CASE WHEN lic_url <> '' THEN 'link'
-             WHEN lic_meta <> '' THEN 'meta'
-             WHEN arr = 1 THEN 'phrase'
-             ELSE 'none' END AS source,
-        CASE WHEN lic_url <> '' THEN
-               'cc-' || regexp_extract(lic_url,
-                 'licenses/([a-z-]+)/([0-9.]+)', 1)
-               || '-' || regexp_extract(lic_url,
-                 'licenses/([a-z-]+)/([0-9.]+)', 2)
-             WHEN lic_meta <> '' THEN lower(lic_meta)
-             WHEN arr = 1 THEN 'all-rights-reserved'
-             ELSE 'unknown' END AS license
-      FROM m)
-    SELECT doc_id, source, license,
-      CAST(CASE WHEN license LIKE 'cc-%' OR license = 'mit'
-                THEN 1 ELSE 0 END AS BIGINT) AS permissive
-    FROM c
-    """
-
-
-@query("license_detect", _license_oracle())
-def license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-license detection (round 4): the curation signal legal
-    review actually asks for — pages declaring Creative Commons (the
-    ``rel="license"`` link with the license family+version parsed
-    out of the url), an explicit license meta, or an "All rights
-    reserved" footer, with declared markup beating footer phrases
-    and a conservative ``unknown`` for unmarked pages. The
-    ``permissive`` bit is the mixture-building filter (CC-* / MIT
-    here; the policy table is the caller's).
-
-    Scale shape: pure codegen regexp/contains projection, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 5
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<link rel="license" href="https://creativecommons.org'
-                  '/licenses/by/4.0/"><p>Article '), ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit("<p>Post "), ds,
-            F.lit('</p><a rel="license" href="https://creativecommons.org'
-                  '/licenses/by-sa/3.0/">CC BY-SA</a>')))
-        .when(v == 2, F.concat(
-            F.lit('<meta name="license" content="MIT"><p>Readme '), ds,
-            F.lit("</p>")))
-        .when(v == 3, F.concat(
-            F.lit("<p>Story "), ds,
-            F.lit("</p><footer>© 2024 Example. All rights reserved."
-                  "</footer>")))
-        .otherwise(F.concat(F.lit("<p>Unmarked page "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    lic_url = F.regexp_extract(h, 'rel="license" href="([^"]+)"', 1)
-    lic_meta = F.regexp_extract(
-        h, '<meta name="license" content="([^"]+)"', 1
-    )
-    arr = F.when(h.contains("All rights reserved"), F.lit(1)).otherwise(
-        F.lit(0)
-    )
-    m = p.select(
-        "doc_id",
-        lic_url.alias("lic_url"),
-        lic_meta.alias("lic_meta"),
-        arr.alias("arr"),
-    )
-    fam = F.regexp_extract(
-        F.col("lic_url"), "licenses/([a-z-]+)/([0-9.]+)", 1
-    )
-    ver = F.regexp_extract(
-        F.col("lic_url"), "licenses/([a-z-]+)/([0-9.]+)", 2
-    )
-    c = m.select(
-        "doc_id",
-        F.when(F.col("lic_url") != "", F.lit("link"))
-        .when(F.col("lic_meta") != "", F.lit("meta"))
-        .when(F.col("arr") == 1, F.lit("phrase"))
-        .otherwise(F.lit("none"))
-        .alias("source"),
-        F.when(
-            F.col("lic_url") != "",
-            F.concat(F.lit("cc-"), fam, F.lit("-"), ver),
-        )
-        .when(F.col("lic_meta") != "", F.lower(F.col("lic_meta")))
-        .when(F.col("arr") == 1, F.lit("all-rights-reserved"))
-        .otherwise(F.lit("unknown"))
-        .alias("license"),
-    )
-    return c.select(
-        "doc_id", "source", "license",
-        F.when(
-            F.col("license").startswith("cc-")
-            | (F.col("license") == "mit"),
-            F.lit(1),
-        ).otherwise(F.lit(0)).cast("long").alias("permissive"),
-    )
-
-
-def _embed_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<p>Watch this:</p>'
-        || CASE doc_id % 4
-             WHEN 0 THEN '<iframe src="https://www.youtube.com/embed/vid'
-               || CAST(doc_id AS VARCHAR) || 'x"></iframe>'
-             WHEN 1 THEN '<iframe src="https://player.vimeo.com/video/'
-               || CAST(doc_id * 7 AS VARCHAR) || '"></iframe>'
-             WHEN 2 THEN '<iframe src="https://www.youtube-nocookie.com'
-               || '/embed/nc' || CAST(doc_id AS VARCHAR) || '"></iframe>'
-               || '<iframe src="https://maps.example.com/widget'
-               || CAST(doc_id AS VARCHAR) || '"></iframe>'
-             ELSE '' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, i - 1 AS embed_idx,
-        list_extract(regexp_extract_all(html,
-          '<iframe src="([^"]+)"', 1), i) AS src
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<iframe src="([^"]+)"', 1)))) AS g(i))
-    SELECT doc_id, CAST(embed_idx AS BIGINT) AS embed_idx, src,
-      CASE WHEN regexp_matches(src,
-             'youtube(-nocookie)?\\.com/embed/') THEN 'youtube'
-           WHEN contains(src, 'player.vimeo.com/video/') THEN 'vimeo'
-           ELSE 'other' END AS provider,
-      CASE WHEN regexp_matches(src,
-             'youtube(-nocookie)?\\.com/embed/')
-           THEN regexp_extract(src, '/embed/([^?/"]+)', 1)
-           WHEN contains(src, 'player.vimeo.com/video/')
-           THEN regexp_extract(src, '/video/([0-9]+)', 1)
-           ELSE '' END AS video_id
-    FROM fr
-    """
-
-
-@query("embed_extract", _embed_oracle())
-def embed_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-embed extraction (round 4): iframe embeds are the
-    text-video pairing source — the page supplies the caption-rich
-    context, the provider/video-id supplies the media key for the
-    multimodal join. Extracts every iframe src in order, classifies
-    the provider (YouTube incl. the nocookie domain, Vimeo, other),
-    and parses the provider-specific video id; a non-video iframe
-    (an embedded map) is planted to land in 'other' with no id.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    classification, no shuffle; rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = F.concat(
-        F.lit("<p>Watch this:</p>"),
-        F.when(v == 0, F.concat(
-            F.lit('<iframe src="https://www.youtube.com/embed/vid'), ds,
-            F.lit('x"></iframe>')))
-        .when(v == 1, F.concat(
-            F.lit('<iframe src="https://player.vimeo.com/video/'),
-            (i * 7).cast("string"), F.lit('"></iframe>')))
-        .when(v == 2, F.concat(
-            F.lit('<iframe src="https://www.youtube-nocookie.com/embed/nc'),
-            ds,
-            F.lit('"></iframe>'
-                  '<iframe src="https://maps.example.com/widget'),
-            ds, F.lit('"></iframe>')))
-        .otherwise(F.lit("")),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("html"), F.lit('<iframe src="([^"]+)"'), 1
-            )
-        ).alias("embed_idx", "src"),
-    )
-    s = F.col("src")
-    is_yt = s.rlike(r"youtube(-nocookie)?\.com/embed/")
-    is_vm = s.contains("player.vimeo.com/video/")
-    return fr.select(
-        "doc_id",
-        F.col("embed_idx").cast("long").alias("embed_idx"),
-        "src",
-        F.when(is_yt, F.lit("youtube"))
-        .when(is_vm, F.lit("vimeo"))
-        .otherwise(F.lit("other"))
-        .alias("provider"),
-        F.when(is_yt, F.regexp_extract(s, '/embed/([^?/"]+)', 1))
-        .when(is_vm, F.regexp_extract(s, "/video/([0-9]+)", 1))
-        .otherwise(F.lit(""))
-        .alias("video_id"),
-    )
-
-
-def _byline_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<meta name="author" content="Meta Writer '
-            || CAST(doc_id % 31 AS VARCHAR) || '"><span class="byline">'
-            || 'By Span Writer</span><p>body</p>'
-          WHEN 1 THEN '<span class="byline">By Byline Writer '
-            || CAST(doc_id % 17 AS VARCHAR) || '</span><p>body</p>'
-          WHEN 2 THEN '<a rel="author" href="/staff/a'
-            || CAST(doc_id AS VARCHAR) || '">Rel Author '
-            || CAST(doc_id % 13 AS VARCHAR) || '</a><p>body</p>'
-          ELSE '<p>anonymous wire copy ' || CAST(doc_id AS VARCHAR)
-            || '</p>' END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        regexp_extract(html,
-          '<meta name="author" content="([^"]+)"', 1) AS meta_a,
-        regexp_extract(html,
-          '<a rel="author"[^>]*>([^<]+)</a>', 1) AS rel_a,
-        regexp_extract(html,
-          '<span class="byline">(?:By )?([^<]+)</span>', 1) AS span_a
-      FROM p)
-    SELECT doc_id,
-      CASE WHEN meta_a <> '' THEN 'meta'
-           WHEN rel_a <> '' THEN 'rel_author'
-           WHEN span_a <> '' THEN 'byline_class'
-           ELSE 'none' END AS source,
-      CASE WHEN meta_a <> '' THEN meta_a
-           WHEN rel_a <> '' THEN rel_a
-           WHEN span_a <> '' THEN span_a
-           ELSE '' END AS author
-    FROM m
-    """
-
-
-@query("author_byline_extract", _byline_oracle())
-def author_byline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Author-byline extraction (round 4): attribution metadata feeds
-    dedup across syndication (same author+title on many hosts),
-    quality priors, and per-author opt-out compliance. Declared
-    metadata beats presentation markup: ``<meta name=author>`` >
-    ``rel="author"`` anchors > byline-class spans (the "By " prefix
-    stripped at the span tier only — metadata is already clean); a
-    page carrying BOTH meta and a span is planted to pin the
-    precedence, and wire copy with no attribution stays 'none'.
-
-    Scale shape: pure codegen regexp projection, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<meta name="author" content="Meta Writer '),
-            (i % 31).cast("string"),
-            F.lit('"><span class="byline">By Span Writer</span>'
-                  "<p>body</p>")))
-        .when(v == 1, F.concat(
-            F.lit('<span class="byline">By Byline Writer '),
-            (i % 17).cast("string"), F.lit("</span><p>body</p>")))
-        .when(v == 2, F.concat(
-            F.lit('<a rel="author" href="/staff/a'), ds,
-            F.lit('">Rel Author '), (i % 13).cast("string"),
-            F.lit("</a><p>body</p>")))
-        .otherwise(F.concat(
-            F.lit("<p>anonymous wire copy "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    meta_a = F.regexp_extract(h, '<meta name="author" content="([^"]+)"', 1)
-    rel_a = F.regexp_extract(h, '<a rel="author"[^>]*>([^<]+)</a>', 1)
-    span_a = F.regexp_extract(
-        h, '<span class="byline">(?:By )?([^<]+)</span>', 1
-    )
-    m = p.select(
-        "doc_id",
-        meta_a.alias("meta_a"),
-        rel_a.alias("rel_a"),
-        span_a.alias("span_a"),
-    )
-    return m.select(
-        "doc_id",
-        F.when(F.col("meta_a") != "", F.lit("meta"))
-        .when(F.col("rel_a") != "", F.lit("rel_author"))
-        .when(F.col("span_a") != "", F.lit("byline_class"))
-        .otherwise(F.lit("none"))
-        .alias("source"),
-        F.when(F.col("meta_a") != "", F.col("meta_a"))
-        .when(F.col("rel_a") != "", F.col("rel_a"))
-        .when(F.col("span_a") != "", F.col("span_a"))
-        .otherwise(F.lit(""))
-        .alias("author"),
-    )
-
-
-def _dublin_core_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<head>'
-        || CASE WHEN doc_id % 2 = 0
-                THEN '<meta name="DC.title" content="Archive Item '
-                     || CAST(doc_id AS VARCHAR) || '">' ELSE '' END
-        || CASE WHEN doc_id % 3 = 0
-                THEN '<meta name="DC.creator" content="Curator '
-                     || CAST(doc_id % 11 AS VARCHAR) || '">' ELSE '' END
-        || CASE WHEN doc_id % 4 = 0
-                THEN '<meta name="DC.date" content="2024-'
-                     || lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0')
-                     || '-15">' ELSE '' END
-        || CASE WHEN doc_id % 5 = 0
-                THEN '<meta name="DC.language" content="'
-                     || lang || '">' ELSE '' END
-        || '<meta name="description" content="not dc">'
-        || '</head>' AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, i AS i,
-        list_extract(regexp_extract_all(html,
-          '<meta name="DC\\.([a-z]+)" content="[^"]*"', 1), i) AS field,
-        list_extract(regexp_extract_all(html,
-          '<meta name="DC\\.[a-z]+" content="([^"]*)"', 1), i) AS value
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<meta name="DC\\.([a-z]+)" content="[^"]*"', 1)))) AS g(i))
-    SELECT doc_id, field, value FROM fr
-    """
-
-
-@query("dublin_core_extract", _dublin_core_oracle())
-def dublin_core_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dublin Core metadata extraction (round 4): the pre-OpenGraph
-    metadata vocabulary libraries, archives, and government sites
-    still serve (``DC.title`` / ``DC.creator`` / ``DC.date`` /
-    ``DC.language``) — exploded to (field, value) rows with the
-    field-count varying per page (each field on its own residue) and
-    a non-DC meta planted on every page that must NOT match the
-    namespaced pattern. Field names and values come from the SAME
-    anchor pattern, so positions can't skew.
-
-    Scale shape: two aligned regexp_extract_all + posexplode, no
-    shuffle; rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    html = F.concat(
-        F.lit("<head>"),
-        F.when(i % 2 == 0, F.concat(
-            F.lit('<meta name="DC.title" content="Archive Item '), ds,
-            F.lit('">'))).otherwise(F.lit("")),
-        F.when(i % 3 == 0, F.concat(
-            F.lit('<meta name="DC.creator" content="Curator '),
-            (i % 11).cast("string"), F.lit('">'))).otherwise(F.lit("")),
-        F.when(i % 4 == 0, F.concat(
-            F.lit('<meta name="DC.date" content="2024-'),
-            F.lpad((i % 12 + 1).cast("string"), 2, "0"),
-            F.lit('-15">'))).otherwise(F.lit("")),
-        F.when(i % 5 == 0, F.concat(
-            F.lit('<meta name="DC.language" content="'), F.col("lang"),
-            F.lit('">'))).otherwise(F.lit("")),
-        F.lit('<meta name="description" content="not dc"></head>'),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fields = F.regexp_extract_all(
-        F.col("html"),
-        F.lit('<meta name="DC\\.([a-z]+)" content="[^"]*"'), 1,
-    )
-    values = F.regexp_extract_all(
-        F.col("html"),
-        F.lit('<meta name="DC\\.[a-z]+" content="([^"]*)"'), 1,
-    )
-    return (
-        p.select(
-            "doc_id", values.alias("values"),
-            F.posexplode(fields).alias("pos", "field"),
-        )
-        .select(
-            "doc_id", "field",
-            F.element_at(F.col("values"), F.col("pos") + 1).alias("value"),
-        )
-    )
-
-
-def _figcap_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<figure><img src="https://img.example/a'
-            || CAST(doc_id AS VARCHAR) || '.jpg" alt="Alt A '
-            || CAST(doc_id % 23 AS VARCHAR) || '"><figcaption>Figure '
-            || CAST(doc_id % 19 AS VARCHAR)
-            || ' caption</figcaption></figure>'
-          WHEN 1 THEN '<figure><img src="https://img.example/b'
-            || CAST(doc_id AS VARCHAR) || '.png" alt="Alt only '
-            || CAST(doc_id % 23 AS VARCHAR) || '"></figure>'
-          WHEN 2 THEN '<figure><img src="https://img.example/c'
-            || CAST(doc_id AS VARCHAR) || '.webp" alt="Alt C '
-            || CAST(doc_id % 23 AS VARCHAR) || '"><figcaption>Lead '
-            || CAST(doc_id % 19 AS VARCHAR) || '</figcaption></figure>'
-            || '<figure><img src="https://img.example/d'
-            || CAST(doc_id AS VARCHAR) || '.gif"></figure>'
-          ELSE '<p>no figures ' || CAST(doc_id AS VARCHAR) || '</p>'
-        END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, i - 1 AS fig_idx,
-        list_extract(regexp_extract_all(html,
-          '<figure>(.*?)</figure>', 1), i) AS block
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<figure>(.*?)</figure>', 1)))) AS g(i))
-    SELECT doc_id, CAST(fig_idx AS BIGINT) AS fig_idx,
-      regexp_extract(block, '<img src="([^"]+)"', 1) AS src,
-      CASE WHEN contains(block, '<figcaption>')
-           THEN regexp_extract(block,
-             '<figcaption>([^<]*)</figcaption>', 1)
-           WHEN contains(block, 'alt="')
-           THEN regexp_extract(block, 'alt="([^"]*)"', 1)
-           ELSE '' END AS caption,
-      CASE WHEN contains(block, '<figcaption>') THEN 'figcaption'
-           WHEN contains(block, 'alt="') THEN 'alt'
-           ELSE 'none' END AS caption_source
-    FROM fr
-    """
-
-
-@query("figure_caption_pairs", _figcap_oracle())
-def figure_caption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-text pair mining (round 4): <figure> blocks are the
-    highest-precision caption source for image-text multimodal
-    training pairs. Extracts each figure in document order, parses the
-    img src, and resolves the caption with the standard precedence —
-    <figcaption> beats the img alt text, alt beats nothing — tagging
-    the provenance so a mixture builder can weight figcaption pairs
-    (human-written captions) above alt pairs (often filenames). A
-    caption-less figure is planted on every %4==2 page as the 'none'
-    control; %4==3 pages carry no figure at all (zero rows).
-
-    Scale shape: one regexp_extract_all + posexplode, per-block fields
-    via codegen regexp_extract/CASE — no shuffle, no Python; rides the
-    extraction scan like embed_extract.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    m23 = (i % 23).cast("string")
-    m19 = (i % 19).cast("string")
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<figure><img src="https://img.example/a'), ds,
-            F.lit('.jpg" alt="Alt A '), m23,
-            F.lit('"><figcaption>Figure '), m19,
-            F.lit(" caption</figcaption></figure>")))
-        .when(v == 1, F.concat(
-            F.lit('<figure><img src="https://img.example/b'), ds,
-            F.lit('.png" alt="Alt only '), m23,
-            F.lit('"></figure>')))
-        .when(v == 2, F.concat(
-            F.lit('<figure><img src="https://img.example/c'), ds,
-            F.lit('.webp" alt="Alt C '), m23,
-            F.lit('"><figcaption>Lead '), m19,
-            F.lit('</figcaption></figure>'
-                  '<figure><img src="https://img.example/d'),
-            ds, F.lit('.gif"></figure>')))
-        .otherwise(F.concat(F.lit("<p>no figures "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("html"), F.lit("<figure>(.*?)</figure>"), 1
-            )
-        ).alias("fig_idx", "block"),
-    )
-    b = F.col("block")
-    has_cap = b.contains("<figcaption>")
-    has_alt = b.contains('alt="')
-    return fr.select(
-        "doc_id",
-        F.col("fig_idx").cast("long").alias("fig_idx"),
-        F.regexp_extract(b, '<img src="([^"]+)"', 1).alias("src"),
-        F.when(has_cap,
-               F.regexp_extract(b, "<figcaption>([^<]*)</figcaption>", 1))
-        .when(has_alt, F.regexp_extract(b, 'alt="([^"]*)"', 1))
-        .otherwise(F.lit(""))
-        .alias("caption"),
-        F.when(has_cap, F.lit("figcaption"))
-        .when(has_alt, F.lit("alt"))
-        .otherwise(F.lit("none"))
-        .alias("caption_source"),
-    )
-
-
-def _rdfa_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 3
-          WHEN 0 THEN '<meta property="schema:name" content="RDFa Name '
-            || CAST(doc_id % 29 AS VARCHAR) || '">'
-            || '<meta property="schema:datePublished" content="2024-0'
-            || CAST(1 + doc_id % 9 AS VARCHAR) || '-15">'
-          WHEN 1 THEN '<span property="schema:author">Author '
-            || CAST(doc_id % 13 AS VARCHAR) || '</span>'
-            || '<meta property="schema:inLanguage" content="lang'
-            || CAST(doc_id % 5 AS VARCHAR) || '">'
-          ELSE '<meta property="og:title" content="not rdfa">'
-            || '<meta property="schema:headline" content="Headline '
-            || CAST(doc_id % 17 AS VARCHAR) || '">'
-        END AS html
-      FROM documents),
-    metas AS (
-      SELECT doc_id,
-        list_extract(regexp_extract_all(html,
-          '<meta property="schema:([A-Za-z]+)" content="[^"]*"', 1), i)
-          AS prop,
-        list_extract(regexp_extract_all(html,
-          '<meta property="schema:[A-Za-z]+" content="([^"]*)"', 1), i)
-          AS value,
-        'meta' AS node_kind
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<meta property="schema:([A-Za-z]+)" content="[^"]*"',
-        1)))) AS g(i)),
-    spans AS (
-      SELECT doc_id,
-        list_extract(regexp_extract_all(html,
-          '<span property="schema:([A-Za-z]+)">[^<]*</span>', 1), i)
-          AS prop,
-        list_extract(regexp_extract_all(html,
-          '<span property="schema:[A-Za-z]+">([^<]*)</span>', 1), i)
-          AS value,
-        'span' AS node_kind
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<span property="schema:([A-Za-z]+)">[^<]*</span>',
-        1)))) AS g(i))
-    SELECT doc_id, prop, value, node_kind FROM metas
-    UNION ALL
-    SELECT doc_id, prop, value, node_kind FROM spans
-    """
-
-
-@query("rdfa_extract", _rdfa_oracle())
-def rdfa_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RDFa-lite extraction (round 4): completes the structured-data
-    trio (microdata_extract, jsonld_extract, dublin_core_extract) with
-    the property= vocabulary. Schema.org-prefixed properties are
-    pulled from both carrier shapes — <meta property content=...>
-    (attribute value) and <span property>text</span> (element text) —
-    tagged with node_kind; a non-schema property (og:title) is planted
-    on every %3==2 page and must NOT appear.
-
-    Scale shape: two regexp_extract_all projections unioned — both
-    sides of the union are narrow scans of the same cached page
-    construction, no shuffle, no Python.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 3
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<meta property="schema:name" content="RDFa Name '),
-            (i % 29).cast("string"),
-            F.lit('"><meta property="schema:datePublished" '
-                  'content="2024-0'),
-            (1 + i % 9).cast("string"), F.lit('-15">')))
-        .when(v == 1, F.concat(
-            F.lit('<span property="schema:author">Author '),
-            (i % 13).cast("string"),
-            F.lit('</span><meta property="schema:inLanguage" '
-                  'content="lang'),
-            (i % 5).cast("string"), F.lit('">')))
-        .otherwise(F.concat(
-            F.lit('<meta property="og:title" content="not rdfa">'
-                  '<meta property="schema:headline" content="Headline '),
-            (i % 17).cast("string"), F.lit('">')))
-    )
-    p = d.select("doc_id", html.alias("html"))
-
-    def _kind(attr_pat: str, val_pat: str, kind: str) -> DataFrame:
-        props = F.regexp_extract_all(F.col("html"), F.lit(attr_pat), 1)
-        vals = F.regexp_extract_all(F.col("html"), F.lit(val_pat), 1)
-        return (
-            p.select(
-                "doc_id", vals.alias("vals"),
-                F.posexplode(props).alias("pos", "prop"),
-            )
-            .select(
-                "doc_id", "prop",
-                F.element_at(F.col("vals"), F.col("pos") + 1)
-                .alias("value"),
-                F.lit(kind).alias("node_kind"),
-            )
-        )
-
-    metas = _kind(
-        '<meta property="schema:([A-Za-z]+)" content="[^"]*"',
-        '<meta property="schema:[A-Za-z]+" content="([^"]*)"',
-        "meta",
-    )
-    spans = _kind(
-        '<span property="schema:([A-Za-z]+)">[^<]*</span>',
-        '<span property="schema:[A-Za-z]+">([^<]*)</span>',
-        "span",
-    )
-    return metas.unionAll(spans)
-
-
-def _breadcrumb_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<nav class="breadcrumb">'
-        || CASE WHEN doc_id % 3 >= 1
-             THEN '<a href="/">Home</a>' ELSE '' END
-        || CASE WHEN doc_id % 3 = 2
-             THEN '<a href="/sec' || CAST(doc_id % 7 AS VARCHAR)
-               || '">Section ' || CAST(doc_id % 7 AS VARCHAR) || '</a>'
-             ELSE '' END
-        || '<span class="current">Page '
-        || CAST(doc_id % 19 AS VARCHAR) || '</span></nav>'
-        || '<nav class="other"><a href="/x">not a crumb</a></nav>'
-          AS html
-      FROM documents),
-    nav AS (
-      SELECT doc_id, regexp_extract(html,
-        '<nav class="breadcrumb">(.*?)</nav>', 1) AS trail
-      FROM p),
-    fr AS (
-      SELECT doc_id, i - 1 AS pos,
-        list_extract(regexp_extract_all(trail,
-          '(<a href="[^"]*">[^<]*</a>|<span class="current">[^<]*</span>)',
-          1), i) AS el
-      FROM nav, unnest(generate_series(1, len(regexp_extract_all(trail,
-        '(<a href="[^"]*">[^<]*</a>|<span class="current">[^<]*</span>)',
-        1)))) AS g(i))
-    SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-      regexp_extract(el, '>([^<]*)<', 1) AS label,
-      CASE WHEN contains(el, 'href="')
-           THEN regexp_extract(el, 'href="([^"]*)"', 1)
-           ELSE '' END AS href,
-      CAST(CASE WHEN contains(el, '<span') THEN 1 ELSE 0 END AS INT)
-        AS is_leaf
-    FROM fr
-    """
-
-
-@query("breadcrumb_extract", _breadcrumb_oracle())
-def breadcrumb_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Breadcrumb-trail extraction (round 4): the breadcrumb nav is the
-    page's own statement of where it sits in the site taxonomy — the
-    trail feeds topic clustering and URL-pattern mining. Locates the
-    breadcrumb nav (a second non-breadcrumb nav is planted on every
-    page and must be ignored), splits the trail into crumbs in order,
-    and emits position, label, href (empty for the current-page leaf
-    span), and the leaf flag. Trail depth varies 1..3 by doc_id%3.
-
-    Scale shape: one anchored regexp_extract to isolate the nav, one
-    regexp_extract_all + posexplode over the trail, codegen field
-    parsing — no shuffle, no Python.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    m7 = (i % 7).cast("string")
-    html = F.concat(
-        F.lit('<nav class="breadcrumb">'),
-        F.when(i % 3 >= 1, F.lit('<a href="/">Home</a>'))
-        .otherwise(F.lit("")),
-        F.when(i % 3 == 2, F.concat(
-            F.lit('<a href="/sec'), m7, F.lit('">Section '), m7,
-            F.lit("</a>")))
-        .otherwise(F.lit("")),
-        F.lit('<span class="current">Page '),
-        (i % 19).cast("string"),
-        F.lit('</span></nav>'
-              '<nav class="other"><a href="/x">not a crumb</a></nav>'),
-    )
-    crumb_pat = (
-        '(<a href="[^"]*">[^<]*</a>|<span class="current">[^<]*</span>)'
-    )
-    nav = d.select(
-        "doc_id",
-        F.regexp_extract(
-            html, '<nav class="breadcrumb">(.*?)</nav>', 1
-        ).alias("trail"),
-    )
-    fr = nav.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("trail"), F.lit(crumb_pat), 1)
-        ).alias("pos", "el"),
-    )
-    e = F.col("el")
-    return fr.select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        F.regexp_extract(e, ">([^<]*)<", 1).alias("label"),
-        F.when(e.contains('href="'),
-               F.regexp_extract(e, 'href="([^"]*)"', 1))
-        .otherwise(F.lit(""))
-        .alias("href"),
-        F.when(e.contains("<span"), F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("is_leaf"),
-    )
-
-
-def _url_date_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        'https://ex.com/'
-        || CASE doc_id % 4
-             WHEN 0 THEN '2023/' || lpad(CAST(1 + doc_id % 12 AS
-               VARCHAR), 2, '0') || '/' || lpad(CAST(1 + doc_id % 28
-               AS VARCHAR), 2, '0') || '/'
-             WHEN 1 THEN '2022/' || lpad(CAST(1 + doc_id % 12 AS
-               VARCHAR), 2, '0') || '/' || lpad(CAST(1 + doc_id % 28
-               AS VARCHAR), 2, '0') || '/'
-             WHEN 2 THEN '2021/' || lpad(CAST(1 + doc_id % 12 AS
-               VARCHAR), 2, '0') || '/'
-             ELSE 'evergreen/' END
-        || 'post' || CAST(doc_id AS VARCHAR) AS url,
-        CASE WHEN doc_id % 4 = 0
-          THEN '<meta property="article:published_time" content="2023-'
-            || lpad(CAST(1 + doc_id % 9 AS VARCHAR), 2, '0')
-            || '-09T10:00:00Z">'
-          ELSE '<p>no meta date</p>' END AS html
-      FROM documents),
-    f AS (
-      SELECT doc_id, url,
-        regexp_extract(html, 'article:published_time" content="'
-          || '([0-9]{4}-[0-9]{2}-[0-9]{2})', 1) AS meta_d,
-        regexp_extract(url, '/([0-9]{4})/([0-9]{2})/([0-9]{2})/',
-          ['y', 'm', 'd']) AS ymd,
-        regexp_extract(url, '/([0-9]{4})/([0-9]{2})/', ['y', 'm'])
-          AS ym,
-        regexp_matches(url, '/[0-9]{4}/[0-9]{2}/[0-9]{2}/') AS has_ymd,
-        regexp_matches(url, '/[0-9]{4}/[0-9]{2}/') AS has_ym
-      FROM p)
-    SELECT doc_id, url,
-      CASE WHEN meta_d <> '' THEN meta_d
-           WHEN has_ymd THEN ymd.y || '-' || ymd.m || '-' || ymd.d
-           WHEN has_ym THEN ym.y || '-' || ym.m || '-01'
-           ELSE '' END AS pub_date,
-      CASE WHEN meta_d <> '' THEN 'meta'
-           WHEN has_ymd OR has_ym THEN 'url'
-           ELSE 'none' END AS date_source
-    FROM f
-    """
-
-
-@query("url_date_extract", _url_date_oracle())
-def url_date_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Publication-date inference (round 4): temporal filtering and
-    dedup-tie-breaking both need a per-document date, and most pages
-    carry one in the URL path even when metadata is absent. Resolves
-    with the standard precedence — article:published_time meta beats
-    a /YYYY/MM/DD/ path segment beats /YYYY/MM/ (day defaults to 01)
-    beats nothing — and tags the provenance. %4==0 pages carry BOTH a
-    meta date and a conflicting URL date to pin the precedence.
-
-    Scale shape: three codegen regexp_extracts and a CASE — no
-    shuffle, no Python; date strings stay lexicographic-sortable.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 4
-    mm = F.lpad((1 + i % 12).cast("string"), 2, "0")
-    dd = F.lpad((1 + i % 28).cast("string"), 2, "0")
-    url = F.concat(
-        F.lit("https://ex.com/"),
-        F.when(v == 0, F.concat(F.lit("2023/"), mm, F.lit("/"), dd,
-                                F.lit("/")))
-        .when(v == 1, F.concat(F.lit("2022/"), mm, F.lit("/"), dd,
-                               F.lit("/")))
-        .when(v == 2, F.concat(F.lit("2021/"), mm, F.lit("/")))
-        .otherwise(F.lit("evergreen/")),
-        F.lit("post"), i.cast("string"),
-    )
-    html = F.when(v == 0, F.concat(
-        F.lit('<meta property="article:published_time" content="2023-'),
-        F.lpad((1 + i % 9).cast("string"), 2, "0"),
-        F.lit('-09T10:00:00Z">'),
-    )).otherwise(F.lit("<p>no meta date</p>"))
-    p = d.select("doc_id", url.alias("url"), html.alias("html"))
-    u = F.col("url")
-    meta_d = F.regexp_extract(
-        F.col("html"),
-        'article:published_time" content="([0-9]{4}-[0-9]{2}-[0-9]{2})',
-        1,
-    )
-    ymd_pat = "/([0-9]{4})/([0-9]{2})/([0-9]{2})/"
-    ym_pat = "/([0-9]{4})/([0-9]{2})/"
-    has_ymd = u.rlike("/[0-9]{4}/[0-9]{2}/[0-9]{2}/")
-    has_ym = u.rlike("/[0-9]{4}/[0-9]{2}/")
-    ymd = F.concat(
-        F.regexp_extract(u, ymd_pat, 1), F.lit("-"),
-        F.regexp_extract(u, ymd_pat, 2), F.lit("-"),
-        F.regexp_extract(u, ymd_pat, 3),
-    )
-    ym = F.concat(
-        F.regexp_extract(u, ym_pat, 1), F.lit("-"),
-        F.regexp_extract(u, ym_pat, 2), F.lit("-01"),
-    )
-    return p.select(
-        "doc_id", "url",
-        F.when(meta_d != "", meta_d)
-        .when(has_ymd, ymd)
-        .when(has_ym, ym)
-        .otherwise(F.lit(""))
-        .alias("pub_date"),
-        F.when(meta_d != "", F.lit("meta"))
-        .when(has_ymd | has_ym, F.lit("url"))
-        .otherwise(F.lit("none"))
-        .alias("date_source"),
-    )
-
-
-def _script_profile_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        repeat('lorem ipsum dolor ', 1 + doc_id % 3)
-        || CASE WHEN doc_id % 3 = 1
-             THEN repeat('привет мир ', 1 + doc_id % 4)
-             ELSE '' END
-        || CASE WHEN doc_id % 5 = 0
-             THEN repeat('漢字文章', 1 + doc_id % 2) ELSE '' END
-        || CASE WHEN doc_id % 7 = 0 THEN 'αβγδε ' ELSE '' END
-          AS text
-      FROM documents),
-    c AS (
-      SELECT doc_id,
-        length(text) - length(regexp_replace(text,
-          '[\\p{Latin}]', '', 'g')) AS latin_chars,
-        length(text) - length(regexp_replace(text,
-          '[\\p{Cyrillic}]', '', 'g')) AS cyrillic_chars,
-        length(text) - length(regexp_replace(text,
-          '[\\p{Han}]', '', 'g')) AS han_chars,
-        length(text) - length(regexp_replace(text,
-          '[\\p{Greek}]', '', 'g')) AS greek_chars
-      FROM p)
-    SELECT doc_id,
-      CAST(latin_chars AS BIGINT) AS latin_chars,
-      CAST(cyrillic_chars AS BIGINT) AS cyrillic_chars,
-      CAST(han_chars AS BIGINT) AS han_chars,
-      CAST(greek_chars AS BIGINT) AS greek_chars,
-      CASE WHEN latin_chars >= cyrillic_chars
-             AND latin_chars >= han_chars
-             AND latin_chars >= greek_chars THEN 'latin'
-           WHEN cyrillic_chars >= han_chars
-             AND cyrillic_chars >= greek_chars THEN 'cyrillic'
-           WHEN han_chars >= greek_chars THEN 'han'
-           ELSE 'greek' END AS dominant_script,
-      round(1.0 * (cyrillic_chars + han_chars + greek_chars)
-        / (latin_chars + cyrillic_chars + han_chars + greek_chars), 4)
-        AS non_latin_ratio
-    FROM c
-    """
-
-
-@query("unicode_script_profile", _script_profile_oracle())
-def unicode_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode-script profiling (round 4): script composition is the
-    cheap upstream signal for language routing — a Cyrillic-dominant
-    page never reaches the English quality classifier, and mixed-
-    script pages (Latin boilerplate around CJK body) are exactly the
-    ones n-gram langid gets wrong. Counts letters per script
-    (Latin/Cyrillic/Han/Greek) via strip-and-diff, picks the dominant
-    script with a fixed tie order, and reports the non-Latin ratio.
-
-    Scale shape: four codegen regexp_replaces over one projection —
-    no shuffle, no Python. Java and RE2 spell the script class
-    differently (\\p{IsCyrillic} vs \\p{Cyrillic}); counts agree
-    because every planted char is BMP (code points == UTF-16 units).
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    text = F.concat(
-        F.repeat(F.lit("lorem ipsum dolor "), (1 + i % 3).cast("int")),
-        F.when(i % 3 == 1,
-               F.repeat(F.lit("привет "
-                              "мир "),
-                        (1 + i % 4).cast("int")))
-        .otherwise(F.lit("")),
-        F.when(i % 5 == 0,
-               F.repeat(F.lit("漢字文章"),
-                        (1 + i % 2).cast("int")))
-        .otherwise(F.lit("")),
-        F.when(i % 7 == 0, F.lit("αβγδε "))
-        .otherwise(F.lit("")),
-    )
-    p = d.select("doc_id", text.alias("text"))
-    t = F.col("text")
-
-    def _n(java_class: str) -> Column:
-        return (
-            F.length(t)
-            - F.length(F.regexp_replace(t, f"[\\p{{{java_class}}}]", ""))
-        ).cast("long")
-
-    c = p.select(
-        "doc_id",
-        _n("IsLatin").alias("latin_chars"),
-        _n("IsCyrillic").alias("cyrillic_chars"),
-        _n("IsHan").alias("han_chars"),
-        _n("IsGreek").alias("greek_chars"),
-    )
-    la, cy, ha, gr = (F.col(x) for x in
-                      ("latin_chars", "cyrillic_chars", "han_chars",
-                       "greek_chars"))
-    return c.select(
-        "doc_id", "latin_chars", "cyrillic_chars", "han_chars",
-        "greek_chars",
-        F.when((la >= cy) & (la >= ha) & (la >= gr), F.lit("latin"))
-        .when((cy >= ha) & (cy >= gr), F.lit("cyrillic"))
-        .when(ha >= gr, F.lit("han"))
-        .otherwise(F.lit("greek"))
-        .alias("dominant_script"),
-        F.round((cy + ha + gr) / (la + cy + ha + gr), 4)
-        .alias("non_latin_ratio"),
-    )
-
-
-def _consent_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 3
-          WHEN 0 THEN '<div id="onetrust-banner-sdk">We use cookies '
-            || 'to improve your experience ' || CAST(doc_id % 11 AS
-            VARCHAR) || '</div>'
-          WHEN 1 THEN '<div class="cookie-banner">This site uses '
-            || 'cookies ' || CAST(doc_id % 9 AS VARCHAR) || '</div>'
-          ELSE '' END
-        || '<p>body paragraph ' || CAST(doc_id AS VARCHAR)
-        || ' with real content</p>' AS html
-      FROM documents),
-    f AS (
-      SELECT doc_id, html,
-        regexp_extract(html, '<div (?:id="onetrust-banner-sdk"'
-          || '|class="cookie-banner")>([^<]*)</div>', 1) AS banner
-      FROM p)
-    SELECT doc_id,
-      CAST(CASE WHEN banner <> '' THEN 1 ELSE 0 END AS INT)
-        AS has_banner,
-      CASE WHEN contains(html, 'onetrust-banner-sdk') THEN 'onetrust'
-           WHEN contains(html, 'class="cookie-banner"') THEN 'generic'
-           ELSE 'none' END AS vendor,
-      CAST(length(banner) AS BIGINT) AS banner_chars,
-      CAST(length(regexp_replace(regexp_replace(html,
-        '<div (?:id="onetrust-banner-sdk"|class="cookie-banner")>'
-        || '[^<]*</div>', '', 'g'), '<[^>]+>', '', 'g')) AS BIGINT)
-        AS text_chars_clean
-    FROM f
-    """
-
-
-@query("cookie_consent_detect", _consent_oracle())
-def cookie_consent_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consent-overlay detection and strip (round 4): cookie banners
-    are the highest-frequency boilerplate in post-GDPR crawls and leak
-    identical legalese into millions of extractions — a dedup poison
-    and a quality-score distorter. Detects the banner by vendor
-    signature (OneTrust id, generic cookie-banner class), measures it,
-    and reports the cleaned text length after stripping the banner
-    div then all remaining tags.
-
-    Scale shape: codegen regexp_extract + two regexp_replaces — no
-    shuffle, no Python; the strip composes with with_main_text
-    upstream of quality scoring.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 3
-    html = F.concat(
-        F.when(v == 0, F.concat(
-            F.lit('<div id="onetrust-banner-sdk">We use cookies '
-                  "to improve your experience "),
-            (i % 11).cast("string"), F.lit("</div>")))
-        .when(v == 1, F.concat(
-            F.lit('<div class="cookie-banner">This site uses cookies '),
-            (i % 9).cast("string"), F.lit("</div>")))
-        .otherwise(F.lit("")),
-        F.lit("<p>body paragraph "), i.cast("string"),
-        F.lit(" with real content</p>"),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    banner_pat = (
-        '<div (?:id="onetrust-banner-sdk"|class="cookie-banner")>'
-        "[^<]*</div>"
-    )
-    banner = F.regexp_extract(
-        h,
-        '<div (?:id="onetrust-banner-sdk"|class="cookie-banner")>'
-        "([^<]*)</div>",
-        1,
-    )
-    return p.select(
-        "doc_id",
-        F.when(banner != "", F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("has_banner"),
-        F.when(h.contains("onetrust-banner-sdk"), F.lit("onetrust"))
-        .when(h.contains('class="cookie-banner"'), F.lit("generic"))
-        .otherwise(F.lit("none"))
-        .alias("vendor"),
-        F.length(banner).cast("long").alias("banner_chars"),
-        F.length(
-            F.regexp_replace(
-                F.regexp_replace(h, banner_pat, ""), "<[^>]+>", ""
-            )
-        ).cast("long").alias("text_chars_clean"),
-    )
-
-
-def _spa_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<div id="root"></div><script src="/static/js/'
-            || 'main.' || CAST(doc_id % 97 AS VARCHAR)
-            || '.js"></script><noscript>You need to enable JavaScript'
-            || ' to run this app.</noscript>'
-          WHEN 1 THEN '<div id="app"></div><script src="/bundle.'
-            || CAST(doc_id % 89 AS VARCHAR) || '.js"></script>'
-          WHEN 2 THEN '<div id="root"><p>server rendered content '
-            || CAST(doc_id AS VARCHAR) || '</p></div>'
-            || '<script src="/hydrate.js"></script>'
-          ELSE '<p>classic page ' || CAST(doc_id AS VARCHAR)
-            || ' with plenty of words</p>' END AS html
-      FROM documents),
-    f AS (
-      SELECT doc_id, html,
-        CASE WHEN regexp_matches(html, '<div id="(root|app)"></div>')
-          THEN 1 ELSE 0 END AS root_empty,
-        CASE WHEN contains(html, '<noscript>') THEN 1 ELSE 0 END
-          AS has_noscript,
-        len(regexp_extract_all(html, '<script src=', 0))
-          AS script_count,
-        length(regexp_replace(regexp_replace(html,
-          '<noscript>[^<]*</noscript>', '', 'g'), '<[^>]+>', '', 'g'))
-          AS visible_chars
-      FROM p)
-    SELECT doc_id, CAST(root_empty AS INT) AS root_empty,
-      CAST(has_noscript AS INT) AS has_noscript,
-      CAST(script_count AS BIGINT) AS script_count,
-      CAST(visible_chars AS BIGINT) AS visible_chars,
-      CASE WHEN root_empty = 1 THEN 'render' ELSE 'extract' END
-        AS route
-    FROM f
-    """
-
-
-@query("spa_shell_detect", _spa_oracle())
-def spa_shell_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPA app-shell detection (round 4): a crawler that extracts the
-    raw HTML of a client-rendered app gets an empty root div and a
-    "enable JavaScript" noscript — routing those to a headless-render
-    queue instead of the extractor is the standard split. Flags the
-    empty root (#root / #app), the noscript fallback, counts script
-    bundles, measures visible text with noscript legalese excluded,
-    and emits the render/extract routing decision. Variant %4==2 has
-    a NON-empty root (server-side hydration) and must route extract.
-
-    Scale shape: codegen regexps over one projection — no shuffle, no
-    Python; the route column is a partition-pruning key downstream.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<div id="root"></div><script src="/static/js/main.'),
-            (i % 97).cast("string"),
-            F.lit('.js"></script><noscript>You need to enable '
-                  "JavaScript to run this app.</noscript>")))
-        .when(v == 1, F.concat(
-            F.lit('<div id="app"></div><script src="/bundle.'),
-            (i % 89).cast("string"), F.lit('.js"></script>')))
-        .when(v == 2, F.concat(
-            F.lit('<div id="root"><p>server rendered content '),
-            i.cast("string"),
-            F.lit('</p></div><script src="/hydrate.js"></script>')))
-        .otherwise(F.concat(
-            F.lit("<p>classic page "), i.cast("string"),
-            F.lit(" with plenty of words</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    root_empty = F.when(
-        h.rlike('<div id="(root|app)"></div>'), F.lit(1)
-    ).otherwise(F.lit(0))
-    return p.select(
-        "doc_id",
-        root_empty.cast("int").alias("root_empty"),
-        F.when(h.contains("<noscript>"), F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("has_noscript"),
-        F.size(F.regexp_extract_all(h, F.lit("<script src="), 0))
-        .cast("long").alias("script_count"),
-        F.length(
-            F.regexp_replace(
-                F.regexp_replace(h, "<noscript>[^<]*</noscript>", ""),
-                "<[^>]+>", "",
-            )
-        ).cast("long").alias("visible_chars"),
-        F.when(root_empty == 1, F.lit("render"))
-        .otherwise(F.lit("extract"))
-        .alias("route"),
-    )
-
-
-def _quote_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 3
-          WHEN 0 THEN '<blockquote cite="https://src.example/q'
-            || CAST(doc_id % 37 AS VARCHAR) || '"><p>Quoted passage '
-            || CAST(doc_id % 19 AS VARCHAR)
-            || '</p></blockquote><cite>Author '
-            || CAST(doc_id % 13 AS VARCHAR) || '</cite>'
-          WHEN 1 THEN '<blockquote><p>Anonymous quote '
-            || CAST(doc_id % 19 AS VARCHAR) || '</p></blockquote>'
-            || '<q>aside one ' || CAST(doc_id % 7 AS VARCHAR)
-            || '</q> text <q>aside two ' || CAST(doc_id % 5 AS VARCHAR)
-            || '</q>'
-          ELSE '<p>prose only ' || CAST(doc_id AS VARCHAR) || '</p>'
-        END AS html
-      FROM documents),
-    blocks AS (
-      SELECT doc_id, 0 AS quote_idx,
-        regexp_extract(html,
-          '<blockquote[^>]*><p>([^<]*)</p></blockquote>', 1)
-          AS quote_text,
-        regexp_extract(html, '<blockquote cite="([^"]*)"', 1)
-          AS cite_url,
-        regexp_extract(html, '<cite>([^<]*)</cite>', 1) AS author,
-        'block' AS kind
-      FROM p
-      WHERE contains(html, '<blockquote')),
-    inl AS (
-      SELECT doc_id, i - 1 AS quote_idx,
-        list_extract(regexp_extract_all(html, '<q>([^<]*)</q>', 1), i)
-          AS quote_text,
-        '' AS cite_url, '' AS author, 'inline' AS kind
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<q>([^<]*)</q>', 1)))) AS g(i))
-    SELECT doc_id, CAST(quote_idx AS BIGINT) AS quote_idx, quote_text,
-      cite_url, author, kind
-    FROM blocks
-    UNION ALL
-    SELECT doc_id, CAST(quote_idx AS BIGINT) AS quote_idx, quote_text,
-      cite_url, author, kind
-    FROM inl
-    """
-
-
-@query("blockquote_cite_extract", _quote_oracle())
-def blockquote_cite_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quotation extraction (round 4): quoted passages with source
-    attribution are both a provenance signal (the cite URL joins into
-    the link graph) and a dedup hazard (the same quote syndicated
-    across hosts). Extracts block quotes with their cite attribute
-    and trailing <cite> attribution, plus inline <q> asides indexed
-    in document order; %3==1 pages carry an attribution-less block
-    quote AND two inline quotes to pin the kind split.
-
-    Scale shape: one filtered projection for blocks, one
-    regexp_extract_all + posexplode for inlines, unioned — no
-    shuffle, no Python.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 3
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<blockquote cite="https://src.example/q'),
-            (i % 37).cast("string"), F.lit('"><p>Quoted passage '),
-            (i % 19).cast("string"),
-            F.lit("</p></blockquote><cite>Author "),
-            (i % 13).cast("string"), F.lit("</cite>")))
-        .when(v == 1, F.concat(
-            F.lit("<blockquote><p>Anonymous quote "),
-            (i % 19).cast("string"),
-            F.lit("</p></blockquote><q>aside one "),
-            (i % 7).cast("string"), F.lit("</q> text <q>aside two "),
-            (i % 5).cast("string"), F.lit("</q>")))
-        .otherwise(F.concat(
-            F.lit("<p>prose only "), i.cast("string"), F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    blocks = (
-        p.where(h.contains("<blockquote"))
-        .select(
-            "doc_id",
-            F.lit(0).cast("long").alias("quote_idx"),
-            F.regexp_extract(
-                h, "<blockquote[^>]*><p>([^<]*)</p></blockquote>", 1
-            ).alias("quote_text"),
-            F.regexp_extract(h, '<blockquote cite="([^"]*)"', 1)
-            .alias("cite_url"),
-            F.regexp_extract(h, "<cite>([^<]*)</cite>", 1)
-            .alias("author"),
-            F.lit("block").alias("kind"),
-        )
-    )
-    inl = (
-        p.select(
-            "doc_id",
-            F.posexplode(
-                F.regexp_extract_all(h, F.lit("<q>([^<]*)</q>"), 1)
-            ).alias("quote_idx", "quote_text"),
-        )
-        .select(
-            "doc_id",
-            F.col("quote_idx").cast("long").alias("quote_idx"),
-            "quote_text",
-            F.lit("").alias("cite_url"),
-            F.lit("").alias("author"),
-            F.lit("inline").alias("kind"),
-        )
-    )
-    return blocks.unionAll(inl)
-
-
-def _navdensity_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        '<nav><a href="/1">Home</a><a href="/2">About '
-        || CAST(doc_id % 7 AS VARCHAR) || '</a></nav>'
-        || '<p>long body text ' || CAST(doc_id AS VARCHAR)
-        || ' with many words <a href="/r">ref</a> trailing words</p>'
-        || CASE WHEN doc_id % 2 = 0
-             THEN '<p>second paragraph ' || CAST(doc_id % 11 AS
-               VARCHAR) || ' pure text</p>'
-             ELSE '' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, i - 1 AS block_idx,
-        list_extract(regexp_extract_all(html,
-          '(<nav>.*?</nav>|<p>.*?</p>)', 1), i) AS block
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '(<nav>.*?</nav>|<p>.*?</p>)', 1)))) AS g(i)),
-    m AS (
-      SELECT doc_id, block_idx,
-        CASE WHEN starts_with(block, '<nav') THEN 'nav' ELSE 'p' END
-          AS tag,
-        length(regexp_replace(block, '<[^>]+>', '', 'g'))
-          AS total_chars,
-        coalesce(length(array_to_string(regexp_extract_all(block,
-          '<a [^>]*>([^<]*)</a>', 1), '')), 0) AS link_chars
-      FROM fr)
-    SELECT doc_id, CAST(block_idx AS BIGINT) AS block_idx, tag,
-      CAST(total_chars AS BIGINT) AS total_chars,
-      CAST(link_chars AS BIGINT) AS link_chars,
-      round(1.0 * link_chars / total_chars, 4) AS link_density,
-      CAST(CASE WHEN link_chars * 10 > total_chars * 6 THEN 1 ELSE 0
-        END AS INT) AS is_boilerplate
-    FROM m
-    """
-
-
-@query("nav_link_density", _navdensity_oracle())
-def nav_link_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-level link-density boilerplate scoring (round 4): the
-    classic content/boilerplate discriminator (Boilerpipe/jusText
-    family) — navigation blocks are nearly all anchor text, content
-    blocks nearly none. Splits the page into block elements in
-    document order, measures text vs anchor-text chars per block, and
-    flags blocks past the 0.6 density threshold with exact integer
-    arithmetic (no float compare at the decision boundary).
-
-    Scale shape: one regexp_extract_all + posexplode, per-block
-    codegen regexps and array_join — no shuffle, no Python.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    html = F.concat(
-        F.lit('<nav><a href="/1">Home</a><a href="/2">About '),
-        (i % 7).cast("string"), F.lit("</a></nav>"),
-        F.lit("<p>long body text "), i.cast("string"),
-        F.lit(' with many words <a href="/r">ref</a> trailing'
-              " words</p>"),
-        F.when(i % 2 == 0, F.concat(
-            F.lit("<p>second paragraph "), (i % 11).cast("string"),
-            F.lit(" pure text</p>")))
-        .otherwise(F.lit("")),
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("html"), F.lit("(<nav>.*?</nav>|<p>.*?</p>)"), 1
-            )
-        ).alias("block_idx", "block"),
-    )
-    b = F.col("block")
-    m = fr.select(
-        "doc_id",
-        F.col("block_idx").cast("long").alias("block_idx"),
-        F.when(b.startswith("<nav"), F.lit("nav")).otherwise(F.lit("p"))
-        .alias("tag"),
-        F.length(F.regexp_replace(b, "<[^>]+>", "")).cast("long")
-        .alias("total_chars"),
-        F.length(
-            F.array_join(
-                F.regexp_extract_all(
-                    b, F.lit("<a [^>]*>([^<]*)</a>"), 1
-                ),
-                "",
-            )
-        ).cast("long").alias("link_chars"),
-    )
-    lc, tc = F.col("link_chars"), F.col("total_chars")
-    return m.select(
-        "doc_id", "block_idx", "tag", "total_chars", "link_chars",
-        F.round(lc / tc, 4).alias("link_density"),
-        F.when(lc * 10 > tc * 6, F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("is_boilerplate"),
-    )
-
-
-def _form_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<form action="/search"><input name="q">'
-            || '<button>Go</button></form><p>Results '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 1 THEN '<p>Account ' || CAST(doc_id AS VARCHAR)
-            || '</p><form action="/login" method="POST">'
-            || '<input name="user"><input type="password" name="pw">'
-            || '</form>'
-          WHEN 2 THEN '<form action="https://news.example.com/sub'
-            || CAST(doc_id % 9 AS VARCHAR) || '" method="post">'
-            || '<input type="email" name="em"></form>'
-            || '<form action="/search"><input name="q"></form>'
-          ELSE '<article>No forms here ' || CAST(doc_id AS VARCHAR)
-            || '</article>' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS form_idx,
-        list_extract(regexp_extract_all(html,
-          '<form[^>]*>.*?</form>', 0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<form[^>]*>.*?</form>', 0)))) AS g(i)),
-    m AS (
-      SELECT doc_id, form_idx,
-        regexp_extract(blk, 'action="([^"]*)"', 1) AS action,
-        lower(regexp_extract(blk, 'method="([^"]*)"', 1)) AS meth,
-        CAST(len(regexp_extract_all(blk, '<input', 0)) AS BIGINT)
-          AS n_inputs,
-        CASE WHEN contains(blk, 'type="password"') THEN 1 ELSE 0 END
-          AS has_password,
-        CASE WHEN contains(blk, 'type="email"') THEN 1 ELSE 0 END
-          AS has_email,
-        CASE WHEN contains(blk, 'name="q"') THEN 1 ELSE 0 END AS has_q
-      FROM fr)
-    SELECT doc_id, form_idx, action,
-      CASE WHEN meth = '' THEN 'get' ELSE meth END AS method,
-      n_inputs, CAST(has_password AS INT) AS has_password,
-      CASE WHEN has_password = 1 THEN 'login'
-           WHEN has_email = 1 THEN 'newsletter'
-           WHEN has_q = 1 THEN 'search'
-           ELSE 'other' END AS kind
-    FROM m
-    """
-
-
-@query("form_field_extract", _form_oracle())
-def form_field_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML-form extraction (round 4): forms are both a crawl signal
-    (a search form is a query-able endpoint; a login form marks
-    gated content whose body text is usually chrome) and a curation
-    signal (login/checkout shells are near-empty boilerplate).
-    Extracts every ``<form>`` block in order with its action url,
-    lower-cased method (HTML default ``get`` when the attribute is
-    absent), input count, and a password-input flag, then classifies
-    the form: password input => login, email input => newsletter,
-    a ``q`` input => search. A two-form page (newsletter + inline
-    search) pins multi-form ordering; an article page pins zero rows.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    classification, no shuffle; rides the extraction scan.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<form action="/search"><input name="q">'
-                  "<button>Go</button></form><p>Results "),
-            ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit("<p>Account "), ds,
-            F.lit('</p><form action="/login" method="POST">'
-                  '<input name="user"><input type="password" name="pw">'
-                  "</form>")))
-        .when(v == 2, F.concat(
-            F.lit('<form action="https://news.example.com/sub'),
-            (i % 9).cast("string"),
-            F.lit('" method="post"><input type="email" name="em">'
-                  '</form><form action="/search"><input name="q">'
-                  "</form>")))
-        .otherwise(F.concat(
-            F.lit("<article>No forms here "), ds, F.lit("</article>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("html"), F.lit("<form[^>]*>.*?</form>"), 0
-            )
-        ).alias("form_idx", "blk"),
-    )
-    b = F.col("blk")
-    meth = F.lower(F.regexp_extract(b, 'method="([^"]*)"', 1))
-    has_pw = b.contains('type="password"')
-    has_em = b.contains('type="email"')
-    has_q = b.contains('name="q"')
-    return fr.select(
-        "doc_id",
-        F.col("form_idx").cast("long").alias("form_idx"),
-        F.regexp_extract(b, 'action="([^"]*)"', 1).alias("action"),
-        F.when(meth == "", F.lit("get")).otherwise(meth).alias("method"),
-        F.size(F.regexp_extract_all(b, F.lit("<input"), 0))
-        .cast("long").alias("n_inputs"),
-        F.when(has_pw, F.lit(1)).otherwise(F.lit(0)).cast("int")
-        .alias("has_password"),
-        F.when(has_pw, F.lit("login"))
-        .when(has_em, F.lit("newsletter"))
-        .when(has_q, F.lit("search"))
-        .otherwise(F.lit("other"))
-        .alias("kind"),
-    )
-
-
-def _hints_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<link rel="preconnect" href="https://cdn'
-            || CAST(doc_id % 7 AS VARCHAR) || '.example.com">'
-            || '<link rel="dns-prefetch" href="//stats.example.net">'
-            || '<p>Body ' || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 1 THEN '<link rel="preload" href="/fonts/f'
-            || CAST(doc_id % 5 AS VARCHAR) || '.woff2" as="font">'
-            || '<p>Body ' || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 2 THEN '<p>Body ' || CAST(doc_id AS VARCHAR)
-            || '</p><link rel="prefetch" href="/page/'
-            || CAST(doc_id + 1 AS VARCHAR) || '" as="document">'
-          ELSE '<link rel="stylesheet" href="/s.css"><p>Body '
-            || CAST(doc_id AS VARCHAR) || '</p>' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS hint_idx,
-        list_extract(regexp_extract_all(html,
-          '<link rel="(?:preload|prefetch|preconnect|dns-prefetch)"[^>]*>',
-          0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<link rel="(?:preload|prefetch|preconnect|dns-prefetch)"[^>]*>',
-        0)))) AS g(i)),
-    m AS (
-      SELECT doc_id, hint_idx,
-        regexp_extract(blk, 'rel="([^"]+)"', 1) AS rel,
-        regexp_extract(blk, 'href="([^"]+)"', 1) AS href,
-        regexp_extract(blk, ' as="([^"]+)"', 1) AS as_attr
-      FROM fr)
-    SELECT doc_id, hint_idx, rel, href, as_attr,
-      CAST(CASE WHEN href LIKE 'http%' OR href LIKE '//%'
-                THEN 1 ELSE 0 END AS INT) AS is_external
-    FROM m
-    """
-
-
-@query("resource_hints", _hints_oracle())
-def resource_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resource-hint extraction (round 4): ``preconnect`` /
-    ``dns-prefetch`` / ``preload`` / ``prefetch`` links are the
-    page's own declaration of its critical third-party origins and
-    its likely next navigation — a crawler uses the origin set for
-    politeness-bucket warmup and the ``prefetch``ed document as a
-    high-prior frontier edge. Extracts every hint link in order with
-    rel, href, the ``as`` type, and an is_external flag (absolute or
-    protocol-relative href); a stylesheet link is planted to pin that
-    non-hint rels emit nothing.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    attribute parses, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<link rel="preconnect" href="https://cdn'),
-            (i % 7).cast("string"),
-            F.lit('.example.com">'
-                  '<link rel="dns-prefetch" href="//stats.example.net">'
-                  "<p>Body "), ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit('<link rel="preload" href="/fonts/f'),
-            (i % 5).cast("string"),
-            F.lit('.woff2" as="font"><p>Body '), ds, F.lit("</p>")))
-        .when(v == 2, F.concat(
-            F.lit("<p>Body "), ds,
-            F.lit('</p><link rel="prefetch" href="/page/'),
-            (i + 1).cast("string"), F.lit('" as="document">')))
-        .otherwise(F.concat(
-            F.lit('<link rel="stylesheet" href="/s.css"><p>Body '),
-            ds, F.lit("</p>")))
-    )
-    rx = '<link rel="(?:preload|prefetch|preconnect|dns-prefetch)"[^>]*>'
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("html"), F.lit(rx), 0)
-        ).alias("hint_idx", "blk"),
-    )
-    b = F.col("blk")
-    href = F.regexp_extract(b, 'href="([^"]+)"', 1)
-    m = fr.select(
-        "doc_id",
-        F.col("hint_idx").cast("long").alias("hint_idx"),
-        F.regexp_extract(b, 'rel="([^"]+)"', 1).alias("rel"),
-        href.alias("href"),
-        F.regexp_extract(b, ' as="([^"]+)"', 1).alias("as_attr"),
-    )
-    h = F.col("href")
-    return m.select(
-        "doc_id", "hint_idx", "rel", "href", "as_attr",
-        F.when(h.startswith("http") | h.startswith("//"), F.lit(1))
-        .otherwise(F.lit(0)).cast("int").alias("is_external"),
-    )
-
-
-def _lazyload_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<img src="/img/a' || CAST(doc_id AS VARCHAR)
-            || '.jpg" alt="hero"><p>Post ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          WHEN 1 THEN '<img src="/1x1.gif" data-src="/img/b'
-            || CAST(doc_id AS VARCHAR) || '.jpg" class="lazy"><p>Post '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 2 THEN '<p>Post ' || CAST(doc_id AS VARCHAR)
-            || '</p><img loading="lazy" src="/img/c'
-            || CAST(doc_id % 11 AS VARCHAR) || '.png">'
-          ELSE '<img data-src="/img/d' || CAST(doc_id AS VARCHAR)
-            || '.webp" loading="lazy"><img src="/img/logo.png">'
-            || '<p>Post ' || CAST(doc_id AS VARCHAR) || '</p>'
-          END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS img_idx,
-        list_extract(regexp_extract_all(html, '<img[^>]*>', 0), i)
-          AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<img[^>]*>', 0)))) AS g(i)),
-    m AS (
-      SELECT doc_id, img_idx,
-        regexp_extract(blk, ' src="([^"]+)"', 1) AS declared_src,
-        regexp_extract(blk, 'data-src="([^"]+)"', 1) AS data_src,
-        CASE WHEN contains(blk, 'loading="lazy"') THEN 1 ELSE 0 END
-          AS native_lazy
-      FROM fr)
-    SELECT doc_id, img_idx, declared_src, data_src,
-      CASE WHEN data_src <> '' THEN data_src ELSE declared_src END
-        AS effective_src,
-      CASE WHEN data_src <> '' THEN 'data-src'
-           WHEN native_lazy = 1 THEN 'native'
-           ELSE 'eager' END AS lazy_mode
-    FROM m
-    """
-
-
-@query("lazyload_image_extract", _lazyload_oracle())
-def lazyload_image_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy-loaded-image resolution (round 4): image-text pairing
-    over real pages must look past the 1x1 placeholder ``src`` that
-    JS lazy-loaders leave behind — the actual asset lives in
-    ``data-src``. Extracts every ``<img>`` in order, resolves the
-    effective source (``data-src`` wins over ``src``), and labels
-    the loading mode: ``data-src`` (JS lazy), ``native``
-    (``loading="lazy"`` with a real src), or ``eager``. The regexes
-    are anchored so ``data-src=`` never false-matches the bare
-    `` src=`` parse; a page mixing a data-src-only img with an eager
-    logo pins per-image independence.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    parses, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<img src="/img/a'), ds,
-            F.lit('.jpg" alt="hero"><p>Post '), ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit('<img src="/1x1.gif" data-src="/img/b'), ds,
-            F.lit('.jpg" class="lazy"><p>Post '), ds, F.lit("</p>")))
-        .when(v == 2, F.concat(
-            F.lit("<p>Post "), ds,
-            F.lit('</p><img loading="lazy" src="/img/c'),
-            (i % 11).cast("string"), F.lit('.png">')))
-        .otherwise(F.concat(
-            F.lit('<img data-src="/img/d'), ds,
-            F.lit('.webp" loading="lazy"><img src="/img/logo.png">'
-                  "<p>Post "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("html"), F.lit("<img[^>]*>"), 0)
-        ).alias("img_idx", "blk"),
-    )
-    b = F.col("blk")
-    declared = F.regexp_extract(b, ' src="([^"]+)"', 1)
-    dsrc = F.regexp_extract(b, 'data-src="([^"]+)"', 1)
-    m = fr.select(
-        "doc_id",
-        F.col("img_idx").cast("long").alias("img_idx"),
-        declared.alias("declared_src"),
-        dsrc.alias("data_src"),
-        b.contains('loading="lazy"').alias("_native"),
-    )
-    dc = F.col("data_src")
-    return m.select(
-        "doc_id", "img_idx", "declared_src", "data_src",
-        F.when(dc != "", dc).otherwise(F.col("declared_src"))
-        .alias("effective_src"),
-        F.when(dc != "", F.lit("data-src"))
-        .when(F.col("_native"), F.lit("native"))
-        .otherwise(F.lit("eager"))
-        .alias("lazy_mode"),
-    )
-
-
-def _comment_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<!-- wp:paragraph --><p>Body '
-            || CAST(doc_id AS VARCHAR) || '</p><!-- /wp:paragraph -->'
-          WHEN 1 THEN '<!--[if lt IE 9]><script src="/html5shiv.js">'
-            || '</script><![endif]--><p>Old ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          WHEN 2 THEN '<p>Plain ' || CAST(doc_id AS VARCHAR)
-            || '</p><!-- analytics slot ' || CAST(doc_id % 13 AS VARCHAR)
-            || ' -->'
-          ELSE '<p>Untouched ' || CAST(doc_id AS VARCHAR) || '</p>'
-          END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS comment_idx,
-        trim(list_extract(regexp_extract_all(html, '<!--(.*?)-->', 1),
-          i)) AS body
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<!--(.*?)-->', 1)))) AS g(i))
-    SELECT doc_id, comment_idx, body,
-      CASE WHEN body LIKE '[if%' THEN 'conditional'
-           WHEN body LIKE 'wp:%' OR body LIKE '/wp:%'
-             THEN 'block_marker'
-           ELSE 'plain' END AS kind
-    FROM fr
-    """
-
-
-@query("html_comment_extract", _comment_oracle())
-def html_comment_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML-comment extraction (round 4): comments never render but
-    carry high-value structure — CMS block markers (Gutenberg's
-    ``<!-- wp:paragraph -->`` delimits the actual article body),
-    IE conditional blocks (markup that must NOT leak into extracted
-    text), and ad/analytics slot boundaries. Extracts every comment
-    in order, trimmed, and classifies it: ``conditional``
-    (``[if ...]`` downlevel blocks), ``block_marker`` (``wp:`` /
-    ``/wp:`` CMS delimiters), else ``plain``.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    classification, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit("<!-- wp:paragraph --><p>Body "), ds,
-            F.lit("</p><!-- /wp:paragraph -->")))
-        .when(v == 1, F.concat(
-            F.lit('<!--[if lt IE 9]><script src="/html5shiv.js">'
-                  "</script><![endif]--><p>Old "), ds, F.lit("</p>")))
-        .when(v == 2, F.concat(
-            F.lit("<p>Plain "), ds, F.lit("</p><!-- analytics slot "),
-            (i % 13).cast("string"), F.lit(" -->")))
-        .otherwise(F.concat(
-            F.lit("<p>Untouched "), ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("html"), F.lit("<!--(.*?)-->"), 1)
-        ).alias("comment_idx", "raw"),
-    )
-    body = F.trim(F.col("raw"))
-    m = fr.select(
-        "doc_id",
-        F.col("comment_idx").cast("long").alias("comment_idx"),
-        body.alias("body"),
-    )
-    b = F.col("body")
-    return m.select(
-        "doc_id", "comment_idx", "body",
-        F.when(b.startswith("[if"), F.lit("conditional"))
-        .when(b.startswith("wp:") | b.startswith("/wp:"),
-              F.lit("block_marker"))
-        .otherwise(F.lit("plain"))
-        .alias("kind"),
-    )
-
-
-def _css_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<style>body{margin:0}p{color:#222}</style>'
-            || '<link rel="stylesheet" href="/a.css"><p>Doc '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 1 THEN '<style>@media (max-width:600px)'
-            || '{nav{display:none}}</style><p>Doc '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 2 THEN '<style>@import url("/base'
-            || CAST(doc_id % 7 AS VARCHAR)
-            || '.css");h1{font-size:2em}</style><p>Doc '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          ELSE '<link rel="stylesheet" href="/s1.css">'
-            || '<link rel="stylesheet" href="/s2.css"><p>Doc '
-            || CAST(doc_id AS VARCHAR) || '</p>' END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        CAST(len(regexp_extract_all(html, '<style>', 0)) AS BIGINT)
-          AS n_style_blocks,
-        coalesce(array_to_string(regexp_extract_all(html,
-          '<style>(.*?)</style>', 1), ''), '') AS css,
-        CAST(len(regexp_extract_all(html, 'rel="stylesheet"', 0))
-          AS BIGINT) AS n_external_sheets
-      FROM p)
-    SELECT doc_id, n_style_blocks,
-      CAST(length(css) - length(replace(css, '{', '')) AS BIGINT)
-        AS n_rules,
-      CAST(len(regexp_extract_all(css, '@media', 0)) AS BIGINT)
-        AS n_media_queries,
-      regexp_extract(css, '@import url\\("([^"]+)"\\)', 1)
-        AS import_url,
-      n_external_sheets
-    FROM m
-    """
-
-
-@query("css_rules_profile", _css_oracle())
-def css_rules_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inline-CSS profiling (round 4): the style surface is a crawl
-    and template signal — ``@import`` urls are fetchable resources
-    the link graph misses, media-query count separates responsive
-    templates from legacy ones, and a high inline-rule count with
-    zero external sheets marks generated/parked pages. Per document:
-    style-block count, brace-counted rule count across all blocks,
-    media-query count, the first ``@import url(...)``, and the
-    external-stylesheet link count.
-
-    Scale shape: codegen regexp/replace projection, no explode, no
-    shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit("<style>body{margin:0}p{color:#222}</style>"
-                  '<link rel="stylesheet" href="/a.css"><p>Doc '),
-            ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit("<style>@media (max-width:600px)"
-                  "{nav{display:none}}</style><p>Doc "),
-            ds, F.lit("</p>")))
-        .when(v == 2, F.concat(
-            F.lit('<style>@import url("/base'),
-            (i % 7).cast("string"),
-            F.lit('.css");h1{font-size:2em}</style><p>Doc '),
-            ds, F.lit("</p>")))
-        .otherwise(F.concat(
-            F.lit('<link rel="stylesheet" href="/s1.css">'
-                  '<link rel="stylesheet" href="/s2.css"><p>Doc '),
-            ds, F.lit("</p>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    m = p.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(h, F.lit("<style>"), 0))
-        .cast("long").alias("n_style_blocks"),
-        F.array_join(
-            F.regexp_extract_all(h, F.lit("<style>(.*?)</style>"), 1), ""
-        ).alias("css"),
-        F.size(F.regexp_extract_all(h, F.lit('rel="stylesheet"'), 0))
-        .cast("long").alias("n_external_sheets"),
-    )
-    css = F.col("css")
-    return m.select(
-        "doc_id", "n_style_blocks",
-        (F.length(css) - F.length(F.regexp_replace(css, "\\{", "")))
-        .cast("long").alias("n_rules"),
-        F.size(F.regexp_extract_all(css, F.lit("@media"), 0))
-        .cast("long").alias("n_media_queries"),
-        F.regexp_extract(css, '@import url\\("([^"]+)"\\)', 1)
-        .alias("import_url"),
-        "n_external_sheets",
-    )
-
-
-def _contact_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<a href="mailto:info@ex'
-            || CAST(doc_id % 7 AS VARCHAR)
-            || '.com">Email us</a><p>Contact ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          WHEN 1 THEN '<a href="mailto:Sales@example.com?subject=Quote'
-            || CAST(doc_id AS VARCHAR) || '">Sales</a>'
-            || '<a href="tel:+1-555-01' || CAST(doc_id % 90 AS VARCHAR)
-            || '">Call</a>'
-          WHEN 2 THEN '<p>Support ' || CAST(doc_id AS VARCHAR)
-            || '</p><a href="tel:0800-' || CAST(doc_id % 1000 AS VARCHAR)
-            || '">Ring</a>'
-          ELSE '<a href="/about">About ' || CAST(doc_id AS VARCHAR)
-            || '</a>' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS link_idx,
-        list_extract(regexp_extract_all(html,
-          '<a href="(?:mailto|tel):[^"]*"[^>]*>[^<]*</a>', 0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<a href="(?:mailto|tel):[^"]*"[^>]*>[^<]*</a>', 0))))
-        AS g(i)),
-    m AS (
-      SELECT doc_id, link_idx,
-        regexp_extract(blk, 'href="(mailto|tel):([^"]*)"', 1) AS scheme,
-        regexp_extract(blk, 'href="(mailto|tel):([^"]*)"', 2) AS rest,
-        regexp_extract(blk, '>([^<]*)</a>', 1) AS anchor_text
-      FROM fr)
-    SELECT doc_id, link_idx, scheme,
-      CASE WHEN scheme = 'mailto'
-           THEN lower(regexp_replace(rest, '\\?.*$', ''))
-           ELSE regexp_replace(rest, '[^0-9+]', '', 'g') END AS target,
-      anchor_text
-    FROM m
-    """
-
-
-@query("contact_link_extract", _contact_oracle())
-def contact_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contact-link extraction (round 4): ``mailto:`` / ``tel:``
-    anchors identify the page's owning entity — the join key for
-    host->organization rollups, opt-out routing, and PII-aware
-    handling downstream. Extracts every contact anchor in order with
-    its scheme, a normalized target (mailto: lower-cased address,
-    ``?subject=`` query stripped; tel: digits + leading ``+`` only),
-    and the anchor text; a plain navigation link pins zero rows.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    normalization, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<a href="mailto:info@ex'), (i % 7).cast("string"),
-            F.lit('.com">Email us</a><p>Contact '), ds, F.lit("</p>")))
-        .when(v == 1, F.concat(
-            F.lit('<a href="mailto:Sales@example.com?subject=Quote'),
-            ds, F.lit('">Sales</a><a href="tel:+1-555-01'),
-            (i % 90).cast("string"), F.lit('">Call</a>')))
-        .when(v == 2, F.concat(
-            F.lit("<p>Support "), ds,
-            F.lit('</p><a href="tel:0800-'),
-            (i % 1000).cast("string"), F.lit('">Ring</a>')))
-        .otherwise(F.concat(
-            F.lit('<a href="/about">About '), ds, F.lit("</a>")))
-    )
-    rx = '<a href="(?:mailto|tel):[^"]*"[^>]*>[^<]*</a>'
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("html"), F.lit(rx), 0)
-        ).alias("link_idx", "blk"),
-    )
-    b = F.col("blk")
-    scheme = F.regexp_extract(b, 'href="(mailto|tel):([^"]*)"', 1)
-    rest = F.regexp_extract(b, 'href="(mailto|tel):([^"]*)"', 2)
-    m = fr.select(
-        "doc_id",
-        F.col("link_idx").cast("long").alias("link_idx"),
-        scheme.alias("scheme"),
-        rest.alias("rest"),
-        F.regexp_extract(b, ">([^<]*)</a>", 1).alias("anchor_text"),
-    )
-    r = F.col("rest")
-    return m.select(
-        "doc_id", "link_idx", "scheme",
-        F.when(
-            F.col("scheme") == "mailto",
-            F.lower(F.regexp_replace(r, "\\?.*$", "")),
-        )
-        .otherwise(F.regexp_replace(r, "[^0-9+]", ""))
-        .alias("target"),
-        "anchor_text",
-    )
-
-
 def _ico_oracle() -> str:
     """Literal-VALUES oracle from the corpus construction (expected
     per-entry RGB pixels + AND-mask popcounts exist before encode —
@@ -7939,7 +3460,7 @@ def _ico_oracle() -> str:
 @query("ico_decode_features", _ico_oracle())
 def ico_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native ICO (favicon container) decode on the distributed path
-    (round 4) — /favicon.ico is the single most-fetched image url a
+    — /favicon.ico is the single most-fetched image url a
     crawler sees, and the container is absent from the reference's
     dispatch (image.c:271-336 handles .png/.jpg/PNM only). The corpus
     cycles entry count (multi-resolution icons), payload kind (PNG
@@ -7958,798 +3479,2147 @@ def ico_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ico_features(base.repartition(8, "img_id"))
 
 
-def _svg_oracle() -> str:
+def _exif_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (EXIF fields
+    exist before serialization — the parser is never consulted)."""
+    from ocr_spark.operators.multimodal import synth_exif_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, '{r['byte_order']}', {r['orientation']}, "
+        f"'{r['make']}', '{r['datetime']}', "
+        f"CAST({r['exif_w']} AS BIGINT), CAST({r['exif_h']} AS BIGINT), "
+        f"CAST({r['n_ifd0_entries']} AS BIGINT))"
+        for r in synth_exif_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(img_id, byte_order, orientation, make, datetime, "
+        "exif_w, exif_h, n_ifd0_entries)"
+    )
+
+
+@query("jpeg_exif_extract", _exif_oracle())
+def jpeg_exif_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXIF metadata extraction: camera make, capture
+    timestamp, orientation and declared pixel dimensions ride in the
+    JPEG APP1 segment as a TIFF IFD — provenance for image-text
+    corpora (camera vs screenshot vs generated), the orientation flag
+    real renderers must honor, and a capture-time axis no HTML field
+    carries. The corpus splices spec-layout APP1s (both byte orders,
+    all 8 orientations) into native-encoder JPEGs; the segment walk
+    stops at SOS, so metadata never pays the entropy-decode cost.
+
+    Scale shape: Arrow-batched mapInPandas over binary payloads, same
+    stage shape as the other codec extractors; EXIF-free images drop
+    inside the batch.
+    """
+    from ocr_spark.operators.multimodal import (
+        exif_features,
+        synth_exif_corpus,
+    )
+
+    corpus = synth_exif_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    return exif_features(base.repartition(8, "img_id"))
+
+
+def _pngmeta_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (chunk
+    rows exist before the container is assembled)."""
+    from ocr_spark.operators.multimodal import synth_png_meta_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, {k}, '{kind}', '{kw}', '{val}')"
+        for r in synth_png_meta_corpus()
+        for k, (kind, kw, val) in enumerate(r["expected"])
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(img_id, chunk_idx, kind, keyword, value)"
+    )
+
+
+@query("png_text_chunks", _pngmeta_oracle())
+def png_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PNG ancillary-chunk extraction: tEXt/iTXt carry
+    Title/Author/Comment metadata (screenshot tools and export
+    pipelines stamp provenance here) and pHYs carries physical DPI —
+    all invisible to a pixel decoder. The chunk walk reads the
+    length-prefixed container directly and never inflates IDAT, so
+    metadata harvest over an image corpus costs I/O, not decode.
+
+    Scale shape: Arrow-batched mapInPandas; per-image fan-out to
+    chunk rows happens inside the batch, no explode in the plan.
+    """
+    from ocr_spark.operators.multimodal import (
+        png_meta_features,
+        synth_png_meta_corpus,
+    )
+
+    corpus = synth_png_meta_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    return png_meta_features(base.repartition(8, "img_id"))
+
+
+def _gifanim_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (frame
+    counts, delays and loop counts exist before encode)."""
+    from ocr_spark.operators.multimodal import synth_gif_anim_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, {r['n_frames']}, {r['loop_count']}, "
+        f"CAST({sum(r['delays'])} AS BIGINT), "
+        f"CAST({min(r['delays'])} AS BIGINT), "
+        f"CAST({max(r['delays'])} AS BIGINT))"
+        for r in synth_gif_anim_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(img_id, n_frames, loop_count, total_delay_cs, "
+        "min_delay_cs, max_delay_cs)"
+    )
+
+
+@query("gif_animation_features", _gifanim_oracle())
+def gif_animation_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GIF animation timing: frame count, per-frame Graphic
+    Control delays and the NETSCAPE loop count separate static images
+    from animations — an image-corpus router treats them differently
+    (animations become frame-sampled video-like media, statics stay
+    images), and total duration is the sampling budget. The corpus
+    cycles 1-4 frames, finite and infinite loops, and a timing-free
+    static GIF pinning the -1/no-extension branch; reference parity:
+    the reference's GIF path (via netpbm) drops animation entirely.
+
+    Scale shape: Arrow-batched mapInPandas over binary payloads —
+    timing parses from extension blocks, LZW inflates only to count
+    frames (bounded per batch).
+    """
+    from ocr_spark.operators.multimodal import (
+        gif_anim_features,
+        synth_gif_anim_corpus,
+    )
+
+    corpus = synth_gif_anim_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    return gif_anim_features(base.repartition(8, "img_id"))
+
+
+def _trackedge_oracle() -> str:
     return """
     WITH p AS (
       SELECT doc_id,
+        'host' || CAST(doc_id % 97 AS VARCHAR) || '.example' AS host,
         CASE doc_id % 4
-          WHEN 0 THEN '<svg viewBox="0 0 24 24"><path d="M0 0h24v24z"/>'
-            || '<path d="M2 2l3 3"/></svg><p>Icon doc '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          WHEN 1 THEN '<svg viewBox="0 0 100 50">'
-            || '<rect width="100" height="50"/><circle r="5"/>'
-            || '<text>Chart ' || CAST(doc_id % 9 AS VARCHAR)
-            || '</text></svg><p>Report ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          WHEN 2 THEN '<p>No vector art ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          ELSE '<svg viewBox="0 0 ' || CAST(8 + doc_id % 5 AS VARCHAR)
-            || ' ' || CAST(6 + doc_id % 3 AS VARCHAR)
-            || '"><circle r="2"/><circle r="3"/></svg><p>Badge '
-            || CAST(doc_id AS VARCHAR) || '</p>' END AS html
+          WHEN 0 THEN 'UA-' || CAST(doc_id % 50 AS VARCHAR) || '-1'
+          WHEN 1 THEN 'ca-pub-' || CAST(doc_id % 40 AS VARCHAR)
+          WHEN 2 THEN ''
+          ELSE 'UA-7-1'
+        END AS tracker_id
       FROM documents),
-    m AS (
-      SELECT doc_id, html,
-        regexp_extract(html,
-          'viewBox="0 0 ([0-9]+) ([0-9]+)"', 1) AS vw,
-        regexp_extract(html,
-          'viewBox="0 0 ([0-9]+) ([0-9]+)"', 2) AS vh
-      FROM p)
-    SELECT doc_id,
-      CAST(CASE WHEN contains(html, '<svg ') THEN 1 ELSE 0 END AS INT)
-        AS has_svg,
-      CAST(CASE WHEN vw = '' THEN 0 ELSE CAST(vw AS BIGINT) END
-        AS BIGINT) AS viewbox_w,
-      CAST(CASE WHEN vh = '' THEN 0 ELSE CAST(vh AS BIGINT) END
-        AS BIGINT) AS viewbox_h,
-      CAST(len(regexp_extract_all(html, '<path ', 0)) AS BIGINT)
-        AS n_paths,
-      CAST(len(regexp_extract_all(html, '<rect ', 0)) AS BIGINT)
-        AS n_rects,
-      CAST(len(regexp_extract_all(html, '<circle ', 0)) AS BIGINT)
-        AS n_circles,
-      regexp_extract(html, '<text>([^<]*)</text>', 1) AS svg_text
-    FROM m
+    ht AS (
+      SELECT DISTINCT host, tracker_id FROM p WHERE tracker_id <> ''),
+    fan AS (
+      SELECT tracker_id, COUNT(*) AS n_hosts FROM ht GROUP BY 1),
+    keep AS (
+      SELECT ht.host, ht.tracker_id FROM ht
+      JOIN fan ON ht.tracker_id = fan.tracker_id
+      WHERE fan.n_hosts <= 32),
+    e AS (
+      SELECT a.host AS host_a, b.host AS host_b
+      FROM keep a JOIN keep b
+        ON a.tracker_id = b.tracker_id AND a.host < b.host)
+    SELECT host_a, host_b,
+      CAST(COUNT(*) AS BIGINT) AS n_shared_trackers
+    FROM e GROUP BY host_a, host_b
     """
 
 
-@query("svg_features", _svg_oracle())
-def svg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inline-SVG profiling (round 4): vector markup is text the
-    extractor must NOT emit (the shared SKIP_TAGS fence already drops
-    it from body text — functions/html_extract.py) but is itself a
-    signal: icon-only SVGs mark template chrome, chart-like SVGs
-    (rects + a <text> label) mark data figures worth pairing with
-    their caption. Per document: svg presence, viewBox dimensions,
-    path/rect/circle shape counts, and the first ``<text>`` content.
+@query("tracker_coownership_edges", _trackedge_oracle())
+def tracker_coownership_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tracker co-ownership graph: projecting the
+    host↔tracker bipartite graph onto host-host edges turns the
+    per-page tracker ids (analytics_id_extract) into a publisher
+    graph — hosts sharing an analytics property are one operator,
+    and edge weight (shared trackers) is the merge confidence for
+    host-level dedup. The projection self-joins on tracker_id, the
+    classic quadratic-blowup shape, so a FAN-OUT CAP (trackers on
+    >32 hosts are public/agency containers, not ownership evidence)
+    is applied BEFORE the join — the planted UA-7-1 near-clique (97
+    hosts → ~4.6k pairs from one key) is exactly what the cap
+    removes, pinning the guard.
 
-    Scale shape: pure codegen regexp/contains projection, no explode,
-    no shuffle.
+    Scale shape: distinct (hash-agg) → fan-count hash-agg →
+    cap-filter rejoin (AQE broadcasts while the tracker dim fits;
+    it scales with the corpus, so not forced) → capped
+    equi-self-join on uniform keys → final hash-agg; no window, no sort, skew fenced by the
+    cap rather than salted.
     """
     d = load_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
-    ds = i.cast("string")
     v = i % 4
+    host = F.concat(
+        F.lit("host"), (i % 97).cast("string"), F.lit(".example")
+    )
+    tracker = (
+        F.when(v == 0, F.concat(
+            F.lit("UA-"), (i % 50).cast("string"), F.lit("-1")))
+        .when(v == 1, F.concat(
+            F.lit("ca-pub-"), (i % 40).cast("string")))
+        .when(v == 2, F.lit(""))
+        .otherwise(F.lit("UA-7-1"))
+    )
+    ht = d.select(
+        host.alias("host"), tracker.alias("tracker_id")
+    ).where(F.col("tracker_id") != "").distinct()
+    fan = ht.groupBy("tracker_id").agg(F.count("*").alias("n_hosts"))
+    # fan is one row per distinct tracker — corpus-scaled, so no
+    # forced broadcast (AQE converts while it fits; at web scale the
+    # filter join shuffles on the same uniform tracker key)
+    keep = ht.join(
+        fan.where(F.col("n_hosts") <= 32), "tracker_id"
+    ).select("host", "tracker_id")
+    a = keep.alias("a")
+    b = keep.alias("b")
+    e = a.join(
+        b,
+        (F.col("a.tracker_id") == F.col("b.tracker_id"))
+        & (F.col("a.host") < F.col("b.host")),
+    ).select(
+        F.col("a.host").alias("host_a"), F.col("b.host").alias("host_b")
+    )
+    return e.groupBy("host_a", "host_b").agg(
+        F.count("*").cast("long").alias("n_shared_trackers")
+    )
+
+
+def _sectionrollup_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id, n_chars,
+        'host' || CAST(doc_id % 11 AS VARCHAR) || '.example' AS host,
+        CASE doc_id % 5
+          WHEN 0 THEN 'blog' WHEN 1 THEN 'docs' WHEN 2 THEN 'shop'
+          WHEN 3 THEN 'news' ELSE 'about' END AS section
+      FROM documents)
+    SELECT
+      COALESCE(host, '') AS host,
+      COALESCE(section, '') AS section,
+      CAST(COUNT(*) AS BIGINT) AS n_docs,
+      ROUND(AVG(n_chars), 4) AS avg_chars,
+      CAST(GROUPING(host) * 2 + GROUPING(section) AS INT) AS gid
+    FROM p GROUP BY ROLLUP (host, section)
+    """
+
+
+@query("site_section_rollup", _sectionrollup_oracle())
+def site_section_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Site-section rollup: corpus accounting wants doc
+    counts and mean length at THREE grains at once — per (host,
+    section), per host, and global — and ROLLUP computes all three
+    in one pass instead of three scans (the webtext twin of
+    rollup_lineitem_status). Sections derive from the URL's first
+    path segment; avg_chars aggregates the table's REAL n_chars
+    column, so the numbers are corpus facts, not synthesis.
+
+    Scale shape: one partial-aggregated Expand+HashAggregate — the
+    rollup multiplies rows 3x at the map side but each grain
+    combines before the single shuffle; no join, no window.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    host = F.concat(
+        F.lit("host"), (i % 11).cast("string"), F.lit(".example")
+    )
+    section = (
+        F.when(i % 5 == 0, F.lit("blog"))
+        .when(i % 5 == 1, F.lit("docs"))
+        .when(i % 5 == 2, F.lit("shop"))
+        .when(i % 5 == 3, F.lit("news"))
+        .otherwise(F.lit("about"))
+    )
+    p = d.select(
+        host.alias("host"), section.alias("section"), "n_chars"
+    )
+    r = p.rollup("host", "section").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
+        (F.grouping("host") * 2 + F.grouping("section"))
+        .cast("int").alias("gid"),
+    )
+    return r.select(
+        F.coalesce(F.col("host"), F.lit("")).alias("host"),
+        F.coalesce(F.col("section"), F.lit("")).alias("section"),
+        "n_docs", "avg_chars", "gid",
+    )
+
+
+def _wavsil_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (segment
+    runs exist before the PCM is assembled)."""
+    from ocr_spark.operators.multimodal import synth_silence_corpus
+
+    rows = ", ".join(
+        f"({r['clip_id']}, {j}, '{kind}', CAST({start} AS BIGINT), "
+        f"CAST({ln} AS BIGINT))"
+        for r in synth_silence_corpus()
+        for j, (kind, start, ln) in enumerate(r["expected"])
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(clip_id, seg_idx, kind, start_sample, n_samples)"
+    )
+
+
+@query("wav_silence_segments", _wavsil_oracle())
+def wav_silence_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PCM silence segmentation: pause structure is the
+    first cut a speech pipeline makes — utterance boundaries for ASR
+    alignment, VAD supervision, and the dead-air trim that saves
+    decode budget downstream. Run-length segmentation over decoded
+    samples (|x| <= threshold on channel 0) is pure numpy inside the
+    Arrow batch; all-silence and all-tone clips pin the single-run
+    branches.
+
+    Scale shape: Arrow-batched mapInPandas over binary payloads;
+    per-clip fan-out to segment rows happens inside the batch.
+    """
+    from ocr_spark.operators.multimodal import (
+        synth_silence_corpus,
+        wav_silence_segments,
+    )
+
+    corpus = synth_silence_corpus()
+    base = spark.createDataFrame(
+        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
+        "clip_id int, media binary",
+    )
+    return wav_silence_segments(base.repartition(8, "clip_id"))
+
+
+def _jpegq_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (the
+    quality factor and table count exist before encode; pytest pins
+    that the estimator recovers them from the DQT bytes alone)."""
+    from ocr_spark.operators.multimodal import synth_jpeg_quality_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, {r['quality']}, {r['n_tables']}, 1)"
+        for r in synth_jpeg_quality_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(img_id, quality_est, n_tables, is_standard)"
+    )
+
+
+@query("jpeg_quality_estimate", _jpegq_oracle())
+def jpeg_quality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JPEG quality-factor forensics: the DQT tables name
+    the LAST encoder's quality setting — provenance a multimodal
+    corpus filters on (q<50 thumbnails out; recompression chains keep
+    the lowest q's tables) — recovered by exhaustive match against
+    the 100 jcparam.c scalings of the Annex K base table, from the
+    segment headers alone (no entropy decode). Gray (1 table), RGB
+    (2 tables) and progressive streams all resolve; non-standard
+    tables would flag is_standard=0 rather than guess.
+
+    Scale shape: Arrow-batched mapInPandas; per-image work is a
+    segment walk + 100 vectorized 64-element diffs.
+    """
+    from ocr_spark.operators.multimodal import (
+        jpeg_quality_features,
+        synth_jpeg_quality_corpus,
+    )
+
+    corpus = synth_jpeg_quality_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    return jpeg_quality_features(base.repartition(8, "img_id"))
+
+
+def _id3_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (tag fields
+    exist before the container is assembled)."""
+    from ocr_spark.operators.multimodal import synth_id3_corpus
+
+    rows = ", ".join(
+        f"({r['clip_id']}, {r['has_id3']}, '{r['title']}', "
+        f"'{r['artist']}', '{r['album']}', {r['track_no']}, '{r['enc']}')"
+        for r in synth_id3_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(clip_id, has_id3, title, artist, album, track_no, enc)"
+    )
+
+
+@query("mp3_id3_tags", _id3_oracle())
+def mp3_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ID3v2 tag extraction: title/artist/album/track
+    metadata rides ahead of the MPEG audio in a self-describing tag —
+    harvestable with ZERO audio decode, which matters because
+    compressed-audio decode itself stays behind the named production
+    call (multimodal.py's soundfile gate). Latin-1 and UTF-16 text
+    encodings both decode per the frame's encoding byte; a tagless
+    clip pins the has_id3=0 branch.
+
+    Scale shape: Arrow-batched mapInPandas reading only the tag
+    header bytes — the audio body never crosses into Python memory
+    churn.
+    """
+    from ocr_spark.operators.multimodal import (
+        id3_features,
+        synth_id3_corpus,
+    )
+
+    corpus = synth_id3_corpus()
+    base = spark.createDataFrame(
+        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
+        "clip_id int, media binary",
+    )
+    return id3_features(base.repartition(8, "clip_id"))
+
+
+def _webimg_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (kind and
+    dims exist before the container bytes are assembled)."""
+    from ocr_spark.operators.multimodal import synth_webimg_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, '{r['kind']}', '{r['variant']}', "
+        f"{r['width']}, {r['height']})"
+        for r in synth_webimg_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(img_id, kind, variant, width, height)"
+    )
+
+
+@query("webp_avif_sniff", _webimg_oracle())
+def webp_avif_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Modern-image container sniffing: WebP and AVIF now
+    dominate new crawls, and their DIMENSIONS live in container
+    headers (VP8X 24-bit canvas, VP8L 14-bit packed, ISOBMFF ftyp
+    brand) — so routing and size filtering run header-only while
+    pixel decode stays behind the named production calls. Extended
+    and lossless WebP, avif and heic brands, and a JPEG negative all
+    plant; reference parity: the reference dispatches .png/.jpg/PNM
+    only (image.c:271-336) and has no modern-container path at all.
+
+    Scale shape: Arrow-batched mapInPandas reading <=30 header
+    bytes per image.
+    """
+    from ocr_spark.operators.multimodal import (
+        synth_webimg_corpus,
+        webimg_features,
+    )
+
+    corpus = synth_webimg_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    return webimg_features(base.repartition(8, "img_id"))
+
+
+def _epub_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (member
+    lists exist before the ZIP is assembled)."""
+    from ocr_spark.operators.multimodal import synth_epub_corpus
+
+    rows = ", ".join(
+        f"({r['doc_id']}, {r['is_zip']}, {r['is_epub']}, "
+        f"{r['n_members']}, {r['n_chapters']}, "
+        f"CAST({r['total_uncompressed']} AS BIGINT))"
+        for r in synth_epub_corpus()
+    )
+    return (
+        "SELECT * FROM (VALUES " + rows
+        + ") AS t(doc_id, is_zip, is_epub, n_members, n_chapters, "
+        "total_uncompressed)"
+    )
+
+
+@query("epub_container_list", _epub_oracle())
+def epub_container_list(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EPUB/ZIP container listing: books, DOCX and ODT are
+    ZIP archives, and the central directory names every member with
+    its UNCOMPRESSED size — so the pipeline can identify an EPUB
+    (stored-first mimetype member), count its chapters and budget
+    the inflation before decompressing anything. Real EPUB shapes,
+    a plain data zip and a non-zip payload all plant.
+
+    Scale shape: Arrow-batched mapInPandas over the central
+    directory only (plus the tiny STORED mimetype read); member
+    bodies never inflate.
+    """
+    from ocr_spark.operators.multimodal import (
+        epub_features,
+        synth_epub_corpus,
+    )
+
+    corpus = synth_epub_corpus()
+    base = spark.createDataFrame(
+        [(r["doc_id"], bytearray(r["payload"])) for r in corpus],
+        "doc_id int, media binary",
+    )
+    return epub_features(base.repartition(4, "doc_id"))
+
+
+def _anchor_consensus_oracle() -> str:
+    return """
+    WITH v AS (
+      SELECT * FROM (VALUES
+        (0, 'click here'), (1, 'home'), (2, 'official site'),
+        (3, 'product page'), (4, 'read more')) AS t(k, anchor)),
+    e AS (
+      SELECT (doc_id * 3 + 1) % 17 AS target, doc_id % 5 AS k
+      FROM documents
+      UNION ALL
+      SELECT (doc_id * 5 + 2) % 17 AS target, (doc_id + 3) % 5 AS k
+      FROM documents),
+    c AS (
+      SELECT e.target, v.anchor, COUNT(*) AS cnt
+      FROM e JOIN v ON e.k = v.k
+      GROUP BY e.target, v.anchor),
+    m AS (
+      SELECT target, MAX(cnt) AS top_count, SUM(cnt) AS n_links,
+        COUNT(*) AS n_anchors
+      FROM c GROUP BY target),
+    w AS (
+      SELECT c.target, MIN(c.anchor) AS consensus_anchor
+      FROM c JOIN m ON c.target = m.target AND c.cnt = m.top_count
+      GROUP BY c.target)
+    SELECT CAST(m.target AS BIGINT) AS target_host,
+      w.consensus_anchor,
+      CAST(m.top_count AS BIGINT) AS top_count,
+      CAST(m.n_anchors AS BIGINT) AS n_anchors,
+      CAST(m.n_links AS BIGINT) AS n_links
+    FROM m JOIN w ON m.target = w.target
+    """
+
+
+@query("anchor_text_consensus", _anchor_consensus_oracle())
+def anchor_text_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inbound anchor-text consensus per target host: the
+    most frequent anchor text pointing at a host is a crowd-sourced
+    label for what the host IS — classic ranking evidence and a
+    retrieval-training signal (anchor→target pairs are weak query→
+    doc supervision). Computed in two corpus-scaled hash aggregates:
+    (target, anchor) counts, then per-target max/sum/count — and the
+    STRING winner is picked by joining the counts back on
+    cnt == top_count and min()-ing only the tied rows, so no
+    string-buffered aggregate ever runs over corpus-sized input (the
+    min(anchor) group input is bounded by the tie set, not the link
+    count; the struct-min/window forms both sort the corpus —
+    SKILL §8's gotcha).
+
+    Scale shape: union of two projections → hash-agg on (target,
+    anchor) → hash-agg on target → equi-join back. All shuffles key
+    on target (uniform by construction); no window, no sort, no
+    broadcast of the corpus-scaled host dim.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    vocab = ["click here", "home", "official site",
+             "product page", "read more"]
+    amap = F.array(*[F.lit(a) for a in vocab])
+    e1 = d.select(((i * 3 + 1) % 17).alias("target"),
+                  amap[(i % 5).cast("int")].alias("anchor"))
+    e2 = d.select(((i * 5 + 2) % 17).alias("target"),
+                  amap[((i + 3) % 5).cast("int")].alias("anchor"))
+    # c staged: it feeds the rollup AND the tie join-back side —
+    # un-staged, the corpus union+count replans per consumer
+    c = e1.unionAll(e2).groupBy("target", "anchor").count() \
+        .withColumnRenamed("count", "cnt").localCheckpoint(eager=False)
+    m = c.groupBy("target").agg(
+        F.max("cnt").alias("top_count"),
+        F.sum("cnt").alias("n_links"),
+        F.count(F.lit(1)).alias("n_anchors"),
+    )
+    ca, ma = c.alias("ca"), m.alias("ma")
+    w = (
+        ca.join(ma, (F.col("ca.target") == F.col("ma.target"))
+                & (F.col("ca.cnt") == F.col("ma.top_count")))
+        .select(F.col("ca.target").alias("t"), F.col("ca.anchor"))
+        .groupBy("t").agg(F.min("anchor").alias("consensus_anchor"))
+    )
+    return m.join(w, F.col("target") == F.col("t")).select(
+        F.col("target").cast("long").alias("target_host"),
+        "consensus_anchor",
+        F.col("top_count").cast("long").alias("top_count"),
+        F.col("n_anchors").cast("long").alias("n_anchors"),
+        F.col("n_links").cast("long").alias("n_links"),
+    )
+
+
+def _span_grid_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id, doc_id % 3 AS v,
+        'a' || CAST(doc_id % 7 AS VARCHAR) AS av,
+        'y' || CAST(doc_id % 5 AS VARCHAR) AS yv
+      FROM documents)
+    SELECT doc_id, CAST(r AS BIGINT) AS r, CAST(c AS BIGINT) AS c,
+      txt, CAST(is_header AS INT) AS is_header,
+      CAST(is_origin AS INT) AS is_origin
+    FROM (
+      SELECT doc_id, 0 AS r, 0 AS c, av AS txt, 0 AS is_header,
+        1 AS is_origin FROM p WHERE v = 0
+      UNION ALL SELECT doc_id, 0, 1, 'b', 0, 1 FROM p WHERE v = 0
+      UNION ALL SELECT doc_id, 1, 0, av, 0, 0 FROM p WHERE v = 0
+      UNION ALL SELECT doc_id, 1, 1, 'c', 0, 1 FROM p WHERE v = 0
+      UNION ALL SELECT doc_id, 0, 0, 'h', 1, 1 FROM p WHERE v = 1
+      UNION ALL SELECT doc_id, 0, 1, 'h', 1, 0 FROM p WHERE v = 1
+      UNION ALL SELECT doc_id, 1, 0, 'x', 0, 1 FROM p WHERE v = 1
+      UNION ALL SELECT doc_id, 1, 1, yv, 0, 1 FROM p WHERE v = 1
+      UNION ALL SELECT doc_id, 0, 0, 'p', 0, 1 FROM p WHERE v = 2
+      UNION ALL SELECT doc_id, 0, 1, 'q', 0, 1 FROM p WHERE v = 2
+      UNION ALL SELECT doc_id, 1, 0, 'r', 0, 1 FROM p WHERE v = 2
+      UNION ALL SELECT doc_id, 1, 1, 's', 0, 1 FROM p WHERE v = 2)
+    """
+
+
+@query("table_span_grid", _span_grid_oracle())
+def table_span_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Span-normalized table grids: rowspan/colspan cells
+    claim rectangles of the logical grid, so occurrence-ordered cell
+    indices (html_table_cells' contract) misalign columns the moment
+    a span appears — joining a "price" column across rows needs the
+    browser's grid model, with the spanned value REPLICATED into
+    every slot it covers. extract_grid implements the table-model
+    filling algorithm (later cells skip slots claimed from above,
+    spans clamped to the spec's cap); rowspan, colspan and plain
+    tables are synthesized and the full expected grid is the oracle.
+
+    Scale shape: one Arrow-batched mapInPandas over the page rows —
+    per-row fan-out to grid slots, no shuffle, no per-row Python.
+    """
+    from typing import Iterator as _It
+
+    import pandas as _pd
+
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    v = i % 3
     html = (
         F.when(v == 0, F.concat(
-            F.lit('<svg viewBox="0 0 24 24"><path d="M0 0h24v24z"/>'
-                  '<path d="M2 2l3 3"/></svg><p>Icon doc '),
-            ds, F.lit("</p>")))
+            F.lit('<table><tr><td rowspan="2">a'),
+            (i % 7).cast("string"),
+            F.lit("</td><td>b</td></tr><tr><td>c</td></tr></table>")))
         .when(v == 1, F.concat(
-            F.lit('<svg viewBox="0 0 100 50">'
-                  '<rect width="100" height="50"/><circle r="5"/>'
-                  "<text>Chart "), (i % 9).cast("string"),
-            F.lit("</text></svg><p>Report "), ds, F.lit("</p>")))
-        .when(v == 2, F.concat(
-            F.lit("<p>No vector art "), ds, F.lit("</p>")))
-        .otherwise(F.concat(
-            F.lit('<svg viewBox="0 0 '), (8 + i % 5).cast("string"),
-            F.lit(" "), (6 + i % 3).cast("string"),
-            F.lit('"><circle r="2"/><circle r="3"/></svg><p>Badge '),
-            ds, F.lit("</p>")))
+            F.lit('<table><tr><th colspan="2">h</th></tr>'
+                  "<tr><td>x</td><td>y"),
+            (i % 5).cast("string"),
+            F.lit("</td></tr></table>")))
+        .otherwise(F.lit(
+            "<table><tr><td>p</td><td>q</td></tr>"
+            "<tr><td>r</td><td>s</td></tr></table>"))
     )
     p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    vw = F.regexp_extract(h, 'viewBox="0 0 ([0-9]+) ([0-9]+)"', 1)
-    vh = F.regexp_extract(h, 'viewBox="0 0 ([0-9]+) ([0-9]+)"', 2)
-    return p.select(
-        "doc_id",
-        F.when(h.contains("<svg "), F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("has_svg"),
-        F.when(vw == "", F.lit(0)).otherwise(vw.cast("long"))
-        .cast("long").alias("viewbox_w"),
-        F.when(vh == "", F.lit(0)).otherwise(vh.cast("long"))
-        .cast("long").alias("viewbox_h"),
-        F.size(F.regexp_extract_all(h, F.lit("<path "), 0))
-        .cast("long").alias("n_paths"),
-        F.size(F.regexp_extract_all(h, F.lit("<rect "), 0))
-        .cast("long").alias("n_rects"),
-        F.size(F.regexp_extract_all(h, F.lit("<circle "), 0))
-        .cast("long").alias("n_circles"),
-        F.regexp_extract(h, "<text>([^<]*)</text>", 1).alias("svg_text"),
+
+    def run(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
+        from ocr_spark.functions.html_extract import extract_grid
+
+        cols = ["doc_id", "r", "c", "txt", "is_header", "is_origin"]
+        for pdf in batches:
+            rows = []
+            for doc_id, page in zip(pdf["doc_id"], pdf["html"]):
+                for (_t, r, c, txt, hdr, org) in extract_grid(page):
+                    rows.append(
+                        (doc_id, r, c, txt, int(hdr), int(org)))
+            yield _pd.DataFrame(rows, columns=cols)
+
+    return p.mapInPandas(
+        run,
+        "doc_id long, r long, c long, txt string, "
+        "is_header int, is_origin int",
     )
 
 
-def _link_header_oracle() -> str:
+def _outlink_fanout_oracle() -> str:
     return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN 'Link: </page/' || CAST(doc_id + 1 AS VARCHAR)
-            || '>; rel="next", </page/' || CAST(doc_id - 1 AS VARCHAR)
-            || '>; rel="prev"'
-          WHEN 1 THEN 'Link: <https://example.com/canon/'
-            || CAST(doc_id % 50 AS VARCHAR) || '>; rel="canonical"'
-          WHEN 2 THEN 'Link: </api/items?page='
-            || CAST(doc_id % 7 AS VARCHAR) || '>; rel="next"; title="p'
-            || CAST(doc_id % 7 AS VARCHAR) || '"'
-          ELSE 'Content-Type: text/html' END AS headers
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS link_idx,
-        list_extract(regexp_extract_all(headers,
-          '<[^>]+>; rel="[a-z]+"', 0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(headers,
-        '<[^>]+>; rel="[a-z]+"', 0)))) AS g(i))
-    SELECT doc_id, link_idx,
-      regexp_extract(blk, '<([^>]+)>', 1) AS href,
-      regexp_extract(blk, 'rel="([a-z]+)"', 1) AS rel
-    FROM fr
+    WITH j AS (
+      SELECT * FROM (VALUES (0), (1), (2), (3)) AS t(j)),
+    e AS (
+      SELECT d.doc_id % 9 AS src_host, d.doc_id,
+        (d.doc_id * 7 + j.j * 11) % 37 AS target_host
+      FROM documents d CROSS JOIN j
+      WHERE j.j < d.doc_id % 4),
+    g AS (
+      SELECT src_host,
+        COUNT(DISTINCT doc_id) AS n_pages,
+        COUNT(*) AS n_edges,
+        COUNT(DISTINCT target_host) AS n_targets
+      FROM e GROUP BY src_host)
+    SELECT CAST(src_host AS BIGINT) AS src_host,
+      CAST(n_pages AS BIGINT) AS n_pages,
+      CAST(n_edges AS BIGINT) AS n_edges,
+      CAST(n_targets AS BIGINT) AS n_targets,
+      CAST(1000 * n_targets // n_edges AS BIGINT)
+        AS target_diversity_permille
+    FROM g
     """
 
 
-@query("http_link_header_parse", _link_header_oracle())
-def http_link_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 8288 ``Link:`` response-header parsing (round 4): the
-    transport-level twin of the HTML ``rel=next/prev`` chain — API
-    endpoints and many CMSes declare pagination and canonical urls
-    ONLY in headers, so the frontier and canonical-election stages
-    need this parse alongside the DOM one. Extracts every
-    ``<target>; rel="..."`` pair in header order (extra parameters
-    like ``title=`` tolerated); a header block with no Link line pins
-    zero rows.
+@query("host_outlink_fanout", _outlink_fanout_oracle())
+def host_outlink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-host outlink fan-out profile: a host whose
+    external edges spread across maximally many target hosts (high
+    target diversity at high volume) matches the link-farm /
+    directory-spam shape, while an editorial site repeats a small
+    citation neighborhood — the aggregate prior that PageRank-family
+    scoring (host_pagerank, trustrank_hosts) wants for damping
+    seed selection. Edge multiplicity varies per page (0–3 links).
 
-    Scale shape: one regexp_extract_all + posexplode, codegen parses,
-    no shuffle.
+    Scale shape: a 4-row literal dimension joined in (constant build
+    side — the one broadcast that is CORRECT at every scale), then
+    one hash-agg on src_host with two exact distincts; the at-scale
+    variant swaps those for the grouped-HLL surface.
     """
     d = load_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
-    v = i % 4
-    headers = (
-        F.when(v == 0, F.concat(
-            F.lit("Link: </page/"), (i + 1).cast("string"),
-            F.lit('>; rel="next", </page/'), (i - 1).cast("string"),
-            F.lit('>; rel="prev"')))
-        .when(v == 1, F.concat(
-            F.lit("Link: <https://example.com/canon/"),
-            (i % 50).cast("string"), F.lit('>; rel="canonical"')))
-        .when(v == 2, F.concat(
-            F.lit("Link: </api/items?page="), (i % 7).cast("string"),
-            F.lit('>; rel="next"; title="p'), (i % 7).cast("string"),
-            F.lit('"')))
-        .otherwise(F.lit("Content-Type: text/html"))
-    )
-    p = d.select("doc_id", headers.alias("headers"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("headers"), F.lit('<[^>]+>; rel="[a-z]+"'), 0
-            )
-        ).alias("link_idx", "blk"),
-    )
-    b = F.col("blk")
-    return fr.select(
-        "doc_id",
-        F.col("link_idx").cast("long").alias("link_idx"),
-        F.regexp_extract(b, "<([^>]+)>", 1).alias("href"),
-        F.regexp_extract(b, 'rel="([a-z]+)"', 1).alias("rel"),
-    )
-
-
-def _price_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN 'Now only $12.'
-            || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0')
-            || ' was $20.00 today'
-          WHEN 1 THEN 'Price: ' || chr(8364) || '1.299,'
-            || CAST(doc_id % 10 AS VARCHAR) || '9 incl. VAT'
-          WHEN 2 THEN 'Just ' || chr(163)
-            || CAST(doc_id % 90 + 5 AS VARCHAR) || ' flat'
-          ELSE 'costs nothing, item ' || CAST(doc_id AS VARCHAR)
-          END AS text
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS price_idx,
-        list_extract(regexp_extract_all(text,
-          '[$' || chr(8364) || chr(163) || '][0-9][0-9.,]*', 0), i)
-          AS raw
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(text,
-        '[$' || chr(8364) || chr(163) || '][0-9][0-9.,]*', 0))))
-        AS g(i)),
-    m AS (
-      SELECT doc_id, price_idx, raw,
-        CASE WHEN raw LIKE '$%' THEN 'USD'
-             WHEN raw LIKE chr(8364) || '%' THEN 'EUR'
-             ELSE 'GBP' END AS currency,
-        CASE WHEN raw LIKE chr(8364) || '%'
-             THEN replace(replace(substr(raw, 2), '.', ''), ',', '.')
-             ELSE replace(substr(raw, 2), ',', '') END AS norm
-      FROM fr)
-    SELECT doc_id, price_idx, raw, currency,
-      CAST(CAST(norm AS DECIMAL(18,2)) * 100 AS BIGINT) AS amount_cents
-    FROM m
-    """
-
-
-@query("price_extract", _price_oracle())
-def price_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Price extraction (round 4): commerce pages dominate the crawl
-    tail, and a normalized price is both a boilerplate cue (price
-    grids mark listing chrome) and the join key for product-dedup
-    across mirrors. Extracts every currency-symbol amount in order
-    and normalizes locale: US/UK ``1,299.99`` (comma thousands) and
-    EU ``1.299,99`` (dot thousands, comma decimals) both land in
-    exact integer cents via a DECIMAL cast — no float rounding. A
-    two-price sentence (sale vs was) pins multi-match order.
-
-    Scale shape: one regexp_extract_all + posexplode, codegen
-    normalization, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    v = i % 4
-    eur, gbp = "€", "£"
-    text = (
-        F.when(v == 0, F.concat(
-            F.lit("Now only $12."),
-            F.lpad((i % 100).cast("string"), 2, "0"),
-            F.lit(" was $20.00 today")))
-        .when(v == 1, F.concat(
-            F.lit("Price: " + eur + "1.299,"),
-            (i % 10).cast("string"), F.lit("9 incl. VAT")))
-        .when(v == 2, F.concat(
-            F.lit("Just " + gbp), (i % 90 + 5).cast("string"),
-            F.lit(" flat")))
-        .otherwise(F.concat(
-            F.lit("costs nothing, item "), i.cast("string")))
-    )
-    p = d.select("doc_id", text.alias("text"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("text"),
-                F.lit("[$" + eur + gbp + "][0-9][0-9.,]*"), 0
-            )
-        ).alias("price_idx", "raw"),
-    )
-    raw = F.col("raw")
-    body = F.substring(raw, 2, 1000)
-    m = fr.select(
-        "doc_id",
-        F.col("price_idx").cast("long").alias("price_idx"),
-        "raw",
-        F.when(raw.startswith("$"), F.lit("USD"))
-        .when(raw.startswith(eur), F.lit("EUR"))
-        .otherwise(F.lit("GBP"))
-        .alias("currency"),
-        F.when(
-            raw.startswith(eur),
-            F.regexp_replace(
-                F.regexp_replace(body, "\\.", ""), ",", "."
-            ),
+    jd = spark.range(4).withColumnRenamed("id", "j")
+    e = (
+        d.crossJoin(F.broadcast(jd))
+        .where(F.col("j") < i % 4)
+        .select(
+            (i % 9).alias("src_host"), "doc_id",
+            ((i * 7 + F.col("j") * 11) % 37).alias("target_host"),
         )
-        .otherwise(F.regexp_replace(body, ",", ""))
-        .alias("norm"),
     )
-    return m.select(
-        "doc_id", "price_idx", "raw", "currency",
-        (F.col("norm").cast("decimal(18,2)") * 100)
-        .cast("long").alias("amount_cents"),
+    g = e.groupBy("src_host").agg(
+        F.countDistinct("doc_id").alias("n_pages"),
+        F.count(F.lit(1)).alias("n_edges"),
+        F.countDistinct("target_host").alias("n_targets"),
+    )
+    return g.select(
+        F.col("src_host").cast("long").alias("src_host"),
+        F.col("n_pages").cast("long").alias("n_pages"),
+        F.col("n_edges").cast("long").alias("n_edges"),
+        F.col("n_targets").cast("long").alias("n_targets"),
+        F.floor(F.lit(1000) * F.col("n_targets") / F.col("n_edges"))
+        .cast("long").alias("target_diversity_permille"),
     )
 
 
-def _faq_oracle() -> str:
+def _transition_oracle() -> str:
     return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<details><summary>What is plan '
-            || CAST(doc_id % 9 AS VARCHAR) || '?</summary><p>It is tier '
-            || CAST(doc_id % 9 AS VARCHAR) || '.</p></details>'
-            || '<details><summary>How to cancel?</summary>'
-            || '<p>Email support ' || CAST(doc_id % 7 AS VARCHAR)
-            || '.</p></details>'
-          WHEN 1 THEN '<div itemtype="https://schema.org/Question">'
-            || '<h3 itemprop="name">Why ' || CAST(doc_id % 13 AS VARCHAR)
-            || '?</h3><div itemprop="acceptedAnswer"><p>Because '
-            || CAST(doc_id % 13 AS VARCHAR) || '.</p></div></div>'
-          WHEN 2 THEN '<p>No questions here '
-            || CAST(doc_id AS VARCHAR) || '</p>'
-          ELSE '<details><summary>Is item '
-            || CAST(doc_id AS VARCHAR) || ' in stock?</summary>'
-            || '<p>Ships in ' || CAST(doc_id % 5 AS VARCHAR)
-            || ' days.</p></details>' END AS html
-      FROM documents),
-    det AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS pair_idx,
-        list_extract(regexp_extract_all(html,
-          '<details><summary>.*?</p></details>', 0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<details><summary>.*?</p></details>', 0)))) AS g(i)),
-    d_pairs AS (
-      SELECT doc_id, pair_idx,
-        regexp_extract(blk, '<summary>([^<]+)</summary>', 1)
-          AS question,
-        regexp_extract(blk, '<p>([^<]+)</p>', 1) AS answer,
-        'details' AS source
-      FROM det),
-    s_pairs AS (
-      SELECT doc_id, CAST(0 AS BIGINT) AS pair_idx,
-        regexp_extract(html,
-          '<h3 itemprop="name">([^<]+)</h3>', 1) AS question,
-        regexp_extract(html,
-          'acceptedAnswer"><p>([^<]+)</p>', 1) AS answer,
-        'schema' AS source
-      FROM p
-      WHERE contains(html, 'schema.org/Question'))
-    SELECT * FROM d_pairs UNION ALL SELECT * FROM s_pairs
+    WITH o AS (
+      SELECT user_id, event_type,
+        LAG(event_type) OVER (PARTITION BY user_id
+          ORDER BY ts, event_id) AS prev_type
+      FROM events),
+    c AS (
+      SELECT prev_type, event_type AS next_type, COUNT(*) AS cnt
+      FROM o WHERE prev_type IS NOT NULL
+      GROUP BY prev_type, next_type),
+    t AS (
+      SELECT prev_type, SUM(cnt) AS out_total FROM c GROUP BY prev_type)
+    SELECT c.prev_type, c.next_type,
+      CAST(c.cnt AS BIGINT) AS cnt,
+      CAST(1000 * c.cnt // t.out_total AS BIGINT) AS prob_permille
+    FROM c JOIN t ON c.prev_type = t.prev_type
     """
 
 
-@query("faq_pair_mining", _faq_oracle())
-def faq_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FAQ question-answer mining (round 4): explicit Q/A markup is
-    the highest-precision instruction-tuning pair source on the open
-    web. Mines two declarations — ``<details>/<summary>`` disclosure
-    blocks (per-block, in order) and schema.org ``Question`` /
-    ``acceptedAnswer`` microdata — into (question, answer, source)
-    rows; a multi-details page pins pair ordering and a no-question
-    page pins zero rows.
+@query("event_transition_matrix", _transition_oracle())
+def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Event-type transition matrix: first-order Markov
+    transition counts over each user's event sequence — the
+    session-model behind sessionize-style analytics (view→click vs
+    view→error transition mass separates healthy funnels from broken
+    ones). The per-user LAG orders by (ts, event_id) so ties are
+    deterministic.
 
-    Scale shape: regexp explode for details + a filtered projection
-    for schema, unioned; union is narrow (no shuffle), everything
-    codegen.
+    Scale shape: one window partitioned on user_id (keyed sort,
+    scales with users, never a global sort) → hash-agg on the
+    transition pair → totals join for the integer permille. The
+    at-scale alternative — self-join on consecutive sequence
+    numbers — costs an extra shuffle; the keyed window is cheaper.
+    """
+    from pyspark.sql.window import Window
+
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    o = e.select(
+        "user_id", "event_type",
+        F.lag("event_type").over(w).alias("prev_type"),
+    )
+    c = (
+        o.where(F.col("prev_type").isNotNull())
+        .groupBy("prev_type", F.col("event_type").alias("next_type"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    t = c.groupBy("prev_type").agg(F.sum("cnt").alias("out_total"))
+    ca, ta = c.alias("ca"), t.alias("ta")
+    j = ca.join(ta, F.col("ca.prev_type") == F.col("ta.prev_type"))
+    return j.select(
+        F.col("ca.prev_type").alias("prev_type"),
+        F.col("ca.next_type").alias("next_type"),
+        F.col("ca.cnt").cast("long").alias("cnt"),
+        F.floor(F.lit(1000) * F.col("ca.cnt") / F.col("ta.out_total"))
+        .cast("long").alias("prob_permille"),
+    )
+
+
+def _ai_agent_matrix_oracle() -> str:
+    return """
+    WITH a AS (
+      SELECT * FROM (VALUES ('GPTBot'), ('CCBot'),
+        ('Google-Extended'), ('Applebot-Extended')) AS t(agent)),
+    p AS (
+      SELECT doc_id,
+        CASE doc_id % 3
+          WHEN 0 THEN 'User-agent: GPTBot' || chr(10) || 'Disallow: /'
+            || chr(10) || chr(10) || 'User-agent: CCBot' || chr(10)
+            || 'Disallow: /' || chr(10) || chr(10)
+            || 'User-agent: *' || chr(10) || 'Disallow: /private/'
+          WHEN 1 THEN 'User-agent: Google-Extended' || chr(10)
+            || 'Disallow: /' || chr(10) || chr(10)
+            || 'User-agent: *' || chr(10) || 'Allow: /'
+          ELSE 'User-agent: *' || chr(10) || 'Disallow: /admin/'
+        END AS txt
+      FROM documents)
+    SELECT p.doc_id, a.agent,
+      CAST(CASE WHEN contains(p.txt,
+        'User-agent: ' || a.agent || chr(10) || 'Disallow: /'
+        || chr(10)) OR p.txt LIKE
+        '%User-agent: ' || a.agent || chr(10) || 'Disallow: /'
+        THEN 1 ELSE 0 END AS INT) AS blocked_fully,
+      CAST(CASE WHEN contains(p.txt, 'User-agent: ' || a.agent
+        || chr(10)) THEN 0 ELSE 1 END AS INT) AS inherits_star
+    FROM p CROSS JOIN a
+    """
+
+
+@query("robots_ai_agent_matrix", _ai_agent_matrix_oracle())
+def robots_ai_agent_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """AI-crawler robots matrix: per (site, AI agent) —
+    GPTBot, CCBot, Google-Extended, Applebot-Extended — whether the
+    is fully blocked by a named group or inherits the ``*`` group.
+    This is the fleet-level view a training-data crawler needs
+    (robots_prefix_filter answers per-URL path questions; this
+    answers "may agent X use this site at all"), and the named-block
+    census is the industry's opt-out adoption metric. The
+    full-block test requires ``Disallow: /`` as the WHOLE rule
+    (newline- or end-anchored) so ``/private/`` doesn't false-match.
+
+    Scale shape: corpus × 4-row literal agent dim (constant
+    broadcast) → per-row flags; no aggregation, no shuffle beyond
+    the broadcast.
     """
     d = load_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit("<details><summary>What is plan "),
-            (i % 9).cast("string"),
-            F.lit("?</summary><p>It is tier "), (i % 9).cast("string"),
-            F.lit(".</p></details><details><summary>How to cancel?"
-                  "</summary><p>Email support "), (i % 7).cast("string"),
-            F.lit(".</p></details>")))
-        .when(v == 1, F.concat(
-            F.lit('<div itemtype="https://schema.org/Question">'
-                  '<h3 itemprop="name">Why '), (i % 13).cast("string"),
-            F.lit('?</h3><div itemprop="acceptedAnswer"><p>Because '),
-            (i % 13).cast("string"), F.lit(".</p></div></div>")))
-        .when(v == 2, F.concat(
-            F.lit("<p>No questions here "), ds, F.lit("</p>")))
-        .otherwise(F.concat(
-            F.lit("<details><summary>Is item "), ds,
-            F.lit(" in stock?</summary><p>Ships in "),
-            (i % 5).cast("string"), F.lit(" days.</p></details>")))
-    )
-    p = d.select("doc_id", html.alias("html"))
-    det = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(
-                F.col("html"),
-                F.lit("<details><summary>.*?</p></details>"), 0
-            )
-        ).alias("pair_idx", "blk"),
-    )
-    b = F.col("blk")
-    d_pairs = det.select(
-        "doc_id",
-        F.col("pair_idx").cast("long").alias("pair_idx"),
-        F.regexp_extract(b, "<summary>([^<]+)</summary>", 1)
-        .alias("question"),
-        F.regexp_extract(b, "<p>([^<]+)</p>", 1).alias("answer"),
-        F.lit("details").alias("source"),
-    )
-    h = F.col("html")
-    s_pairs = p.filter(h.contains("schema.org/Question")).select(
-        "doc_id",
-        F.lit(0).cast("long").alias("pair_idx"),
-        F.regexp_extract(h, '<h3 itemprop="name">([^<]+)</h3>', 1)
-        .alias("question"),
-        F.regexp_extract(h, 'acceptedAnswer"><p>([^<]+)</p>', 1)
-        .alias("answer"),
-        F.lit("schema").alias("source"),
-    )
-    return d_pairs.unionByName(s_pairs)
-
-
-def _ogcard_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<meta property="og:type" content="article">'
-            || '<meta property="og:image" content="https://img.ex.com/o'
-            || CAST(doc_id AS VARCHAR) || '.jpg">'
-            || '<meta name="twitter:card" content="summary_large_image">'
-            || '<meta property="og:site_name" content="Example News">'
-          WHEN 1 THEN '<meta property="og:type" content="video.other">'
-            || '<meta name="twitter:card" content="player">'
-          WHEN 2 THEN '<meta property="og:image" content="/rel/img'
-            || CAST(doc_id % 11 AS VARCHAR) || '.png">'
-          ELSE '<p>No social card ' || CAST(doc_id AS VARCHAR)
-            || '</p>' END AS html
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        regexp_extract(html,
-          '<meta property="og:type" content="([^"]+)"', 1) AS og_type,
-        regexp_extract(html,
-          '<meta property="og:image" content="([^"]+)"', 1) AS og_image,
-        regexp_extract(html,
-          '<meta name="twitter:card" content="([^"]+)"', 1)
-          AS twitter_card,
-        regexp_extract(html,
-          '<meta property="og:site_name" content="([^"]+)"', 1)
-          AS og_site_name
-      FROM p)
-    SELECT doc_id, og_type, og_image, twitter_card, og_site_name,
-      CAST((CASE WHEN og_type <> '' THEN 1 ELSE 0 END)
-         + (CASE WHEN og_image <> '' THEN 1 ELSE 0 END)
-         + (CASE WHEN twitter_card <> '' THEN 1 ELSE 0 END)
-         + (CASE WHEN og_site_name <> '' THEN 1 ELSE 0 END) AS BIGINT)
-        AS completeness,
-      CAST(CASE WHEN og_image LIKE 'http%' THEN 1 ELSE 0 END AS INT)
-        AS image_absolute
-    FROM m
-    """
-
-
-@query("opengraph_card_extract", _ogcard_oracle())
-def opengraph_card_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Social-card metadata (round 4): OpenGraph/Twitter-card tags are
-    curated-by-the-publisher summaries — og:image is the page's own
-    pick of its representative image (the image-text pairing prior),
-    og:type separates articles from video/product shells, and card
-    completeness correlates with editorial quality. Extracts the four
-    card fields, a completeness count, and whether og:image is an
-    absolute url (relative ones need base resolution before fetch).
-
-    Scale shape: pure codegen regexp projection, no shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<meta property="og:type" content="article">'
-                  '<meta property="og:image" '
-                  'content="https://img.ex.com/o'), ds,
-            F.lit('.jpg"><meta name="twitter:card" '
-                  'content="summary_large_image">'
-                  '<meta property="og:site_name" '
-                  'content="Example News">')))
+    v = i % 3
+    txt = (
+        F.when(v == 0, F.lit(
+            "User-agent: GPTBot\nDisallow: /\n\n"
+            "User-agent: CCBot\nDisallow: /\n\n"
+            "User-agent: *\nDisallow: /private/"))
         .when(v == 1, F.lit(
-            '<meta property="og:type" content="video.other">'
-            '<meta name="twitter:card" content="player">'))
-        .when(v == 2, F.concat(
-            F.lit('<meta property="og:image" content="/rel/img'),
-            (i % 11).cast("string"), F.lit('.png">')))
-        .otherwise(F.concat(
-            F.lit("<p>No social card "), ds, F.lit("</p>")))
+            "User-agent: Google-Extended\nDisallow: /\n\n"
+            "User-agent: *\nAllow: /"))
+        .otherwise(F.lit("User-agent: *\nDisallow: /admin/"))
     )
-    p = d.select("doc_id", html.alias("html"))
-    h = F.col("html")
-    og_type = F.regexp_extract(
-        h, '<meta property="og:type" content="([^"]+)"', 1
-    )
-    og_image = F.regexp_extract(
-        h, '<meta property="og:image" content="([^"]+)"', 1
-    )
-    tw = F.regexp_extract(
-        h, '<meta name="twitter:card" content="([^"]+)"', 1
-    )
-    site = F.regexp_extract(
-        h, '<meta property="og:site_name" content="([^"]+)"', 1
-    )
-    m = p.select(
-        "doc_id",
-        og_type.alias("og_type"),
-        og_image.alias("og_image"),
-        tw.alias("twitter_card"),
-        site.alias("og_site_name"),
-    )
-
-    def present(c):
-        return F.when(F.col(c) != "", F.lit(1)).otherwise(F.lit(0))
-
-    return m.select(
-        "doc_id", "og_type", "og_image", "twitter_card", "og_site_name",
-        (present("og_type") + present("og_image")
-         + present("twitter_card") + present("og_site_name"))
-        .cast("long").alias("completeness"),
-        F.when(F.col("og_image").startswith("http"), F.lit(1))
-        .otherwise(F.lit(0)).cast("int").alias("image_absolute"),
+    p = d.select("doc_id", txt.alias("txt"))
+    agents = spark.createDataFrame(
+        [("GPTBot",), ("CCBot",), ("Google-Extended",),
+         ("Applebot-Extended",)], "agent string")
+    j = p.crossJoin(F.broadcast(agents))
+    t, a = F.col("txt"), F.col("agent")
+    named = F.concat(F.lit("User-agent: "), a, F.lit("\n"))
+    full_block_nl = F.concat(named, F.lit("Disallow: /\n"))
+    full_block_end = F.concat(named, F.lit("Disallow: /"))
+    return j.select(
+        "doc_id", "agent",
+        F.when(t.contains(full_block_nl) | t.endswith(full_block_end),
+               F.lit(1)).otherwise(F.lit(0)).cast("int")
+        .alias("blocked_fully"),
+        F.when(t.contains(named), F.lit(0)).otherwise(F.lit(1))
+        .cast("int").alias("inherits_star"),
     )
 
 
-def _forum_oracle() -> str:
-    return """
-    WITH p AS (
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<div class="comment" data-depth="0" '
-            || 'data-author="u' || CAST(doc_id % 17 AS VARCHAR)
-            || '"><p>First take ' || CAST(doc_id AS VARCHAR)
-            || '.</p></div><div class="comment" data-depth="1" '
-            || 'data-author="u' || CAST((doc_id + 5) % 17 AS VARCHAR)
-            || '"><p>Replying to you.</p></div>'
-            || '<div class="comment" data-depth="0" data-author="u'
-            || CAST((doc_id + 11) % 17 AS VARCHAR)
-            || '"><p>Second thread root.</p></div>'
-          WHEN 1 THEN '<div class="comment" data-depth="0" '
-            || 'data-author="u' || CAST(doc_id % 23 AS VARCHAR)
-            || '"><p>Lone comment ' || CAST(doc_id % 7 AS VARCHAR)
-            || '.</p></div>'
-          WHEN 2 THEN '<article>No comment section '
-            || CAST(doc_id AS VARCHAR) || '</article>'
-          ELSE '<div class="comment" data-depth="0" data-author="u'
-            || CAST(doc_id % 13 AS VARCHAR) || '"><p>Q about item '
-            || CAST(doc_id AS VARCHAR) || '?</p></div>'
-            || '<div class="comment" data-depth="1" data-author="u'
-            || CAST((doc_id + 1) % 13 AS VARCHAR)
-            || '"><p>A: see the docs.</p></div>'
-            || '<div class="comment" data-depth="2" data-author="u'
-            || CAST(doc_id % 13 AS VARCHAR)
-            || '"><p>Thanks, that worked.</p></div>' END AS html
-      FROM documents),
-    fr AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS turn_idx,
-        list_extract(regexp_extract_all(html,
-          '<div class="comment"[^>]*><p>[^<]*</p></div>', 0), i) AS blk
-      FROM p, unnest(generate_series(1, len(regexp_extract_all(html,
-        '<div class="comment"[^>]*><p>[^<]*</p></div>', 0)))) AS g(i))
-    SELECT doc_id, turn_idx,
-      regexp_extract(blk, 'data-author="([^"]+)"', 1) AS author,
-      CAST(regexp_extract(blk, 'data-depth="([0-9]+)"', 1) AS BIGINT)
-        AS depth,
-      regexp_extract(blk, '<p>([^<]*)</p>', 1) AS body,
-      CAST(CASE WHEN regexp_extract(blk, 'data-depth="([0-9]+)"', 1)
-                     <> '0' THEN 1 ELSE 0 END AS INT) AS is_reply
-    FROM fr
+def _knn_label_oracle() -> str:
+    return f"""
+    WITH q AS (
+      SELECT vec_id AS qid, embedding AS qv, label AS qlabel
+      FROM embeddings WHERE vec_id % 50 = 0),
+    c AS (
+      SELECT q.qid, q.qlabel, e.vec_id AS nid, e.label AS nlabel,
+        FLOOR({_duck_cosine('e.embedding', 'q.qv')} * 1000000 + 0.5)
+          / 1000000 AS cos
+      FROM q JOIN embeddings e ON e.vec_id <> q.qid),
+    r AS (
+      SELECT *, row_number() OVER (
+        PARTITION BY qid ORDER BY cos DESC, nid) AS rn
+      FROM c)
+    SELECT CAST(qid AS BIGINT) AS query_id,
+      CAST(qlabel AS INT) AS query_label,
+      CAST(nid AS BIGINT) AS neighbor_id,
+      CAST(nlabel AS INT) AS neighbor_label,
+      CAST(CASE WHEN qlabel = nlabel THEN 1 ELSE 0 END AS INT)
+        AS same_label
+    FROM r WHERE rn = 1
     """
 
 
-@query("forum_thread_extract", _forum_oracle())
-def forum_thread_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forum/comment-thread mining (round 4): threaded discussion is
-    the open web's largest natural-dialogue source — the turn
-    sequence (author, reply depth, body) is exactly the record a
-    conversation-tuning pipeline ingests, and the same rows feed the
-    boilerplate side (comment sections are stripped from article
-    text, mined separately here). Extracts every comment block in
-    DOM order with its author handle and declared depth; a
-    three-turn Q/A/thanks thread pins depth nesting and a
-    same-author-returns turn.
+@query("knn_label_agreement", _knn_label_oracle())
+def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-NN label agreement: the standard intrinsic quality
+    check for an embedding space — if nearest neighbors don't share
+    labels, every downstream consumer (SemDeDup, IVF clustering,
+    similarity search) inherits a broken geometry, so this metric
+    gates embedding-model upgrades before the expensive reindex. A
+    FIXED 2% query sample keeps the evaluation corpus-scale-safe
+    (sample × corpus, never all-pairs; production uses the IVF index
+    for the neighbor lookup — this exact form is the eval oracle).
+    Cosines use the exact-fold + deterministic-floor discipline of
+    ann_cosine_topk; the keyed per-query window picks top-1 with a
+    vec_id tie-break.
 
-    Scale shape: one regexp_extract_all + posexplode, codegen parses,
-    no shuffle.
+    Scale shape: broadcast sample × partition-parallel corpus (BNLJ
+    on a tiny build side), keyed window over per-query groups.
+    """
+    from ocr_spark.operators.dedup import cosine, round_det
+    from pyspark.sql.window import Window
+
+    e = load_table(spark, sf_dir, "embeddings")
+    q = e.where(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qv"),
+        F.col("label").alias("qlabel"),
+    )
+    joined = e.crossJoin(F.broadcast(q)).where(
+        F.col("vec_id") != F.col("qid"))
+    c = joined.select(
+        "qid", "qlabel",
+        F.col("vec_id").alias("nid"),
+        F.col("label").alias("nlabel"),
+        round_det(cosine(F.col("embedding"), F.col("qv")), 6)
+        .alias("cos"),
+    )
+    w = Window.partitionBy("qid").orderBy(
+        F.desc("cos"), F.asc("nid"))
+    r = c.withColumn("rn", F.row_number().over(w)).where(
+        F.col("rn") == 1)
+    return r.select(
+        F.col("qid").cast("long").alias("query_id"),
+        F.col("qlabel").cast("int").alias("query_label"),
+        F.col("nid").cast("long").alias("neighbor_id"),
+        F.col("nlabel").cast("int").alias("neighbor_label"),
+        F.when(F.col("qlabel") == F.col("nlabel"), F.lit(1))
+        .otherwise(F.lit(0)).cast("int").alias("same_label"),
+    )
+
+
+def _flac_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (fields
+    exist before the container bytes are assembled)."""
+    from ocr_spark.operators.multimodal import synth_flac_corpus
+
+    rows = ", ".join(
+        f"({r['clip_id']}, {r['is_flac']}, {r['sample_rate']}, "
+        f"{r['channels']}, {r['bits_per_sample']}, {r['total_samples']}, "
+        f"{r['duration_ms']}, {r['n_blocks']}, {r['has_tags']})"
+        for r in synth_flac_corpus()
+    )
+    return (
+        "SELECT clip_id, is_flac, sample_rate, channels,"
+        " bits_per_sample, CAST(total_samples AS BIGINT) AS"
+        " total_samples, CAST(duration_ms AS BIGINT) AS duration_ms,"
+        " n_blocks, has_tags FROM (VALUES " + rows
+        + ") AS t(clip_id, is_flac, sample_rate, channels,"
+        " bits_per_sample, total_samples, duration_ms, n_blocks,"
+        " has_tags)"
+    )
+
+
+@query("flac_streaminfo_parse", _flac_oracle())
+def flac_streaminfo_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FLAC STREAMINFO harvest: sample rate, channels, bit
+    depth and total samples ride in the mandatory first metadata
+    block — so duration and quality filters (drop <16-bit, resample
+    ≠48k) run with ZERO frame decode, which matters because FLAC
+    frame decoding stays behind the named production call like the
+    rest of the compressed-audio family (mp3_id3_tags is the tag
+    sibling; this is the properties sibling). The packed 64-bit
+    word decodes bit-exactly; VORBIS_COMMENT presence routes clips
+    to the tag harvester; a non-FLAC clip pins the sentinel branch.
+
+    Scale shape: Arrow-batched mapInPandas over header bytes only.
+    """
+    from ocr_spark.operators.multimodal import (
+        flac_features,
+        synth_flac_corpus,
+    )
+
+    corpus = synth_flac_corpus()
+    base = spark.createDataFrame(
+        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
+        "clip_id int, media binary",
+    )
+    return flac_features(base.repartition(8, "clip_id"))
+
+
+def _mp4_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction."""
+    from ocr_spark.operators.multimodal import synth_mp4_corpus
+
+    rows = ", ".join(
+        f"({r['clip_id']}, {r['is_bmff']}, '{r['major_brand']}', "
+        f"{r['timescale']}, {r['duration_ms']}, {r['n_traks']}, "
+        f"{r['has_mdat']}, '{r['top_boxes']}')"
+        for r in synth_mp4_corpus()
+    )
+    return (
+        "SELECT clip_id, is_bmff, major_brand, timescale,"
+        " CAST(duration_ms AS BIGINT) AS duration_ms, n_traks,"
+        " has_mdat, top_boxes FROM (VALUES " + rows
+        + ") AS t(clip_id, is_bmff, major_brand, timescale,"
+        " duration_ms, n_traks, has_mdat, top_boxes)"
+    )
+
+
+@query("mp4_container_boxes", _mp4_oracle())
+def mp4_container_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MP4/ISO-BMFF box walk: the container structure —
+    brand, movie-header timescale/duration, track count, mdat
+    presence — is everything multimodal ROUTING needs from a video
+    payload, and none of it requires the (gated) codec decode:
+    duration gates clip-length filters, track count separates
+    video+audio from audio-only, and a missing mdat marks
+    fragmented/streaming files that need their segments fetched.
+    Two timescales (1000 and 90000) pin the integer duration
+    normalization; a RIFF payload pins the non-BMFF sentinel.
+
+    Scale shape: Arrow-batched mapInPandas over box headers only.
+    """
+    from ocr_spark.operators.multimodal import (
+        mp4_features,
+        synth_mp4_corpus,
+    )
+
+    corpus = synth_mp4_corpus()
+    base = spark.createDataFrame(
+        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
+        "clip_id int, media binary",
+    )
+    return mp4_features(base.repartition(8, "clip_id"))
+
+
+def _stickiness_oracle() -> str:
+    return """
+    WITH triples AS (
+      SELECT DISTINCT
+        strftime(ts, '%Y-%m') AS month,
+        strftime(ts, '%Y-%m-%d') AS day,
+        user_id
+      FROM events),
+    s AS (
+      SELECT month,
+        COUNT(*) AS sum_dau,
+        COUNT(DISTINCT day) AS n_days,
+        COUNT(DISTINCT user_id) AS mau
+      FROM triples GROUP BY month)
+    SELECT month,
+      CAST(sum_dau AS BIGINT) AS sum_dau,
+      CAST(n_days AS BIGINT) AS n_days,
+      CAST(mau AS BIGINT) AS mau,
+      CAST(FLOOR(1000.0 * sum_dau / (n_days * mau)) AS BIGINT)
+        AS stickiness_permille
+    FROM s ORDER BY month
+    """
+
+
+@query("active_user_stickiness", _stickiness_oracle())
+def active_user_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DAU/MAU stickiness: the classic engagement ratio —
+    average daily actives over monthly actives — computed EXACTLY as
+    integers: one distinct pass over (month, day, user) triples,
+    then counts per month (sum of per-day DAU is the triple count —
+    no per-day intermediate materializes). The permille folds the
+    average and the ratio into one integer division so neither
+    engine ever compares floats.
+
+    Scale shape: dropDuplicates is a hash aggregate with map-side
+    partial dedup on (month, day, user) — uniform keys; the second
+    aggregate is month-cardinality. Two exchanges total, both tiny
+    after the map-side combine; countDistinct at 100 TB swaps to the
+    grouped-HLL surface per the house convention.
+    """
+    _utc(spark)
+    e = load_table(spark, sf_dir, "events")
+    triples = e.select(
+        F.date_format("ts", "yyyy-MM").alias("month"),
+        F.date_format("ts", "yyyy-MM-dd").alias("day"),
+        "user_id",
+    ).dropDuplicates()
+    s = triples.groupBy("month").agg(
+        F.count(F.lit(1)).alias("sum_dau"),
+        F.countDistinct("day").alias("n_days"),
+        F.countDistinct("user_id").alias("mau"),
+    )
+    return s.select(
+        "month",
+        F.col("sum_dau").cast("long").alias("sum_dau"),
+        F.col("n_days").cast("long").alias("n_days"),
+        F.col("mau").cast("long").alias("mau"),
+        F.floor(
+            F.lit(1000.0) * F.col("sum_dau")
+            / (F.col("n_days") * F.col("mau"))).cast("long")
+        .alias("stickiness_permille"),
+    ).orderBy("month")
+
+
+def _pdf_info_oracle() -> str:
+    return """
+    SELECT doc_id,
+      CAST(CASE WHEN doc_id % 3 IN (0, 1) THEN 1 ELSE 0 END AS INT)
+        AS has_info,
+      CASE doc_id % 3
+        WHEN 0 THEN 'Report ' || CAST(doc_id % 7 AS VARCHAR)
+        WHEN 1 THEN 'Untitled Draft'
+        ELSE '' END AS title,
+      CASE doc_id % 3
+        WHEN 0 THEN 'Author ' || CAST(doc_id % 5 AS VARCHAR)
+        ELSE '' END AS author,
+      CASE doc_id % 3
+        WHEN 0 THEN '2024-03-15T12:'
+          || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') || ':00'
+        ELSE '' END AS creation_iso
+    FROM documents
+    """
+
+
+@query("pdf_info_metadata", _pdf_info_oracle())
+def pdf_info_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PDF /Info metadata harvest: title, author and
+    creation date ride in the trailer's /Info dictionary — document-
+    level provenance readable WITHOUT parsing a single page (the
+    metadata face of the pdf_extract family, the same zero-decode
+    argument as the codec-metadata queries). The writer gained an
+    /Info emitter (byte-identical output when absent, so every
+    existing PDF fixture holds); the reader resolves the trailer
+    reference and normalizes the ``D:YYYYMMDDHHmmSS`` date form to
+    ISO. Rotation: full info / title-only / no dictionary.
+
+    Scale shape: two Arrow stages over a binary column (writer +
+    parser), no shuffle.
+    """
+    import pandas as pd
+
+    from ocr_spark.functions.pdf_extract import make_pdf, parse_pdf_info
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
+
+    def run(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                i = int(doc_id)
+                v = i % 3
+                if v == 0:
+                    info = {
+                        "Title": f"Report {i % 7}",
+                        "Author": f"Author {i % 5}",
+                        "CreationDate": f"D:2024031512{i % 60:02d}00",
+                    }
+                elif v == 1:
+                    info = {"Title": "Untitled Draft"}
+                else:
+                    info = None
+                blob = make_pdf([["body text"]], info=info)
+                m = parse_pdf_info(blob)
+                rows.append(
+                    (i, m["has_info"], m["title"], m["author"],
+                     m["creation_iso"]))
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id", "has_info", "title", "author",
+                    "creation_iso",
+                ])
+
+    return d.mapInPandas(
+        run,
+        "doc_id long, has_info int, title string, author string,"
+        " creation_iso string",
+    )
+
+
+def _ogg_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction."""
+    from ocr_spark.operators.multimodal import synth_ogg_corpus
+
+    rows = ", ".join(
+        f"({r['clip_id']}, '{r['kind']}', {r['channels']}, "
+        f"{r['sample_rate']}, {r['pre_skip']}, {r['serial']})"
+        for r in synth_ogg_corpus()
+    )
+    return (
+        "SELECT clip_id, kind, channels, sample_rate, pre_skip,"
+        " CAST(serial AS BIGINT) AS serial FROM (VALUES " + rows
+        + ") AS t(clip_id, kind, channels, sample_rate, pre_skip,"
+        " serial)"
+    )
+
+
+@query("ogg_opus_head_parse", _ogg_oracle())
+def ogg_opus_head_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ogg identification-header harvest: OpusHead and
+    Vorbis id packets ride in the stream's FIRST page — channels,
+    sample rate and Opus pre-skip are everything audio routing and
+    duration estimation need before deciding whether to spend the
+    (gated) audio decode; the serial number keys multiplexed streams.
+    Completes the audio-metadata family: WAV decodes natively, MP3
+    surfaces ID3, FLAC surfaces STREAMINFO, and Ogg surfaces its id
+    headers — every major audio container now harvests without a
+    codec call.
+
+    Scale shape: Arrow-batched mapInPandas over first-page bytes.
+    """
+    from ocr_spark.operators.multimodal import (
+        ogg_features,
+        synth_ogg_corpus,
+    )
+
+    corpus = synth_ogg_corpus()
+    base = spark.createDataFrame(
+        [(r["clip_id"], bytearray(r["payload"])) for r in corpus],
+        "clip_id int, media binary",
+    )
+    return ogg_features(base.repartition(8, "clip_id"))
+
+
+def _gps_oracle() -> str:
+    """Literal-VALUES oracle from the corpus construction (exact
+    integer DMS fold computed before any bytes are assembled)."""
+    from ocr_spark.operators.multimodal import synth_gps_corpus
+
+    rows = ", ".join(
+        f"({r['img_id']}, {r['has_gps']}, '{r['byte_order']}', "
+        f"{r['lat_microdeg']}, {r['lon_microdeg']})"
+        for r in synth_gps_corpus()
+    )
+    return (
+        "SELECT img_id, has_gps, byte_order,"
+        " CAST(lat_microdeg AS BIGINT) AS lat_microdeg,"
+        " CAST(lon_microdeg AS BIGINT) AS lon_microdeg,"
+        " CAST(CASE WHEN has_gps = 1 THEN 1 ELSE 0 END AS INT)"
+        " AS strip_before_publish FROM (VALUES " + rows
+        + ") AS t(img_id, has_gps, byte_order, lat_microdeg,"
+        " lon_microdeg)"
+    )
+
+
+@query("jpeg_exif_gps", _gps_oracle())
+def jpeg_exif_gps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXIF GPS harvest: camera-written GPS IFDs put the
+    photographer's POSITION in every unstripped upload — location
+    PII at building precision (coordinate_precision_audit grades
+    the text channel; this is the metadata channel, and the
+    sub-second rationals in the planted corpus are the ~10 m case).
+    The DMS rationals fold to signed integer micro-degrees with
+    floor division — bit-exact on both engines — and every GPS
+    carrier flags strip_before_publish: a corpus that republishes
+    image bytes must scrub the IFD, not just the caption.
+
+    Scale shape: Arrow-batched mapInPandas over segment headers; no
+    entropy decode.
+    """
+    from ocr_spark.operators.multimodal import (
+        gps_features,
+        synth_gps_corpus,
+    )
+
+    corpus = synth_gps_corpus()
+    base = spark.createDataFrame(
+        [(r["img_id"], bytearray(r["payload"])) for r in corpus],
+        "img_id int, media binary",
+    )
+    out = gps_features(base.repartition(8, "img_id"))
+    return out.select(
+        "img_id", "has_gps", "byte_order",
+        F.col("lat_microdeg").cast("long").alias("lat_microdeg"),
+        F.col("lon_microdeg").cast("long").alias("lon_microdeg"),
+        F.when(F.col("has_gps") == 1, 1).otherwise(0).cast("int")
+        .alias("strip_before_publish"),
+    )
+
+
+def _typosquat_oracle() -> str:
+    return """
+    WITH brands AS (
+      SELECT unnest(['paypal', 'google', 'amazon', 'microsoft'])
+        AS brand),
+    p AS (
+      SELECT doc_id,
+        CASE doc_id % 4
+          WHEN 0 THEN 'paypa1'
+          WHEN 1 THEN 'goggle'
+          WHEN 2 THEN 'amazon'
+          ELSE 'quarterly-report' || CAST(doc_id % 7 AS VARCHAR)
+        END AS host_label
+      FROM documents),
+    j AS (
+      SELECT doc_id, host_label, brand,
+        levenshtein(host_label, brand) AS dist
+      FROM p CROSS JOIN brands),
+    best AS (
+      SELECT doc_id,
+        MIN(dist * 16 + len(brand)) AS enc
+      FROM j GROUP BY doc_id),
+    r AS (
+      SELECT b.doc_id, j.host_label, j.brand, j.dist
+      FROM best b JOIN j
+        ON j.doc_id = b.doc_id
+        AND j.dist * 16 + len(j.brand) = b.enc)
+    SELECT doc_id, host_label,
+      brand AS nearest_brand,
+      CAST(dist AS INT) AS edit_distance,
+      CAST(CASE WHEN dist = 1 THEN 1 ELSE 0 END AS INT)
+        AS is_typosquat,
+      CAST(CASE WHEN dist = 0 THEN 1 ELSE 0 END AS INT)
+        AS is_genuine
+    FROM r
+    """
+
+
+@query("typosquat_host_detect", _typosquat_oracle())
+def typosquat_host_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Typosquat host detection: edit-distance-1
+    neighbors of high-value brands ('paypa1', 'goggle') are the
+    phishing channel homograph_host_detect's script check cannot
+    see — same-script, one keystroke off. The brand dim is a
+    4-element literal (genuinely fixed-size — the broadcast that IS
+    correct at every scale, per the host_outlink_fanout precedent);
+    each host keeps its NEAREST brand via the single-BIGINT argmin
+    house pattern (dist*16+len encodes the (dist, brand-length)
+    order), distance 0 is the genuine brand itself, distance 1
+    convicts.
+
+    Scale shape: corpus × 4-row literal broadcast, HashAggregate
+    argmin, join-back on the tiny key — no sort, no window.
     """
     d = load_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
-    ds = i.cast("string")
     v = i % 4
-    html = (
-        F.when(v == 0, F.concat(
-            F.lit('<div class="comment" data-depth="0" data-author="u'),
-            (i % 17).cast("string"), F.lit('"><p>First take '), ds,
-            F.lit('.</p></div><div class="comment" data-depth="1" '
-                  'data-author="u'), ((i + 5) % 17).cast("string"),
-            F.lit('"><p>Replying to you.</p></div>'
-                  '<div class="comment" data-depth="0" data-author="u'),
-            ((i + 11) % 17).cast("string"),
-            F.lit('"><p>Second thread root.</p></div>')))
-        .when(v == 1, F.concat(
-            F.lit('<div class="comment" data-depth="0" data-author="u'),
-            (i % 23).cast("string"), F.lit('"><p>Lone comment '),
-            (i % 7).cast("string"), F.lit(".</p></div>")))
-        .when(v == 2, F.concat(
-            F.lit("<article>No comment section "), ds,
-            F.lit("</article>")))
+    host_label = (
+        F.when(v == 0, F.lit("paypa1"))
+        .when(v == 1, F.lit("goggle"))
+        .when(v == 2, F.lit("amazon"))
         .otherwise(F.concat(
-            F.lit('<div class="comment" data-depth="0" data-author="u'),
-            (i % 13).cast("string"), F.lit('"><p>Q about item '), ds,
-            F.lit('?</p></div>'
-                  '<div class="comment" data-depth="1" data-author="u'),
-            ((i + 1) % 13).cast("string"),
-            F.lit('"><p>A: see the docs.</p></div>'
-                  '<div class="comment" data-depth="2" data-author="u'),
-            (i % 13).cast("string"),
-            F.lit('"><p>Thanks, that worked.</p></div>')))
+            F.lit("quarterly-report"), (i % 7).cast("string")))
     )
-    rx = '<div class="comment"[^>]*><p>[^<]*</p></div>'
-    p = d.select("doc_id", html.alias("html"))
-    fr = p.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("html"), F.lit(rx), 0)
-        ).alias("turn_idx", "blk"),
-    )
-    b = F.col("blk")
-    depth_s = F.regexp_extract(b, 'data-depth="([0-9]+)"', 1)
-    return fr.select(
-        "doc_id",
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-        F.regexp_extract(b, 'data-author="([^"]+)"', 1).alias("author"),
-        depth_s.cast("long").alias("depth"),
-        F.regexp_extract(b, "<p>([^<]*)</p>", 1).alias("body"),
-        F.when(depth_s != "0", F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("is_reply"),
+    p = d.select("doc_id", host_label.alias("host_label"))
+    brands = spark.createDataFrame(
+        [("paypal",), ("google",), ("amazon",), ("microsoft",)],
+        "brand string")
+    j = p.crossJoin(F.broadcast(brands)).select(
+        "doc_id", "host_label", "brand",
+        F.levenshtein("host_label", "brand").alias("dist"))
+    j = j.withColumn("enc", F.col("dist") * 16 + F.length("brand"))
+    best = j.groupBy("doc_id").agg(F.min("enc").alias("enc"))
+    r = j.join(best, on=["doc_id", "enc"])
+    return r.select(
+        "doc_id", "host_label",
+        F.col("brand").alias("nearest_brand"),
+        F.col("dist").cast("int").alias("edit_distance"),
+        F.when(F.col("dist") == 1, 1).otherwise(0).cast("int")
+        .alias("is_typosquat"),
+        F.when(F.col("dist") == 0, 1).otherwise(0).cast("int")
+        .alias("is_genuine"),
     )
 
 
-def _stacktrace_oracle() -> str:
+def _email_thread_oracle() -> str:
     return """
-    WITH p AS (
+    WITH RECURSIVE p AS (
       SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN 'Traceback (most recent call last):' || chr(10)
-            || '  File "app' || CAST(doc_id % 7 AS VARCHAR)
-            || '.py", line ' || CAST(doc_id % 90 + 1 AS VARCHAR)
-            || ', in main' || chr(10)
-            || '  File "lib.py", line 4, in helper' || chr(10)
-            || 'ValueError: bad input ' || CAST(doc_id AS VARCHAR)
-          WHEN 1 THEN 'java.lang.NullPointerException: oops '
-            || CAST(doc_id AS VARCHAR) || chr(10) || chr(9)
-            || 'at com.ex.Svc.run(Svc.java:'
-            || CAST(doc_id % 200 AS VARCHAR) || ')' || chr(10) || chr(9)
-            || 'at com.ex.Main.main(Main.java:7)'
-          WHEN 2 THEN 'A normal paragraph about files and lines, doc '
-            || CAST(doc_id AS VARCHAR) || '.'
-          ELSE 'Forum answer ' || CAST(doc_id AS VARCHAR)
-            || ': run it again.' END AS text
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-        CASE WHEN contains(text, 'Traceback (most recent call last):')
-               THEN 'python'
-             WHEN regexp_matches(text,
-               '[a-z.]+\\.[A-Za-z]+Exception') THEN 'java'
-             ELSE 'none' END AS kind,
-        CAST(len(regexp_extract_all(text, '  File "', 0)) AS BIGINT)
-          AS py_frames,
-        CAST(len(regexp_extract_all(text, chr(9) || 'at ', 0))
-          AS BIGINT) AS java_frames,
-        regexp_extract(text,
-          '([A-Za-z][A-Za-z0-9_.]*(?:Error|Exception))', 1) AS exc
-      FROM p)
-    SELECT doc_id, kind,
-      CASE WHEN kind = 'python' THEN py_frames
-           WHEN kind = 'java' THEN java_frames
-           ELSE CAST(0 AS BIGINT) END AS n_frames,
-      CASE WHEN kind = 'none' THEN '' ELSE exc END AS exception_type,
-      CAST(CASE WHEN kind <> 'none' THEN 1 ELSE 0 END AS INT)
-        AS is_stacktrace
-    FROM m
+        '<m' || CAST(doc_id AS VARCHAR) || '@list.example>' AS mid,
+        CASE WHEN doc_id % 5 > 0 THEN '<m'
+          || CAST(doc_id - 1 AS VARCHAR) || '@list.example>'
+          ELSE '' END AS irt
+      FROM documents
+      WHERE doc_id % 7 <> 3),
+    e AS (
+      SELECT c.doc_id, c.mid, c.irt, par.mid AS pmid
+      FROM p c LEFT JOIN p par ON c.irt = par.mid),
+    walk AS (
+      SELECT doc_id, mid, mid AS root, 0 AS depth
+      FROM e WHERE pmid IS NULL
+      UNION ALL
+      SELECT e.doc_id, e.mid, w.root, w.depth + 1
+      FROM e JOIN walk w ON e.pmid = w.mid),
+    sz AS (SELECT root, COUNT(*) AS n FROM walk GROUP BY root)
+    SELECT w.doc_id, w.mid AS message_id, w.root AS root_id,
+      CAST(w.depth AS INT) AS depth,
+      CAST(CASE WHEN w.depth = 0 AND e.irt <> '' THEN 1 ELSE 0 END
+        AS INT) AS is_orphan,
+      CAST(sz.n AS INT) AS thread_size
+    FROM walk w
+    JOIN e ON w.mid = e.mid
+    JOIN sz ON w.root = sz.root
     """
 
 
-@query("stacktrace_detect", _stacktrace_oracle())
-def stacktrace_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stack-trace detection (round 4): raw tracebacks pasted into
-    pastebins, CI logs, and forum posts are a curation fork — noise
-    for a prose corpus, signal for a code corpus — so the filter must
-    label rather than just drop. Detects Python (``Traceback`` header,
-    ``File "..."`` frames) and Java (``package.SomeException`` plus
-    tab-``at`` frames) traces, counts frames with the
-    language-appropriate frame marker, and extracts the exception
-    type; prose mentioning "files and lines" pins the negative.
+@query("email_thread_graph", _email_thread_oracle())
+def email_thread_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Email-thread reconstruction from In-Reply-To headers (round
+    4): mailing-list archives carry the reply GRAPH in their
+    headers — Message-ID / In-Reply-To edges assemble multi-turn
+    dialogue trees the way rel=next assembles article chains, and
+    thread depth/size are the dialogue-quality priors the forum
+    extractor reads off DOM nesting. Dangling references (the
+    parent message never archived, or its page failed the gate)
+    make the child an ORPHAN root — pinned here by prose pages
+    breaking real chains — instead of dropping the subtree.
 
-    Scale shape: pure codegen contains/regexp projection, no shuffle.
+    Scale shape: header parse is per-row; root/depth resolve via
+    the shared log-bounded _pointer_jump doubling (ceil(log2(h))
+    equi-joins on uniform message-id keys, same discipline as
+    pagination_rel_chains); thread sizes are one hash-agg joined
+    back. No window, no quadratic walk.
+    """
+    from ocr_spark.operators.crawl import _pointer_jump
+
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    txt = F.when(i % 7 == 3, F.lit(
+        "the message id of this thread was lost to time")).otherwise(
+        F.concat(
+            F.lit("Message-ID: <m"), i.cast("string"),
+            F.lit("@list.example>\n"),
+            F.when(i % 5 > 0, F.concat(
+                F.lit("In-Reply-To: <m"), (i - 1).cast("string"),
+                F.lit("@list.example>\n"))).otherwise(F.lit("")),
+            F.lit("Subject: "),
+            F.when(i % 5 > 0, F.lit("Re: ")).otherwise(F.lit("")),
+            F.lit("topic "), (i / 5).cast("long").cast("string"),
+            F.lit("\n\nbody text")))
+    p = d.select("doc_id", txt.alias("txt"))
+    msgs = p.where(F.regexp_like(F.col("txt"), F.lit(
+        "(?m)^Message-ID: <[^>]+>$"))).select(
+        "doc_id",
+        F.regexp_extract("txt", "(?m)^Message-ID: (<[^>]+>)$", 1)
+        .alias("mid"),
+        F.regexp_extract("txt", "(?m)^In-Reply-To: (<[^>]+>)$", 1)
+        .alias("irt"))
+    parents = msgs.select(F.col("mid").alias("pmid"))
+    edges = (
+        msgs.where(F.col("irt") != "")
+        .join(parents, F.col("irt") == F.col("pmid"), "inner")
+        .select(F.col("mid").alias("src"), F.col("irt").alias("dst"))
+    )
+    f, _rounds = _pointer_jump(edges, 8, with_distance=True)
+    res = msgs.join(f, msgs["mid"] == f["src"], "left").select(
+        "doc_id",
+        msgs["mid"].alias("message_id"),
+        F.coalesce(f["dst"], msgs["mid"]).alias("root_id"),
+        F.coalesce(f["d"], F.lit(0).cast("long")).cast("int")
+        .alias("depth"),
+        F.when((F.coalesce(f["dst"], msgs["mid"]) == msgs["mid"])
+               & (msgs["irt"] != ""), 1)
+        .otherwise(0).cast("int").alias("is_orphan"),
+    )
+    sz = res.groupBy("root_id").agg(
+        F.count("*").cast("int").alias("thread_size"))
+    return res.join(sz, "root_id", "inner").select(
+        "doc_id", "message_id", "root_id", "depth", "is_orphan",
+        "thread_size")
+
+
+def _zipf_oracle() -> str:
+    return """
+    WITH uni AS (
+      SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM (
+        SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+      GROUP BY w),
+    top AS (
+      SELECT w, c,
+        CAST(row_number() OVER (ORDER BY c DESC, w) AS BIGINT)
+          AS rank
+      FROM uni ORDER BY c DESC, w LIMIT 100),
+    xy AS (
+      SELECT CAST(COUNT(*) AS BIGINT) AS n,
+        SUM(ln(CAST(rank AS DOUBLE))) AS sx,
+        SUM(ln(CAST(c AS DOUBLE))) AS sy,
+        SUM(ln(CAST(rank AS DOUBLE)) * ln(CAST(c AS DOUBLE)))
+          AS sxy,
+        SUM(ln(CAST(rank AS DOUBLE)) * ln(CAST(rank AS DOUBLE)))
+          AS sxx
+      FROM top)
+    SELECT n AS n_ranks,
+      round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4)
+        AS zipf_slope,
+      round((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx)
+        / n, 4) AS log_intercept
+    FROM xy
+    """
+
+
+@query("zipf_slope_estimate", _zipf_oracle())
+def zipf_slope_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zipf-slope estimation: the log-log regression of
+    frequency on rank over the top-100 vocabulary — natural
+    corpora sit near slope -1, and deviation is a corpus-health
+    diagnostic (too shallow = boilerplate-flooded vocabulary,
+    too steep = template domination), complementing
+    vocab_coverage_curve's cumulative view with a single
+    comparable statistic. Least squares via the closed-form sums
+    so the heavy part stays one token hash-agg plus a bounded
+    top-100 TakeOrdered; ln/round 4dp agree across engines well
+    beyond ulp noise (pinned by the gate itself).
+
+    Scale shape: corpus hash-agg -> top-k -> 100-row bounded
+    window + scalar aggregate. No corpus-sized sort or window.
+    """
+    from pyspark.sql import Window
+
+    from ocr_spark.operators.dedup import tokens
+
+    d = load_table(spark, sf_dir, "documents")
+    uni = (
+        d.select(F.explode(tokens(F.col("text"))).alias("w"))
+        .groupBy("w").agg(F.count("*").cast("long").alias("c"))
+    )
+    top = uni.orderBy(F.desc("c"), "w").limit(100)
+    w_r = Window.orderBy(F.desc("c"), "w")
+    ranked = top.select(
+        "c", F.row_number().over(w_r).cast("long").alias("rank"))
+    x = F.log(F.col("rank").cast("double"))
+    y = F.log(F.col("c").cast("double"))
+    xy = ranked.agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(x * y).alias("sxy"),
+        F.sum(x * x).alias("sxx"))
+    n = F.col("n")
+    slope = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (
+        n * F.col("sxx") - F.col("sx") * F.col("sx"))
+    return xy.select(
+        n.alias("n_ranks"),
+        F.round(slope, 4).alias("zipf_slope"),
+        F.round((F.col("sy") - slope * F.col("sx")) / n, 4)
+        .alias("log_intercept"),
+    )
+
+
+def _lei_check(base18: str) -> str:
+    # ISO 17442: append '00', expand base-36 chars to digits, the
+    # check pair is 98 - (that number mod 97)
+    s = "".join(str(int(c, 36)) for c in base18 + "00")
+    return f"{98 - int(s) % 97:02d}"
+
+
+_PMI_SENTENCES = [
+    "strong coffee beats weak tea every morning",
+    "strong coffee fuels the night shift crew",
+    "weak tea calms the long evening hours",
+    "the night crew brews strong coffee again",
+    "every morning the kettle sings for tea",
+    "shift change brings fresh coffee and tea",
+    "long hours demand strong coffee not weak tea",
+]
+
+
+def _bigram_pmi_oracle() -> str:
+    case = "\n".join(
+        f"          WHEN {k} THEN '{s}'"
+        for k, s in enumerate(_PMI_SENTENCES)
+    )
+    return f"""
+    WITH p AS (
+      SELECT doc_id, CASE doc_id % 7
+{case}
+        END AS body
+      FROM documents),
+    tok AS (SELECT string_split(body, ' ') AS ts FROM p),
+    uni AS (SELECT unnest(ts) AS w FROM tok),
+    ucnt AS (SELECT w, COUNT(*) AS cw FROM uni GROUP BY w),
+    big AS (
+      SELECT unnest(list_transform(range(1, len(ts)),
+        j -> ts[j] || ' ' || ts[j + 1])) AS bg
+      FROM tok),
+    bcnt AS (SELECT bg, COUNT(*) AS cxy FROM big GROUP BY bg),
+    tot AS (SELECT
+      (SELECT COUNT(*) FROM p) AS nd,
+      (SELECT CAST(SUM(cw) AS BIGINT) FROM ucnt) AS tu,
+      (SELECT CAST(SUM(cxy) AS BIGINT) FROM bcnt) AS tb)
+    SELECT
+      split_part(bg, ' ', 1) AS w1,
+      split_part(bg, ' ', 2) AS w2,
+      CAST(cxy AS BIGINT) AS cnt_xy,
+      CAST((1000 * cxy * ((tu * tu) // (u1.cw * u2.cw))) // tb
+        AS BIGINT) AS lift_permille
+    FROM bcnt
+    CROSS JOIN tot
+    JOIN ucnt u1 ON u1.w = split_part(bg, ' ', 1)
+    JOIN ucnt u2 ON u2.w = split_part(bg, ' ', 2)
+    WHERE cxy * 5 >= nd
+    """
+
+
+@query("bigram_pmi_mining", _bigram_pmi_oracle())
+def bigram_pmi_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus bigram-association mining: the collocation
+    statistic behind phrase vocabularies and tokenizer merge
+    candidates — bigram counts against their unigram marginals,
+    with the PMI exponent kept as an exact integer lift
+    (1000·c_xy·T_u² div c_x·c_y·T_b — the log is monotone, so
+    ranking and thresholds need only the ratio). The df floor is
+    corpus-relative (c_xy·5 ≥ n_docs), so no absolute count is
+    baked in. Integer overflow bound: marginals divide in before
+    the count multiplies (lift = 1000·c_xy·(T_u² div c_x·c_y)
+    div T_b), bounding every intermediate by max(T_u², 1000·T_u)
+    — safe to ~3·10^9 tokens per aggregation scope; beyond that
+    the swap is per-shard lift with log-space merge, documented
+    here rather than silently approximated (ANSI mode throws on
+    the overflow instead of wrapping, so the bound is loud).
+
+    Scale shape: one explode → two corpus HashAggregates with
+    map-side partials; the unigram marginals join back on word
+    keys (AQE broadcasts while the vocab fits); totals ride a
+    single-row cross join — no window, no sort.
     """
     d = load_table(spark, sf_dir, "documents")
     i = F.col("doc_id")
-    ds = i.cast("string")
-    v = i % 4
-    text = (
-        F.when(v == 0, F.concat(
-            F.lit("Traceback (most recent call last):\n"
-                  '  File "app'), (i % 7).cast("string"),
-            F.lit('.py", line '), (i % 90 + 1).cast("string"),
-            F.lit(", in main\n"
-                  '  File "lib.py", line 4, in helper\n'
-                  "ValueError: bad input "), ds))
-        .when(v == 1, F.concat(
-            F.lit("java.lang.NullPointerException: oops "), ds,
-            F.lit("\n\tat com.ex.Svc.run(Svc.java:"),
-            (i % 200).cast("string"),
-            F.lit(")\n\tat com.ex.Main.main(Main.java:7)")))
-        .when(v == 2, F.concat(
-            F.lit("A normal paragraph about files and lines, doc "),
-            ds, F.lit(".")))
-        .otherwise(F.concat(
-            F.lit("Forum answer "), ds, F.lit(": run it again.")))
+    v = i % 7
+    body = F.when(v == 0, F.lit(_PMI_SENTENCES[0]))
+    for k in range(1, 7):
+        body = body.when(v == k, F.lit(_PMI_SENTENCES[k]))
+    p = d.select("doc_id", body.alias("body"))
+    # tok staged: the tokenized corpus feeds the unigram and
+    # bigram passes; ucnt feeds the marginal join sides u1/u2 AND the
+    # totals — staged so each corpus pass runs once (the un-staged
+    # plan carried 6 corpus scans)
+    tok = p.select(F.split("body", " ").alias("ts")) \
+        .localCheckpoint(eager=False)
+    uni = tok.select(F.explode("ts").alias("w"))
+    ucnt = uni.groupBy("w").agg(F.count("*").alias("cw")) \
+        .localCheckpoint(eager=False)
+    # single-token bodies: sequence(1, 0) defaults to step -1 and
+    # yields [1, 0], whose element_at(ts, 0) throws — guard to the
+    # empty array (matching the oracle's empty range(1, 1))
+    big_idx = F.when(
+        F.size("ts") >= 2, F.sequence(F.lit(1), F.size("ts") - 1)
+    ).otherwise(F.array().cast("array<int>"))
+    bigs = tok.select(F.explode(F.transform(
+        big_idx,
+        lambda j: F.concat(
+            F.element_at(F.col("ts"), j), F.lit(" "),
+            F.element_at(F.col("ts"), j + 1)))).alias("bg"))
+    bcnt = bigs.groupBy("bg").agg(F.count("*").alias("cxy")) \
+        .localCheckpoint(eager=False)
+    tot = (
+        p.agg(F.count("*").alias("nd"))
+        .crossJoin(ucnt.agg(F.sum("cw").alias("tu")))
+        .crossJoin(bcnt.agg(F.sum("cxy").alias("tb")))
     )
-    p = d.select("doc_id", text.alias("text"))
-    t = F.col("text")
-    kind = (
-        F.when(t.contains("Traceback (most recent call last):"),
-               F.lit("python"))
-        .when(t.rlike(r"[a-z.]+\.[A-Za-z]+Exception"), F.lit("java"))
-        .otherwise(F.lit("none"))
+    u1 = ucnt.select(F.col("w").alias("w1_k"), F.col("cw").alias("cw1"))
+    u2 = ucnt.select(F.col("w").alias("w2_k"), F.col("cw").alias("cw2"))
+    w1 = F.element_at(F.split("bg", " "), 1)
+    w2 = F.element_at(F.split("bg", " "), 2)
+    j = (
+        bcnt.select("bg", "cxy", w1.alias("w1"), w2.alias("w2"))
+        .crossJoin(tot)
+        .join(u1, F.col("w1") == F.col("w1_k"))
+        .join(u2, F.col("w2") == F.col("w2_k"))
+        .where(F.col("cxy") * 5 >= F.col("nd"))
     )
-    m = p.select(
-        "doc_id",
-        kind.alias("kind"),
-        F.size(F.regexp_extract_all(t, F.lit('  File "'), 0))
-        .cast("long").alias("py_frames"),
-        F.size(F.regexp_extract_all(t, F.lit("\tat "), 0))
-        .cast("long").alias("java_frames"),
-        F.regexp_extract(
-            t, "([A-Za-z][A-Za-z0-9_.]*(?:Error|Exception))", 1
-        ).alias("exc"),
-    )
-    k = F.col("kind")
-    return m.select(
-        "doc_id", "kind",
-        F.when(k == "python", F.col("py_frames"))
-        .when(k == "java", F.col("java_frames"))
-        .otherwise(F.lit(0))
-        .cast("long").alias("n_frames"),
-        F.when(k == "none", F.lit("")).otherwise(F.col("exc"))
-        .alias("exception_type"),
-        F.when(k != "none", F.lit(1)).otherwise(F.lit(0))
-        .cast("int").alias("is_stacktrace"),
+    # divide the marginals in BEFORE multiplying by counts: the naive
+    # 1000*cxy*tu^2 numerator overflows BIGINT once tu exceeds ~3e6 on
+    # a dense vocab (found by the scale smoke's 50k track under ANSI,
+    # which throws instead of silently wrapping). The reordered form
+    # is bounded by 1000*tu (cxy <= min(cx, cy)). Floor division uses
+    # Spark's integer `div` operator (exact on longs, matching
+    # DuckDB's `//` on BIGINT); the earlier subtract-mod-then-`/`
+    # form routed through a DOUBLE and silently lost exactness once
+    # tu^2 passed 2^53 (~9.5e7 tokens) — far below the loud ANSI
+    # BIGINT overflow at ~3e9 this query's bound is stated against.
+    tu2 = F.col("tu") * F.col("tu")
+    cxcy = F.col("cw1") * F.col("cw2")
+    core = F.expr("tu2 div cxcy")
+    num = F.lit(1000) * F.col("cxy") * core
+    return j.withColumn("tu2", tu2).withColumn("cxcy", cxcy).select(
+        "w1", "w2",
+        F.col("cxy").cast("long").alias("cnt_xy"),
+        F.col("tb"), num.alias("num"),
+    ).selectExpr(
+        "w1", "w2", "cnt_xy",
+        "CAST(num div tb AS BIGINT) AS lift_permille",
     )
 
 
-def _recipe_oracle() -> str:
+def _rare_term_oracle() -> str:
     return """
     WITH p AS (
       SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN '<div itemtype="https://schema.org/Recipe">'
-            || '<h1 itemprop="name">Stew ' || CAST(doc_id % 9 AS VARCHAR)
-            || '</h1><span itemprop="recipeYield">4 servings</span>'
-            || '<meta itemprop="cookTime" content="PT'
-            || CAST(doc_id % 3 AS VARCHAR) || 'H'
-            || CAST(doc_id % 60 AS VARCHAR) || 'M">'
-            || '<li itemprop="recipeIngredient">beans</li>'
-            || '<li itemprop="recipeIngredient">salt</li>'
-            || '<li itemprop="recipeIngredient">stock</li></div>'
-          WHEN 1 THEN '<div itemtype="https://schema.org/Recipe">'
-            || '<h1 itemprop="name">Toast ' || CAST(doc_id % 5 AS VARCHAR)
-            || '</h1><li itemprop="recipeIngredient">bread</li></div>'
-          WHEN 2 THEN '<p>Not a recipe, doc ' || CAST(doc_id AS VARCHAR)
-            || '</p>'
-          ELSE '<div itemtype="https://schema.org/Recipe">'
-            || '<h1 itemprop="name">Soup ' || CAST(doc_id % 7 AS VARCHAR)
-            || '</h1><meta itemprop="cookTime" content="PT'
-            || CAST(doc_id % 90 + 1 AS VARCHAR) || 'M">'
-            || '<li itemprop="recipeIngredient">water</li>'
-            || '<li itemprop="recipeIngredient">misc</li></div>'
-          END AS html
+        'the quick task ran fine topic'
+        || CAST(doc_id % 37 AS VARCHAR)
+        || CASE WHEN (doc_id // 37) % 2 = 1
+          THEN ' topic' || CAST(doc_id % 37 AS VARCHAR)
+          ELSE '' END AS body
       FROM documents),
-    m AS (
-      SELECT doc_id,
-        CASE WHEN contains(html, 'schema.org/Recipe') THEN 1 ELSE 0 END
-          AS has_recipe,
-        regexp_extract(html, 'itemprop="name">([^<]+)<', 1) AS name,
-        regexp_extract(html,
-          'itemprop="recipeYield">([^<]+)<', 1) AS recipe_yield,
-        regexp_extract(html,
-          'cookTime" content="PT(?:([0-9]+)H)?(?:([0-9]+)M)?"', 1)
-          AS ch,
-        regexp_extract(html,
-          'cookTime" content="PT(?:([0-9]+)H)?(?:([0-9]+)M)?"', 2)
-          AS cm,
-        CAST(len(regexp_extract_all(html,
-          'itemprop="recipeIngredient"', 0)) AS BIGINT) AS n_ingredients
-      FROM p)
-    SELECT doc_id, CAST(has_recipe AS INT) AS has_recipe, name,
-      recipe_yield,
-      CAST((CASE WHEN ch = '' THEN 0 ELSE CAST(ch AS BIGINT) END) * 60
-         + (CASE WHEN cm = '' THEN 0 ELSE CAST(cm AS BIGINT) END)
-        AS BIGINT) AS cook_minutes,
-      n_ingredients
-    FROM m
+    tok AS (
+      SELECT doc_id, unnest(string_split(body, ' ')) AS w FROM p),
+    tf AS (
+      SELECT doc_id, w, COUNT(*) AS tf FROM tok
+      GROUP BY doc_id, w),
+    df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
+    tot AS (SELECT COUNT(*) AS nd FROM p),
+    scored AS (
+      SELECT tf.doc_id, tf.w,
+        tf.tf * (tot.nd // df.df) AS score
+      FROM tf JOIN df ON tf.w = df.w CROSS JOIN tot),
+    mx AS (
+      SELECT doc_id, MAX(score) AS top_score FROM scored
+      GROUP BY doc_id)
+    SELECT s.doc_id, MIN(s.w) AS top_term,
+      CAST(m.top_score AS BIGINT) AS top_score
+    FROM scored s JOIN mx m
+      ON s.doc_id = m.doc_id AND s.score = m.top_score
+    GROUP BY s.doc_id, m.top_score
     """
+
+
+@query("doc_rare_term_pick", _rare_term_oracle())
+def doc_rare_term_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document rarity-weighted top term: the
+    tf·idf argmax that names what a document is ABOUT — term
+    frequency times an integer rarity weight (n_docs div df; the
+    idf log is monotone, so the argmax is unchanged and the
+    arithmetic stays exact on both engines). The corpus splits
+    into 37 topic groups whose marker token (~1/37 df) always
+    beats the universal stopwords (df = n, weight 1), and
+    alternate docs double the marker so tf participates.
+
+    Scale shape: the anchor_text_consensus aggregate discipline —
+    tf, df, and the per-doc max are all corpus HashAggregates
+    with map-side partials; the STRING winner comes from joining
+    back on score = max and MIN(term) over the (typically
+    single-row) tie set, so the only string-ordered aggregate
+    runs on pre-aggregated rows, never the corpus.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    topic = F.concat(F.lit("topic"), (i % 37).cast("string"))
+    body = F.concat(
+        F.lit("the quick task ran fine "), topic,
+        F.when((((i - i % 37) / 37).cast("long") % 2) == 1,
+               F.concat(F.lit(" "), topic)).otherwise(F.lit("")))
+    p = d.select("doc_id", body.alias("body"))
+    tok = p.select(
+        "doc_id", F.explode(F.split("body", " ")).alias("w"))
+    tf = tok.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
+    dfreq = tf.groupBy("w").agg(F.count("*").alias("df"))
+    tot = p.agg(F.count("*").alias("nd"))
+    weight = ((F.col("nd") - F.col("nd") % F.col("df")) / F.col("df"))
+    # scored staged: it feeds the per-doc max AND the tie join
+    # side, and its lineage carries the corpus token explode twice
+    # (tf + df) — staged, the explode computes once
+    scored = (
+        tf.join(dfreq, "w").crossJoin(tot)
+        .select("doc_id", "w",
+                (F.col("tf") * weight).cast("long").alias("score"))
+        .localCheckpoint(eager=False)
+    )
+    mx = scored.groupBy("doc_id").agg(F.max("score").alias("top_score"))
+    # alias both sides: a same-lineage join on bare columns lets the
+    # analyzer collapse doc_id == doc_id to TRUE and the join widens
+    # to score-only — correct after the group-by, but corpus fan-out
+    s_a = scored.alias("s")
+    m_a = mx.alias("m")
+    tie = s_a.join(
+        m_a, (F.col("s.doc_id") == F.col("m.doc_id"))
+        & (F.col("s.score") == F.col("m.top_score")))
+    return (
+        tie.groupBy(F.col("s.doc_id").alias("doc_id"),
+                    F.col("m.top_score").alias("top_score"))
+        .agg(F.min(F.col("s.w")).alias("top_term"))
+        .select("doc_id", "top_term",
+                F.col("top_score").cast("long").alias("top_score"))
+    )
+
+
+def _two_hop_oracle() -> str:
+    return """
+    WITH e0 AS (
+      SELECT DISTINCT
+        (doc_id * 13 + 5) % 101 AS src,
+        ((doc_id // 101) * 7 + doc_id * 3 + 1) % 101 AS dst
+      FROM documents),
+    e AS (SELECT src, dst FROM e0 WHERE src <> dst),
+    onehop AS (
+      SELECT src, COUNT(*) AS n_one_hop FROM e GROUP BY src),
+    twohop AS (
+      SELECT e1.src AS src, COUNT(DISTINCT e2.dst) AS n_two_hop
+      FROM e e1 JOIN e e2 ON e1.dst = e2.src
+      WHERE e2.dst <> e1.src
+      GROUP BY e1.src)
+    SELECT o.src AS src,
+      CAST(o.n_one_hop AS BIGINT) AS n_one_hop,
+      CAST(COALESCE(t.n_two_hop, 0) AS BIGINT) AS n_two_hop
+    FROM onehop o LEFT JOIN twohop t ON o.src = t.src
+    """
+
+
+@query("graph_two_hop_reach", _two_hop_oracle())
+def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-hop reachability census: the
+    friend-of-a-friend expansion behind crawl frontier scoring
+    and link-spam neighborhoods — for every source node, how
+    many distinct nodes are exactly one edge-join away from its
+    out-neighbors (returning to the source excluded). The edge
+    synthesis decorrelates endpoints through the div-101 term
+    (the host_link_reciprocity lesson: an affine map of one
+    variable makes dst a function of src and collapses the
+    graph to disjoint orbits).
+
+    Scale shape: DISTINCT edge dedup (hash), one equi-join on
+    the mid node, COUNT(DISTINCT) via Spark's two-level partial
+    aggregate. The node space is bounded by construction (101)
+    — the real-web shape shards this join by host-hash and caps
+    per-node degree exactly like tracker_coownership_edges'
+    fan cap; no window, no sort, no cartesian.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    src = (i * 13 + 5) % 101
+    dst = (((i - i % 101) / 101).cast("long") * 7 + i * 3 + 1) % 101
+    e = (
+        d.select(src.alias("src"), dst.alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+    onehop = e.groupBy("src").agg(F.count("*").alias("n_one_hop"))
+    e2 = e.select(F.col("src").alias("mid"), F.col("dst").alias("dst2"))
+    twohop = (
+        e.join(e2, e.dst == e2.mid)
+        .where(F.col("dst2") != F.col("src"))
+        .groupBy("src")
+        .agg(F.countDistinct("dst2").alias("n_two_hop"))
+    )
+    return (
+        onehop.join(twohop, "src", "left")
+        .select(
+            "src",
+            F.col("n_one_hop").cast("long").alias("n_one_hop"),
+            F.coalesce(F.col("n_two_hop"), F.lit(0)).cast("long")
+            .alias("n_two_hop"),
+        )
+    )
+
+
+def _luhn15_check(base14: str) -> str:
+    # Luhn check digit for a 14-digit IMEI base: doubling runs over
+    # the even positions (1-indexed, left-to-right) of the 15-digit
+    # result's first 14 — i.e. positions 2,4,..,14
+    s = 0
+    for j, c in enumerate(base14, start=1):
+        v = int(c)
+        if j % 2 == 0:
+            v *= 2
+        s += v // 10 + v % 10
+    return str((10 - s % 10) % 10)
+
+
+def _aba_check(base8: str) -> str:
+    d = [int(c) for c in base8]
+    s = 3 * (d[0] + d[3] + d[6]) + 7 * (d[1] + d[4] + d[7]) + (d[2] + d[5])
+    return str((10 - s % 10) % 10)
+
+
+def _funnel_oracle() -> str:
+    return """
+    WITH e AS (
+      SELECT user_id, event_type, ts FROM events),
+    s1 AS (
+      SELECT user_id, MIN(ts) AS t1 FROM e
+      WHERE event_type = 'view' GROUP BY user_id),
+    s2 AS (
+      SELECT e.user_id, MIN(e.ts) AS t2
+      FROM e JOIN s1 ON e.user_id = s1.user_id
+      WHERE e.event_type = 'click' AND e.ts > s1.t1
+      GROUP BY e.user_id),
+    s3 AS (
+      SELECT e.user_id, MIN(e.ts) AS t3
+      FROM e JOIN s2 ON e.user_id = s2.user_id
+      WHERE e.event_type = 'purchase' AND e.ts > s2.t2
+      GROUP BY e.user_id),
+    c AS (SELECT
+      (SELECT COUNT(DISTINCT user_id) FROM e) AS n_total,
+      (SELECT COUNT(*) FROM s1) AS n_step1,
+      (SELECT COUNT(*) FROM s2) AS n_step2,
+      (SELECT COUNT(*) FROM s3) AS n_step3)
+    SELECT
+      CAST(n_total AS BIGINT) AS n_total,
+      CAST(n_step1 AS BIGINT) AS n_step1,
+      CAST(n_step2 AS BIGINT) AS n_step2,
+      CAST(n_step3 AS BIGINT) AS n_step3,
+      CAST(CASE WHEN n_step1 = 0 THEN 0
+        ELSE (1000 * n_step2) // n_step1 END AS BIGINT)
+        AS conv12_permille,
+      CAST(CASE WHEN n_step2 = 0 THEN 0
+        ELSE (1000 * n_step3) // n_step2 END AS BIGINT)
+        AS conv23_permille
+    FROM c
+    """
+
+
+@query("event_funnel_conversion", _funnel_oracle())
+def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered funnel conversion: the classic product
+    analytics shape — view → click → purchase, where each step
+    must happen strictly AFTER the user's previous step (min-ts
+    chaining, not mere type membership: a purchase before the
+    first view does not convert). Timestamps stay internal to
+    each engine (only counts and integer permille ratios are
+    emitted, with zero-denominator guards for corpora missing a
+    step type — the ANSI division discipline).
+
+    Scale shape: three per-user HashAggregates chained by
+    equi-joins on user_id (one shuffle key reused end-to-end),
+    scalar counts cross-joined at the end — no window over raw
+    events, no sort.
+    """
+    e = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts")
+    # per-stage tables staged: each feeds the next stage AND its
+    # own count — un-staged, stage k's count replans stages 1..k
+    # (the funnel_counts staging discipline)
+    s1 = (e.where(F.col("event_type") == "view")
+          .groupBy("user_id").agg(F.min("ts").alias("t1"))
+          .localCheckpoint(eager=False))
+    s2 = (
+        e.where(F.col("event_type") == "click")
+        .join(s1, "user_id")
+        .where(F.col("ts") > F.col("t1"))
+        .groupBy("user_id").agg(F.min("ts").alias("t2"))
+        .localCheckpoint(eager=False))
+    s3 = (
+        e.where(F.col("event_type") == "purchase")
+        .join(s2, "user_id")
+        .where(F.col("ts") > F.col("t2"))
+        .groupBy("user_id").agg(F.min("ts").alias("t3"))
+        .localCheckpoint(eager=False))
+    c = (
+        e.agg(F.countDistinct("user_id").alias("n_total"))
+        .crossJoin(s1.agg(F.count("*").alias("n_step1")))
+        .crossJoin(s2.agg(F.count("*").alias("n_step2")))
+        .crossJoin(s3.agg(F.count("*").alias("n_step3")))
+    )
+
+    def _permille(num, den):
+        val = F.lit(1000) * num
+        return F.when(den == 0, F.lit(0)).otherwise(
+            (val - val % den) / den).cast("long")
+
+    return c.select(
+        F.col("n_total").cast("long").alias("n_total"),
+        F.col("n_step1").cast("long").alias("n_step1"),
+        F.col("n_step2").cast("long").alias("n_step2"),
+        F.col("n_step3").cast("long").alias("n_step3"),
+        _permille(F.col("n_step2"), F.col("n_step1"))
+        .alias("conv12_permille"),
+        _permille(F.col("n_step3"), F.col("n_step2"))
+        .alias("conv23_permille"),
+    )
+
+
+def _luhn_ok(digstr: str) -> bool:
+    total = 0
+    for j, ch in enumerate(reversed(digstr), start=1):
+        v = int(ch)
+        if j % 2 == 0:
+            v *= 2
+        total += v // 10 + v % 10
+    return total % 10 == 0
+
+
+def _isin_with_check(base11: str) -> str:
+    # ISO 6166: expand base-36 chars to digits, append the check digit
+    # that makes the whole digit string pass Luhn
+    exp = "".join(str(int(c, 36)) for c in base11)
+    for cd in range(10):
+        if _luhn_ok(exp + str(cd)):
+            return base11 + str(cd)
+    raise AssertionError("unreachable")
+
+
+def _imo_check(base6: str) -> str:
+    s = sum(int(c) * w for c, w in zip(base6, [7, 6, 5, 4, 3, 2]))
+    return str(s % 10)
+
+
+def _syndication_line_oracle() -> str:
+    return """
+    WITH p AS (
+      SELECT doc_id,
+        'h' || CAST(doc_id % 23 AS VARCHAR) AS host,
+        'Copyright Example Media Network' || chr(10)
+        || 'Quote ' || CAST(doc_id % 150 AS VARCHAR)
+        || ': the market rewards patience' || chr(10)
+        || 'Local update ' || CAST(doc_id AS VARCHAR) AS body
+      FROM documents),
+    lines AS (
+      SELECT DISTINCT host,
+        unnest(string_split(body, chr(10))) AS line
+      FROM p),
+    df AS (
+      SELECT line, COUNT(*) AS n_hosts FROM lines
+      GROUP BY line),
+    keep AS (
+      SELECT line FROM df WHERE n_hosts BETWEEN 2 AND 10),
+    kl AS (
+      SELECT l.host, l.line FROM lines l
+      JOIN keep k ON l.line = k.line)
+    SELECT a.host AS host_a, b.host AS host_b,
+      CAST(COUNT(*) AS BIGINT) AS shared_lines
+    FROM kl a JOIN kl b
+      ON a.line = b.line AND a.host < b.host
+    GROUP BY a.host, b.host
+    """
+
+
+@query("cross_host_line_syndication", _syndication_line_oracle())
+def cross_host_line_syndication(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-host line-syndication edges: a distinctive
+    sentence appearing on a SMALL set of hosts is a syndication
+    or plagiarism edge — the host-pair projection of
+    ccnet_line_dedup's span table. The df band (2..10 hosts) is
+    load-bearing twice: df=1 local lines never join, and the
+    universal copyright line (23 hosts) is excluded BEFORE the
+    self-join — the same cap-before-join discipline as
+    tracker_coownership_edges, which bounds the pair fan-out to
+    C(10,2) per line.
+
+    Scale shape: distinct (host, line) HashAggregate, df
+    HashAggregate, band filter, then the self-join runs only on
+    band-surviving lines; per-pair count is one more hash agg.
+    At corpus scale the line key becomes a 64-bit hash; the
+    string key here keeps both engines' join semantics
+    identical.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    nl = "\n"
+    body = F.concat(
+        F.lit("Copyright Example Media Network" + nl + "Quote "),
+        (i % 150).cast("string"),
+        F.lit(": the market rewards patience" + nl + "Local update "),
+        i.cast("string"))
+    p = d.select(
+        F.concat(F.lit("h"), (i % 23).cast("string")).alias("host"),
+        body.alias("body"))
+    lines = (
+        p.select("host", F.explode(F.split("body", nl)).alias("line"))
+        .distinct()
+    )
+    dfreq = lines.groupBy("line").agg(F.count("*").alias("n_hosts"))
+    keep = dfreq.where(
+        (F.col("n_hosts") >= 2) & (F.col("n_hosts") <= 10)
+    ).select("line")
+    kl = lines.join(keep, "line")
+    a = kl.select(F.col("host").alias("host_a"), "line")
+    b = kl.select(F.col("host").alias("host_b"), "line")
+    return (
+        a.join(b, "line")
+        .where(F.col("host_a") < F.col("host_b"))
+        .groupBy("host_a", "host_b")
+        .agg(F.count("*").cast("long").alias("shared_lines"))
+    )
+
+
+def _host_priors_oracle() -> str:
+    return """
+    WITH h AS (
+      SELECT doc_id,
+        'h' || CAST(doc_id % 23 AS VARCHAR) AS host,
+        lang, n_chars
+      FROM documents),
+    tot AS (
+      SELECT COUNT(*) AS nd, CAST(SUM(n_chars) AS BIGINT) AS sc
+      FROM h),
+    agg AS (
+      SELECT host,
+        COUNT(*) AS n_docs,
+        CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
+        COUNT(DISTINCT lang) AS n_langs
+      FROM h GROUP BY host),
+    lng AS (
+      SELECT h.host, COUNT(*) AS n_long
+      FROM h CROSS JOIN tot
+      WHERE h.n_chars * tot.nd > 2 * tot.sc
+      GROUP BY h.host)
+    SELECT a.host AS host,
+      CAST(a.n_docs AS BIGINT) AS n_docs,
+      CAST(a.sum_chars // a.n_docs AS BIGINT) AS mean_chars,
+      CAST(a.n_langs AS INT) AS n_langs,
+      CAST((1000 * COALESCE(l.n_long, 0)) // a.n_docs AS BIGINT)
+        AS long_doc_permille
+    FROM agg a LEFT JOIN lng l ON a.host = l.host
+    """
+
+
+@query("host_quality_priors_join", _host_priors_oracle())
+def host_quality_priors_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-host quality-prior rollup: the multi-signal
+    join that crawl-budget decisions actually consume — doc
+    volume, exact integer mean length, language spread, and the
+    long-document share measured against the CORPUS mean via
+    integer cross-multiplication (n_chars·N > 2·Σchars — no
+    float mean materialized, the lang_length_outliers
+    discipline applied host-wise). Composes the real lang and
+    n_chars columns; every signal joins back on the host key.
+
+    Scale shape: two per-host HashAggregates + a scalar-
+    broadcast total + one left join on host — the shuffle key
+    reused; countDistinct plans Spark's two-level partial
+    aggregate; no window, no sort.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    i = F.col("doc_id")
+    h = d.select(
+        F.concat(F.lit("h"), (i % 23).cast("string")).alias("host"),
+        "lang", "n_chars")
+    tot = h.agg(
+        F.count("*").alias("nd"),
+        F.sum("n_chars").alias("sc"))
+    agg = h.groupBy("host").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_chars").alias("sum_chars"),
+        F.countDistinct("lang").alias("n_langs"))
+    lng = (
+        h.crossJoin(tot)
+        .where(F.col("n_chars") * F.col("nd") > 2 * F.col("sc"))
+        .groupBy("host").agg(F.count("*").alias("n_long")))
+    j = agg.join(lng, "host", "left")
+    mean_chars = ((F.col("sum_chars")
+                   - F.col("sum_chars") % F.col("n_docs"))
+                  / F.col("n_docs")).cast("long")
+    nl = F.lit(1000) * F.coalesce(F.col("n_long"), F.lit(0))
+    permille = ((nl - nl % F.col("n_docs")) / F.col("n_docs"))
+    return j.select(
+        "host",
+        F.col("n_docs").cast("long").alias("n_docs"),
+        mean_chars.alias("mean_chars"),
+        F.col("n_langs").cast("int").alias("n_langs"),
+        permille.cast("long").alias("long_doc_permille"),
+    )

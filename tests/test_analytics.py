@@ -244,6 +244,32 @@ def test_skew_report_exact(spark):
     assert r.top1_share_x10000 == 6 * 10000 // 13
 
 
+@pytest.mark.parametrize("desc", [False, True])
+def test_two_tier_rank_matches_row_number_with_nulls_and_ties(spark, desc):
+    from pyspark.sql import Window
+
+    from ocr_spark.operators.analytics import two_tier_rank
+
+    rng = random.Random(17)
+    # ties, NULLs, and values far past 2^53 (the bucket map is a
+    # double division: monotone, so ranks stay exact)
+    vals = [None, 3, 3, 0, -5, 2**62, 2**62 - 1, 2**62, None, 7, -(2**61)]
+    rows = [(i, rng.choice(vals)) for i in range(200)]
+    df = spark.createDataFrame(rows, "id long, v long")
+    got = {
+        r.id: r.rank
+        for r in two_tier_rank(df, "v", ["id"], desc=desc, n_buckets=4).collect()
+    }
+    order = [F.col("v").desc() if desc else F.col("v").asc(), F.col("id")]
+    want = {
+        r.id: r.rank
+        for r in df.select(
+            "id", F.row_number().over(Window.orderBy(*order)).alias("rank")
+        ).collect()
+    }
+    assert got == want
+
+
 def test_column_profile_exact(spark):
     from ocr_spark.operators.analytics import column_profile
 

@@ -52,3 +52,24 @@ def test_spark_submit_with_pyfiles_zip(spark, tmp_path):
     assert summary["missing_urls"] == 0
     assert summary["shards_remaining"] == 0
     assert len(summary["shards_processed"]) == 8
+
+
+def test_every_module_compiles_without_syntax_warnings():
+    """Invalid escape sequences (``"\\["`` in a regex-bearing docstring)
+    warn at compile time and become errors in later Pythons: every
+    shipped module must compile cleanly with the warning as an error."""
+    import glob
+    import warnings
+
+    files = sorted(
+        glob.glob(os.path.join(ROOT, "ocr_spark", "**", "*.py"), recursive=True)
+    )
+    assert files
+    for path in files:
+        with open(path, encoding="utf-8") as fh:
+            src = fh.read()
+        with warnings.catch_warnings():
+            # invalid escapes warn as DeprecationWarning before 3.12
+            warnings.simplefilter("error", SyntaxWarning)
+            warnings.simplefilter("error", DeprecationWarning)
+            compile(src, path, "exec")

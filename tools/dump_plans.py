@@ -51,15 +51,6 @@ COMMENTARY = {
         "partition keeps K rows per host BEFORE the shuffle — bounded "
         "state under web-host skew."
     ),
-    "decontaminate_ngrams": (
-        "Benchmark shingle set broadcast (eval sets are tiny vs the "
-        "corpus); overlap count is a map-side BroadcastHashJoin + "
-        "partially-aggregated groupBy on doc_id — one shuffle."
-    ),
-    "stratified_sample": (
-        "Pure map-side hash-bucket filter: no shuffle, no state, "
-        "reproducible across engines/retries (no rand())."
-    ),
     "pack_training_sequences": (
         "Two-tier prefix sum: the only globally-ordered window runs on "
         "the BUCKET aggregate (corpus/100 rows); the per-doc cumsum "
@@ -188,14 +179,6 @@ COMMENTARY = {
         "Exchange beyond the scan, so the mask plan is embarrassingly "
         "parallel and reproducible under any partitioning (the "
         "mid-epoch-resume property)."
-    ),
-    "bpe_compression": (
-        "The learned vocabulary is vocab-sized (words, not "
-        "occurrences); the compression figure is one global aggregate "
-        "with map-side partials over it — the expensive part is the "
-        "merge chain itself (bpe_learn_merges: per-round codegen "
-        "string ops + one tiny argmax broadcast), which this query "
-        "reuses unchanged."
     ),
     "mojibake_repair": (
         "Encoding repair is a nested codegen StringReplace chain over "
@@ -346,12 +329,6 @@ COMMENTARY = {
         "shuffle — a second rendering of the same parse the extraction "
         "UDF does; pipelines inside the extraction stage."
     ),
-    "robots_wildcard_filter": (
-        "Rule fan-out by literal-array explode (no BNLJ), matching via "
-        "BroadcastHashJoin on host + column-pattern regexp_like; "
-        "most-specific-match precedence as a single-BIGINT argmax — "
-        "HashAggregate with map-side combine, never a string max_by."
-    ),
     "bitext_mine_pairs": (
         "Candidates from the exact-recall pivot-banded cosine join; "
         "per-source best match as max over ONE BIGINT encoding "
@@ -416,25 +393,6 @@ COMMENTARY = {
         "unioned back, so the null join key never funnels a "
         "corpus-sized bucket through one task."
     ),
-    "url_path_template_mining": (
-        "Digit-normalized skeleton projection then ONE HashAggregate "
-        "on (host, skeleton) with map-side partial combine — the "
-        "route-table rollup collapses the corpus before its single "
-        "shuffle; keys are uniform in host, no sort."
-    ),
-    "shortlink_detect": (
-        "The shortener dimension is tiny and static, so the join is "
-        "an EXPLICIT BroadcastHashJoin (BuildRight): the corpus side "
-        "streams through untouched — no shuffle, no sort, left-outer "
-        "keeps non-shortened links."
-    ),
-    "dom_depth_profile": (
-        "Tag explode -> running open-minus-close sum over a "
-        "per-document window (each partition is one page's tag list, "
-        "bounded) -> HashAggregate on doc_id; the window and the "
-        "aggregate share the doc_id partitioning so the plan carries "
-        "ONE exchange."
-    ),
     "tracker_coownership_edges": (
         "Bipartite host-tracker projection: distinct (hash-agg) -> "
         "tracker fan-count hash-agg rejoined as the cap filter (AQE "
@@ -470,9 +428,8 @@ COMMENTARY = {
     "graph_two_hop_reach": (
         "Friend-of-friend census: DISTINCT edge dedup (hash) -> one "
         "equi-join on the mid node -> COUNT(DISTINCT) two-level partial "
-        "aggregate. Edge endpoints decorrelate through a div term (the "
-        "host_link_reciprocity lesson: affine maps of one variable "
-        "collapse the graph to orbits)."
+        "aggregate. Edge endpoints decorrelate through a div term (affine "
+        "maps of one variable collapse the graph to orbits)."
     ),
     "event_funnel_conversion": (
         "Ordered funnel: three per-user HashAggregates chained by "
@@ -480,19 +437,6 @@ COMMENTARY = {
         "min-ts step chaining keeps timestamps engine-internal; scalar "
         "counts cross-join at the end with zero-denominator-guarded "
         "integer permilles."
-    ),
-    "user_retention_cohorts": (
-        "Cohorts on calendar-date STRINGS with the per-user min over "
-        "INTEGER epoch-days — the string min's immutable buffer planned "
-        "SortAggregate (caught by the plan contract); the epoch-day "
-        "encode/decode keeps every aggregate hash."
-    ),
-    "heavy_user_event_share": (
-        "Concentration census without a ranking window: per-user "
-        "HashAggregate, scalar totals, and the >= 2x-mean threshold as "
-        "integer cross-multiplication (cnt*n_users >= 2*total) — a "
-        "top-decile formulation would sort the user table; this stays "
-        "hash-only."
     ),
     "cross_host_line_syndication": (
         "Line-level host-pair projection: distinct (host, line) "
@@ -507,20 +451,6 @@ COMMENTARY = {
         "left join on host; the long-doc share is integer "
         "cross-multiplied (n_chars*N > 2*sum), no float mean ever "
         "materialized; countDistinct plans the two-level partial."
-    ),
-    "source_lang_contingency": (
-        "Independence audit: joint (source, lang) HashAggregate; "
-        "marginals re-aggregate FROM the joint (not the corpus); cells "
-        "join back on their keys with a scalar grand total; deviation "
-        "flags are integer cross-multiplications (obs*N vs 2*row*col) — "
-        "the chi-square question with no float."
-    ),
-    "source_dominant_lang": (
-        "Categorical argmax via the single-BIGINT encoding (cnt*8 + "
-        "lang_id, decoded by div/mod) — the kmeans_assign fix pattern "
-        "applied to a string category: MAX over a long hash-aggregates "
-        "with map-side partials where max_by(lang, cnt) would plan a "
-        "struct-buffer SortAggregate."
     ),
     # --- round-5 additions: full coverage of bench + curated first-50 ---
     "q3_shipping_priority": (
