@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ocr_spark.kernels.util import split_pages
+
 
 def _runs(m: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """All dark runs of a bool mask: (row, xs, xe) with xe exclusive."""
@@ -39,18 +41,15 @@ def _runs(m: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return ys, starts, ends
 
 
-def label_boxes(mask: np.ndarray, min_area: int = 1) -> list[tuple[int, int, int, int]]:
-    """8-connected components of a boolean mask -> bounding boxes.
-
-    Returns [(x0, y0, x1, y1)] with exclusive right/bottom edges,
-    sorted by (y0, x0). Deterministic for a given mask.
-    """
-    m = np.asarray(mask, dtype=bool)
-    if not m.any():
-        return []
-    h, w = m.shape
+def _label(m: np.ndarray, min_area: int):
+    """Boxes (x0, y0, x1, y1) of the 8-connected components of a 2-D
+    bool mask with area >= min_area, sorted by (y0, x0)."""
     row, xs, xe = _runs(m)
     n = len(row)
+    if not n:
+        e = np.zeros(0, dtype=np.intp)
+        return e, e, e, e
+    w = m.shape[1]
 
     # adjacency: run i (row y) touches prev-row run j iff
     # xe_j - 1 >= xs_i - 1 and xs_j <= xe_i  (8-connectivity, xe excl).
@@ -102,9 +101,32 @@ def label_boxes(mask: np.ndarray, min_area: int = 1) -> list[tuple[int, int, int
     area = np.add.reduceat((xe - xs)[order], starts)
 
     keep = area >= min_area
-    out = [
-        (int(a), int(b), int(c), int(d))
-        for a, b, c, d in zip(x0[keep], y0[keep], x1[keep], y1[keep])
-    ]
-    out.sort(key=lambda b: (b[1], b[0]))
-    return out
+    x0, y0, x1, y1 = x0[keep], y0[keep], x1[keep], y1[keep]
+    # stable (y0, x0) order over components in root order
+    order = np.lexsort((x0, y0))
+    return x0[order], y0[order], x1[order], y1[order]
+
+
+def label_boxes(mask: np.ndarray, min_area: int = 1):
+    """8-connected components of a boolean mask -> bounding boxes.
+
+    Returns [(x0, y0, x1, y1)] with exclusive right/bottom edges,
+    sorted by (y0, x0). Deterministic for a given mask. A `(..., h, w)`
+    stack returns one such list per page, pages in C order: they are
+    labeled in one pass, stacked with a blank row between pages so no
+    component crosses a page boundary.
+    """
+    m = np.asarray(mask, dtype=bool)
+    h, w = m.shape[-2:]
+    if m.ndim == 2:
+        x0, y0, x1, y1 = _label(m, min_area)
+        return list(zip(x0.tolist(), y0.tolist(), x1.tolist(), y1.tolist()))
+    pages = m.reshape(-1, h, w)
+    n = len(pages)
+    tall = np.zeros((n, h + 1, w), dtype=bool)
+    tall[:, :h] = pages
+    x0, y0, x1, y1 = _label(tall.reshape(n * (h + 1), w), min_area)
+    pg, y0 = np.divmod(y0, h + 1)
+    y1 = y1 - pg * (h + 1)
+    boxes = list(zip(x0.tolist(), y0.tolist(), x1.tolist(), y1.tolist()))
+    return split_pages(boxes, pg, n)

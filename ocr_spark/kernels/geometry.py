@@ -68,200 +68,213 @@ def splity(arr: np.ndarray, y: float) -> tuple[np.ndarray, np.ndarray]:
     return np.ascontiguousarray(a[:h1]), np.ascontiguousarray(a[h1:])
 
 
-def shearx(arr: np.ndarray, t: float) -> np.ndarray:
-    """Horizontal shear: row y shifts by (y - h/2)*t with linear interp
-    and edge replication (transform.c:203-240).
+def _stack(arr: np.ndarray, param=0):
+    """(n, h, w) float32 view of a page or stack plus its per-page
+    parameter broadcast to (n,)."""
+    a = np.asarray(arr, dtype=F32)
+    p = np.broadcast_to(np.asarray(param, dtype=F32), a.shape[:-2]).reshape(-1)
+    return a.reshape((-1,) + a.shape[-2:]), p
 
-    Vectorized over the whole image: each output row reads only its own
-    source row, so one full-grid gather + one float32 madd reproduces
-    the per-row C loop bit-for-bit (identical elementwise ops); edge
-    replication is a second gather with per-row clamped x."""
-    src = np.asarray(arr, dtype=F32).copy()
-    h, w = src.shape
-    t = F32(t)
-    assert abs(t) <= 1
-    ys = np.arange(h)
+
+def shearx(arr: np.ndarray, t) -> np.ndarray:
+    """Horizontal shear: row y shifts by (y - h/2)*t with linear interp
+    and edge replication (transform.c:203-240). `t` is a scalar or one
+    factor per page of a stack.
+
+    Vectorized over the whole stack: each output row reads only its own
+    source row, so one flat-index gather pair + one float32 madd
+    reproduces the per-row C loop bit-for-bit (identical elementwise
+    ops). Row y's valid span is x in [max(0, 1-di), w-1 - max(di, 0)];
+    outside it the C replicates the span's edge value, so clamping
+    x + di into [max(di, 1), w-1 + min(di, 0)] reads exactly the
+    interpolation the C writes there."""
+    src, t = _stack(arr, t)
+    n, h, w = src.shape
+    assert np.all(np.abs(t) <= 1)
     # dr = float32((y - h//2) * t), same scalar promotion as the C
-    dr = ((ys - h // 2).astype(F32) * t).astype(F32)
+    dr = ((np.arange(h) - h // 2).astype(F32)[None, :] * t[:, None]).astype(F32)
     di = np.floor(dr).astype(np.int32)
     df = (dr.astype(np.float64) - di).astype(F32)
-    cb = df[:, None]
-    ca = (F32(1) - df).astype(F32)[:, None]
-
-    xs = np.arange(w, dtype=np.int32)[None, :]
-    gx = xs + di[:, None]
-    a = src[ys[:, None], np.clip(gx, 0, w - 1)]
-    b = src[ys[:, None], np.clip(gx - 1, 0, w - 1)]
-    interp = (cb * a + ca * b).astype(F32)
-
-    # valid interpolation span per row: [max(0, 1-di), w-1 - max(di, 0)];
-    # outside it the C replicates the edge interpolated value
-    lo = np.maximum(0, 1 - di)
-    hi = (w - 1) - np.maximum(di, 0)
-    out = np.take_along_axis(
-        interp, np.clip(xs, lo[:, None], np.maximum(hi, 0)[:, None]), axis=1
-    )
-    # degenerate rows (lo > w-1 or hi < 0: shift exceeds the width, the
-    # C would read OOB / write nothing) keep the original row, matching
-    # the per-row loop's no-op branches
-    degen = (lo > w - 1) | (hi < 0)
+    cb = df[..., None]
+    ca = (F32(1) - df).astype(F32)[..., None]
+    # degenerate rows (shift exceeds the width: the C would read OOB /
+    # write nothing) keep the original row, matching the per-row loop's
+    # no-op branches; they gather in-bounds garbage with di = 0 first
+    degen = (di < 2 - w) | (di > w - 1)
+    di = np.where(degen, 0, di)[..., None]
+    x = np.clip(np.arange(w, dtype=np.int32) + di, np.maximum(di, 1), w - 1 + np.minimum(di, 0))
+    x = x + (np.arange(n * h, dtype=np.intp) * w).reshape(n, h, 1)
+    flat = src.reshape(-1)
+    out = cb * flat[x] + ca * flat[x - 1]
     if degen.any():
         out[degen] = src[degen]
-    return out
+    return out.reshape(np.shape(arr))
 
 
-def sheary(arr: np.ndarray, t: float) -> np.ndarray:
+def sheary(arr: np.ndarray, t) -> np.ndarray:
     """Vertical shear about the center column, two sweeps (down for the
     side shifting from below, up for the other) so it's in-place safe
-    (transform.c:242-311)."""
-    p = np.asarray(arr, dtype=F32).copy()
-    h, w = p.shape
-    t = F32(t)
-    assert abs(t) <= 1
+    (transform.c:242-311). `t` is a scalar or one factor per page.
+
+    Vectorized over the whole stack. The per-row loop was in-place
+    safe because the down pass only reads rows >= y (still pristine
+    when row y is written) and the up pass only reads rows <= y on the
+    complementary columns — so EVERY read sees the original image, and
+    full-grid gathers reproduce it bit-for-bit (identical elementwise
+    float32 ops). Each page's sign of t picks which columns take the
+    down-pass rules. Reads go through a copy zero-padded by |dy|+1
+    rows above and below: where the C reads past the page (UB in the
+    reference; a zero-padded allocation reads 0.0, which is the
+    semantics we define) the pad supplies the 0.0, and wherever the
+    interpolation is used both of its rows are inside the page."""
+    src, t = _stack(arr, t)
+    n, h, w = src.shape
+    assert np.all(np.abs(t) <= 1)
     xs = np.arange(w)
-    dr = ((w // 2 - xs) * t).astype(F32)
+    dr = ((w // 2 - xs)[None, :] * t[:, None]).astype(F32)
     dy = np.floor(dr).astype(np.int32)
-    df = (dr.astype(np.float64) - np.floor(dr.astype(np.float64))).astype(F32)
     df = (dr - dy.astype(F32)).astype(F32)  # dr - floor(dr), float32
+    down_cols = np.where((t > 0)[:, None], xs < w // 2, xs >= w // 2)
 
-    if t > 0:
-        down_cols = xs < w // 2
-    else:
-        down_cols = xs >= w // 2
-    up_cols = ~down_cols
-
-    # Vectorized over the whole grid. The per-row loop was in-place
-    # safe because the down pass only reads rows >= y (still pristine
-    # when row y is written) and the up pass only reads rows <= y on
-    # the complementary columns — so EVERY read sees the original
-    # image, and a single pristine copy + full-grid gathers reproduces
-    # it bit-for-bit (identical elementwise float32 ops).
-    src = p.copy()
-    ys_col = np.arange(h, dtype=np.int32)[:, None]
-
-    # down pass (transform.c:264-280)
-    dc = xs[down_cols]
-    if len(dc):
-        ys_d = ys_col + dy[dc][None, :]
-        has_next = (ys_d + 1) <= h - 1
-        yy = np.clip(ys_d, 0, h - 1)
-        nxt = np.clip(ys_d + 1, 0, h - 1)
-        f = df[dc][None, :]
-        interp = (src[yy, dc[None, :]] * (F32(1) - f) + src[nxt, dc[None, :]] * f).astype(F32)
-        # transform.c:272 reads *(p+d) even when y+dy > h-1 — UB in the
-        # reference; observed through a zero-padded allocation it reads
-        # 0.0, which is the semantics we define
-        plain = np.where(ys_d <= h - 1, src[yy, dc[None, :]], F32(0))
-        p[:, dc] = np.where(has_next, interp, plain)
-
-    # up pass (transform.c:284-306)
-    uc = xs[up_cols]
-    if len(uc):
-        ys_u = ys_col + dy[uc][None, :]
-        over = (ys_u + 1) >= h          # buf = *p (d==0 asserted in C)
-        under = ys_u < 0                # buf = *(p+d+w)
-        yy = np.clip(ys_u, 0, h - 1)
-        nxt_i = ys_u + 1
-        nxt = np.clip(nxt_i, 0, h - 1)
-        f = df[uc][None, :]
-        interp = (src[yy, uc[None, :]] * (F32(1) - f) + src[nxt, uc[None, :]] * f).astype(F32)
-        # transform.c:298 reads *(p+d+w) even when y+dy+1 < 0 — UB in
-        # the reference; zero-padded observation reads 0.0
-        under_val = np.where(nxt_i >= 0, src[nxt, uc[None, :]], F32(0))
-        p[:, uc] = np.where(
-            over, src[ys_col, uc[None, :]], np.where(under, under_val, interp)
-        )
-    return p
+    pad = int(np.abs(dy).max(initial=0)) + 1
+    padded = np.zeros((n, h + 2 * pad, w), dtype=F32)
+    padded[:, pad : pad + h] = src
+    flat = padded.reshape(-1)
+    # flat index of source row y + dy: one broadcast add of a row term
+    # and a per-(page, column) term
+    page0 = (np.arange(n, dtype=np.intp) * padded[0].size)[:, None]
+    col = (dy.astype(np.intp) + pad) * w + xs + page0
+    at = (np.arange(h, dtype=np.intp) * w)[None, :, None] + col[:, None, :]
+    here = flat[at]  # row y+dy (0.0 past the page)
+    below = flat[w:][at]  # row y+dy+1 (0.0 past the page)
+    f = df[:, None, :]
+    out = here * (F32(1) - f) + below * f
+    # Off the interpolation: down columns (dy >= 0) past y+dy+1 > h-1
+    # keep row y+dy (transform.c:264-280); up columns (dy <= 0) take
+    # the pristine pixel once y+dy+1 >= h (buf = *p, d==0 asserted in
+    # C) and row y+dy+1 above the top (transform.c:284-306)
+    y = np.arange(h)[None, :, None]
+    down = down_cols[:, None, :]
+    bottom = y >= (h - 1 - dy)[:, None, :]
+    np.copyto(out, here, where=bottom & down)
+    np.copyto(out, src, where=bottom & ~down)
+    np.copyto(out, below, where=(y < -dy[:, None, :]) & ~down)
+    return out.reshape(np.shape(arr))
 
 
-def skew(arr: np.ndarray, angle_deg: float) -> np.ndarray:
-    """Small-angle rotation as three shears (Paeth), transform.c:126-134."""
+def _paeth(angle_deg: float) -> tuple:
+    """(shear-x, shear-y) factors of the three-shear rotation."""
     if abs(angle_deg) > 45:
         raise ValueError("skew: angle must be between -45 and 45")
     ang = F32(np.float64(F32(angle_deg)) * (math.pi / 180))
     b = F32(math.sin(np.float64(ang)))
     a = F32(np.float64(b) / (1 + math.cos(np.float64(ang))))
+    return a, b
+
+
+def skew(arr: np.ndarray, angle_deg) -> np.ndarray:
+    """Small-angle rotation as three shears (Paeth), transform.c:126-134.
+    `angle_deg` is a scalar or one angle per page of a stack."""
+    lead = np.shape(arr)[:-2]
+    angles = np.broadcast_to(np.asarray(angle_deg, dtype=np.float64), lead)
+    ab = np.array([_paeth(float(x)) for x in angles.reshape(-1)], dtype=F32)
+    a = ab[:, 0].reshape(lead)
+    b = ab[:, 1].reshape(lead)
     out = shearx(arr, a)
     out = sheary(out, b)
     return shearx(out, a)
 
 
-def _skew_score_sparse(
-    d: int, h: int, w: int, yy: np.ndarray, xx: np.ndarray, vals: np.ndarray
-) -> float:
-    """Sum of squared projection profile after virtual shear by d px
-    end-to-end (transform.c:136-155), over the NONZERO gated pixels
-    only. Bit-exact vs the dense scan: the accumulator starts at +0.0
-    and every value is >= 0, so adding the skipped 0.0 entries is an
-    exact float32 no-op; (yy, xx) come from np.nonzero (row-major), so
-    surviving adds keep the C's scan order. The RMS gate typically
-    zeroes ~90% of the edge image, and detect_skew calls this ~13
-    times, so the sparse form is the difference between ~24 ms and
-    ~3 ms per page."""
-    v = np.zeros(h + w, dtype=F32)
-    ad = abs(d)
-    # segment boundaries: x < w*(i+1)/(|d|+1)  (integer division)
-    bounds = np.array([(w * (i + 1)) // (ad + 1) for i in range(ad + 1)])
-    seg = np.searchsorted(bounds, np.arange(w), side="right")
-    if d >= 0:
-        j = yy + seg[xx]
-    else:
-        j = yy + (w - seg[xx])
-    np.add.at(v, j, vals)
-    vv = v.astype(F32) * v.astype(F32)
-    return float(np.cumsum(vv, dtype=F32)[-1])
+def _segment_shifts(ds: np.ndarray, w: int) -> np.ndarray:
+    """(len(ds), w) profile-bin shift of each column x after a virtual
+    shear by ds[i] px end-to-end (transform.c:136-155): column x falls
+    in segment #{k in 1..|d|+1 : w*k // (|d|+1) <= x}, counted in
+    closed form as min(|d|+1, ((x+1)(|d|+1) - 1) // w); negative
+    displacements mirror it to w - segment."""
+    a1 = (np.abs(ds) + 1)[:, None]
+    seg = np.minimum(a1, ((np.arange(1, w + 1) * a1) - 1) // w)
+    return np.where(ds[:, None] >= 0, seg, w - seg)
 
 
-def _skew_score(d: int, test: np.ndarray) -> float:
-    """Dense wrapper kept for parity tests (transform.c:136-155)."""
-    h, w = test.shape
-    a = np.abs(test, dtype=F32)
-    yy, xx = np.nonzero(a)
-    return _skew_score_sparse(d, h, w, yy, xx, a[yy, xx])
+def _trunc_div3(x: int) -> int:
+    return x // 3 if x >= 0 else -((-x) // 3)
 
 
-def detect_skew(arr: np.ndarray) -> float:
+def detect_skew(arr: np.ndarray):
     """Deskew detection (transform.c:157-201): horizontal-edge image,
     RMS gate, bracketing search over displacement maximizing the
-    squared profile; returns degrees."""
-    p = np.asarray(arr, dtype=F32)
-    h, w = p.shape
-    t_img = np.abs(p[: h - 1] - p[1:]).astype(F32)
-    tt = (t_img * t_img).astype(F32)
-    s = np.cumsum(tt.ravel(), dtype=F32)[-1]  # float32 sequential sum
-    s = F32(math.sqrt(np.float64(s) / w / (h - 1)))
-    test = np.where(t_img < s, F32(0), t_img)
-    # sparse gated-edge representation, shared by every score call
-    yy, xx = np.nonzero(test)
-    vals = test[yy, xx]
+    squared profile; returns degrees — a float for a 2-D page, an
+    array over a stack's leading axes.
+
+    Every page of a stack runs the search in lockstep, each with its
+    own displacement: one vectorized score call per step scores every
+    page (a page whose bracket has closed re-scores and ignores it).
+    A score is the sum of the squared projection profile after a
+    virtual shear by d px end-to-end (transform.c:136-155), over the
+    NONZERO gated pixels only: the accumulator starts at +0.0 and every
+    value is >= 0, so the skipped 0.0 entries are exact float32 no-ops,
+    and np.add.at keeps each page's row-major add order. When every
+    value is an integer and each page's total is < 2^24 (binary pages),
+    every float32 partial sum is exact, so an exact bincount gives the
+    same profile."""
+    lead = np.shape(arr)[:-2]
+    p, _ = _stack(arr)
+    n, h, w = p.shape
     hh = h - 1
+    t_img = np.abs(p[:, :hh] - p[:, 1:]).astype(F32)
+    tt = (t_img * t_img).astype(F32)
+    s = np.cumsum(tt.reshape(n, -1), axis=1, dtype=F32)[:, -1]  # float32 sequential sum
+    s = np.sqrt(s.astype(np.float64) / w / hh).astype(F32)
+    # sparse gated-edge representation (the RMS gate zeroes ~90% of
+    # the edge image), shared by every score: flat index in scan order
+    at = np.flatnonzero(~(t_img < s[:, None, None]) & (t_img != 0))
+    vals = t_img.reshape(-1)[at]
+    pg, rest = np.divmod(at, hh * w)
+    yy, xx = np.divmod(rest, w)
+    row = pg * (hh + w) + yy  # profile bin before the shear shift
+    col = pg * w + xx
+    exact_sum = bool(
+        np.all(vals == np.floor(vals))
+        and np.bincount(pg, vals.astype(np.float64), minlength=n).max(initial=0) < 2**24
+    )
 
-    def score(d: int) -> float:
-        return _skew_score_sparse(d, hh, w, yy, xx, vals)
+    def score(ds: list) -> list:
+        j = row + _segment_shifts(np.array(ds), w).reshape(-1)[col]
+        if exact_sum:
+            v = np.bincount(j, vals, minlength=n * (hh + w)).astype(F32)
+        else:
+            v = np.zeros(n * (hh + w), dtype=F32)
+            np.add.at(v, j, vals)
+        vv = v * v
+        return np.cumsum(vv.reshape(n, hh + w), axis=1, dtype=F32)[:, -1].tolist()
 
-    def trunc_div3(x: int) -> int:
-        return x // 3 if x >= 0 else -((-x) // 3)
-
-    a = w // 10
-    b = -a
+    a = [w // 10] * n
+    b = [-x for x in a]
     sa = score(a)
     sb = score(b)
-    while abs(a - b) > 1:
-        if sa > sb:
-            b = trunc_div3(5 * a - 2 * b)
-            sb = score(b)
-        else:
-            a = trunc_div3(5 * b - 2 * a)
-            sa = score(a)
-    if sb > sa:
-        sa, a = sb, b
-    if a == 0:
-        t = F32(0)
-    elif a > 0:
-        t = F32(a + 1)
-    else:
-        t = F32(a - 1)
-    return float(F32(math.atan(np.float64(F32(t / F32(w)))) * 180 / math.pi))
+    while True:
+        open_ = [i for i in range(n) if abs(a[i] - b[i]) > 1]
+        if not open_:
+            break
+        ds = list(a)
+        for i in open_:
+            if sa[i] > sb[i]:
+                ds[i] = _trunc_div3(5 * a[i] - 2 * b[i])
+            else:
+                ds[i] = _trunc_div3(5 * b[i] - 2 * a[i])
+        sc = score(ds)
+        for i in open_:
+            if sa[i] > sb[i]:
+                b[i], sb[i] = ds[i], sc[i]
+            else:
+                a[i], sa[i] = ds[i], sc[i]
+    deg = []
+    for ai, bi, sai, sbi in zip(a, b, sa, sb):
+        if sbi > sai:
+            ai = bi
+        t = F32(0) if ai == 0 else F32(ai + 1) if ai > 0 else F32(ai - 1)
+        deg.append(float(F32(math.atan(np.float64(F32(t / F32(w)))) * 180 / math.pi)))
+    return deg[0] if not lead else np.array(deg).reshape(lead)
 
 
 def deskew(arr: np.ndarray) -> tuple[np.ndarray, float]:

@@ -1,8 +1,10 @@
 """Pointwise pixel ops — transcriptions of the reference's scalar maps.
 
 Single-channel form: each function takes/returns a float32 (h, w)
-array; `apply_gray_channels` lifts any of them over an image dict's
-color channels (z=1..3) the way the C loops do.
+array; the elementwise maps, `contrast` and `binarize` also take a
+`(..., h, w)` page stack (with per-page parameters).
+`apply_gray_channels` lifts any of them over an image dict's color
+channels (z=1..3) the way the C loops do.
 
 Cites: contrast_image misc.c:106-151; divide misc.c:70-84; diff
 misc.c:272-286; patch misc.c:288-302; darker misc.c:180-194; quantize
@@ -29,30 +31,41 @@ def apply_gray_channels(img: dict, fn, *args, **kw) -> dict:
     return out
 
 
-def contrast(arr: np.ndarray, black: float, white: float) -> np.ndarray:
+def _per_page(v) -> np.ndarray:
+    """A scalar or per-page parameter as float32, broadcastable over
+    the trailing (h, w) axes of a stack."""
+    return np.asarray(v, dtype=F32)[..., None, None]
+
+
+def contrast(arr: np.ndarray, black, white) -> np.ndarray:
     """Linear stretch with clamps (misc.c:106-151).
 
     black == white -> hard binary threshold (misc.c:111-121);
-    white < black -> inverted ramp (misc.c:139-150).
+    white < black -> inverted ramp (misc.c:139-150). `black`/`white`
+    are scalars or per-page arrays over a stack's leading axes; each
+    page takes its own branch.
     """
     a = np.asarray(arr, dtype=F32)
-    black = F32(black)
-    white = F32(white)
-    if white == black:
-        return np.where(a <= black, F32(0), F32(255))
-    m = F32(np.float64(255.0) / (np.float64(white) - np.float64(black)))
-    q = F32(-m * black)
-    ramp = a * m + q
-    if black < white:
-        return np.where(a <= black, F32(0), np.where(a >= white, F32(255), ramp)).astype(F32)
-    return np.where(a >= black, F32(0), np.where(a <= white, F32(255), ramp)).astype(F32)
+    black = _per_page(black)
+    white = _per_page(white)
+    hard = np.where(a <= black, F32(0), F32(255))
+    eq = white == black
+    if eq.all():
+        return hard
+    with np.errstate(divide="ignore", invalid="ignore"):
+        m = (np.float64(255.0) / (white.astype(np.float64) - black)).astype(F32)
+        q = -m * black
+        ramp = a * m + q
+    up = np.where(a <= black, F32(0), np.where(a >= white, F32(255), ramp))
+    down = np.where(a >= black, F32(0), np.where(a <= white, F32(255), ramp))
+    return np.where(eq, hard, np.where(black < white, up, down)).astype(F32)
 
 
-def binarize(arr: np.ndarray, thr: float) -> np.ndarray:
-    """CLI `bin` (grafix.c:189-200): x*=255 if x<=1, then threshold."""
-    thr = F32(thr)
-    if thr <= 1:
-        thr = F32(thr * F32(255))
+def binarize(arr: np.ndarray, thr) -> np.ndarray:
+    """CLI `bin` (grafix.c:189-200): x*=255 if x<=1, then threshold.
+    `thr` is a scalar or one threshold per page of a stack."""
+    thr = np.asarray(thr, dtype=F32)
+    thr = np.where(thr <= 1, thr * F32(255), thr)
     return contrast(arr, thr, thr)
 
 

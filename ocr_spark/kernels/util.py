@@ -34,6 +34,13 @@ def c_round(x):
 c_roundf = c_round
 
 
+def split_pages(items: list, page: np.ndarray, n: int) -> list[list]:
+    """Cut a list ordered by page into n per-page lists (`page` holds
+    each item's page number)."""
+    cuts = np.cumsum(np.bincount(page, minlength=n)).tolist()
+    return [items[lo:hi] for lo, hi in zip([0] + cuts[:-1], cuts)]
+
+
 def as_f32(a) -> np.ndarray:
     return np.ascontiguousarray(np.asarray(a, dtype=np.float32))
 
